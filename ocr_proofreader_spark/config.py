@@ -11,10 +11,12 @@ class RunConfig:
     """Knobs for one proofreading run (SURVEY.md sections 3-4).
 
     Scale notes (100 TB / 10^12 docs): the hot path is shuffle-free
-    (mapInPandas per doc); ``nsalt`` + ``repartitionByRange`` only
-    rebalance input partitions; docs longer than ``chunk_threshold_spans``
-    take the chunked skew path (distributed word_freq + per-chunk
-    correction) instead of a single task.
+    (mapInPandas per doc); ``rebalance_partitions`` only adds a hash
+    repartition on doc_id when the input scan is narrower than the
+    session parallelism; docs longer than ``chunk_threshold_spans`` take
+    the chunked skew path (distributed word_freq, then span-parallel
+    correction after ``repartition(n, doc_id, offset)``) instead of a
+    single task.
     """
 
     run_id: str = "run-0"
@@ -25,7 +27,6 @@ class RunConfig:
     # 'default' entry); None = single-lexicon mode via lexicon_path
     lexicon_paths: dict[str, str] | None = None
     freq_k: int = 5                     # S11: book word freq >= K joins lexicon
-    nsalt: int = 8                      # S4 salting fan-out
     rebalance_partitions: int | None = None  # None -> leave input partitioning
     # Docs above this take the skew path.  Measured on local[32]: a
     # 2000-span book (~1 MB text) is cheaper inline in the shuffle-free
@@ -36,6 +37,4 @@ class RunConfig:
     # proofread() then skips the skew branch entirely instead of paying
     # its second input pass for a provably-empty union arm (r6).
     chunk_threshold_spans: int | None = 4096
-    chunk_spans: int = 64               # spans per chunk on the skew path
     num_buckets: int = 16               # resumability unit (S2/S16)
-    arrow_batch_docs: int = 1024        # spark.sql.execution.arrow.maxRecordsPerBatch

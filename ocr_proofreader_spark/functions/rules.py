@@ -449,6 +449,13 @@ class DocProofreader:
             return "".join(parts).split("\n")
         return text.split("\n")
 
+    def correct_span(self, text: str) -> str:
+        """R2 hyphen repair, then the token pass, over one text span:
+        span-local given the book's ``freq`` (rule R0), so the skew path
+        runs it on a giant book's spans in many tasks."""
+        return "\n".join(self.correct_lines(
+            self.repair_hyphenation(text.split("\n"))))
+
     # -- R5/R6 segmentation -----------------------------------------------------
 
     @staticmethod
@@ -460,15 +467,10 @@ class DocProofreader:
                 and UPPER_RE.search(stripped) is not None
                 and len(TOKEN_RE.findall(stripped)) <= 6)
 
-    def run(self, spans) -> tuple[list[tuple[str, str, str, int]], int]:
-        """Full pipeline for one doc -> (out span tuples, input span count).
-
-        ``spans``: sequence of dicts kind/text/media_ref/offset, any order.
-        Out tuples: (kind, text, media_ref, order)."""
-        spans = sorted(spans, key=lambda s: s["offset"])
-        if not self.freq:
-            self.count_freq(spans)
-
+    @staticmethod
+    def segment(spans) -> list[tuple[str, str, str, int]]:
+        """R5/R6 over one doc's corrected spans, given as (kind, text,
+        media_ref) in offset order -> (kind, text, media_ref, order)."""
         out: list[tuple[str, str, str, int]] = []
         para: list[str] = []
         deferred: list[str] = []
@@ -485,20 +487,17 @@ class DocProofreader:
                     emit("media", "", ref)
                 deferred.clear()
 
-        for sp in spans:
-            if sp["kind"] == "media":
+        for kind, text, media_ref in spans:
+            if kind == "media":
                 if para:
-                    deferred.append(sp["media_ref"] or "")
+                    deferred.append(media_ref or "")
                 else:
-                    emit("media", "", sp["media_ref"] or "")
+                    emit("media", "", media_ref or "")
                 continue
-            text = sp["text"] or ""
+            text = text or ""
             if not text.strip():
                 continue  # blank page: emits nothing, paragraph stays open
             lines = text.split("\n")
-            lines = self.repair_hyphenation(lines)
-            lines = self.correct_lines(lines)
-
             heading_buf: list[str] = []
             n = len(lines)
             stripped = [ln.strip() for ln in lines]
@@ -512,7 +511,7 @@ class DocProofreader:
                     continue
                 prev_blank = idx == 0 or not stripped[idx - 1]
                 next_blank = idx == n - 1 or not stripped[idx + 1]
-                if self.is_heading(s, prev_blank, next_blank):
+                if DocProofreader.is_heading(s, prev_blank, next_blank):
                     close_para()
                     heading_buf.append(s)
                 else:
@@ -526,4 +525,20 @@ class DocProofreader:
             # paragraph stays open across the span boundary (R6)
 
         close_para()
-        return out, len(spans)
+        return out
+
+    def run(self, spans) -> tuple[list[tuple[str, str, str, int]], int]:
+        """Full pipeline for one doc -> (out span tuples, input span count).
+
+        ``spans``: sequence of dicts kind/text/media_ref/offset, any order.
+        Out tuples: (kind, text, media_ref, order)."""
+        spans = sorted(spans, key=lambda s: s["offset"])
+        if not self.freq:
+            self.count_freq(spans)
+        corrected = []
+        for sp in spans:
+            text = sp["text"]
+            if sp["kind"] != "media" and text and text.strip():
+                text = self.correct_span(text)
+            corrected.append((sp["kind"], text, sp["media_ref"]))
+        return self.segment(corrected), len(spans)

@@ -131,8 +131,7 @@ def main(argv: list[str] | None = None, spark=None) -> None:
               "derived_sec": round(phase_a, 3),
               "docs_per_sec": round(n_docs / max(phase_b, 1e-9), 2),
               "shuffle_partitions":
-                  spark.conf.get("spark.sql.shuffle.partitions"),
-              "nsalt": cfg.nsalt}
+                  spark.conf.get("spark.sql.shuffle.partitions")}
     print(json.dumps(result))
     if args.bench_json:
         with open(args.bench_json, "w") as fh:

@@ -30,7 +30,9 @@ from pyspark.sql import types as T
 
 from ocr_proofreader_spark import lexicon as lexmod
 from ocr_proofreader_spark.config import RunConfig
-from ocr_proofreader_spark.functions.rules import (TOKEN_RE, DocProofreader)
+from ocr_proofreader_spark.functions.rules import DocProofreader
+from ocr_proofreader_spark.operators.word_freq import word_freq
+from ocr_proofreader_spark.partitioning import spread_input
 from ocr_proofreader_spark.schemas import DOCUMENTS_OUT_METRICS
 
 # chunked-path intermediate schemas
@@ -50,6 +52,11 @@ def _out_pdf(rows: list) -> pd.DataFrame:
                                        "corrections", "flagged"])
 
 
+def _span_dicts(out: list) -> list[dict]:
+    return [{"kind": k, "text": t, "media_ref": m, "order": o}
+            for k, t, m, o in out]
+
+
 def _make_fast_fn(lex_bc, freq_k: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -63,43 +70,24 @@ def _make_fast_fn(lex_bc, freq_k: int):
                     lex_bc, langs.iloc[i] if langs is not None else None)
                 pr = DocProofreader(idx, freq_k=freq_k)
                 out, n_in = pr.run(spans)
-                rows.append((doc_id,
-                             [{"kind": k, "text": t, "media_ref": m,
-                               "order": o} for k, t, m, o in out],
-                             n_in, pr.corrections, pr.flagged))
+                rows.append((doc_id, _span_dicts(out), n_in,
+                             pr.corrections, pr.flagged))
             yield _out_pdf(rows)
     return fn
 
 
 def rebalance(docs: DataFrame, cfg: RunConfig) -> DataFrame:
-    """S4 placement: hash repartition by doc_id spreads hot input splits.
+    """S4 placement: hash repartition by doc_id into
+    ``cfg.rebalance_partitions`` through the one placement guard
+    (:func:`partitioning.spread_input`), so it fires only for inputs
+    narrower than the session parallelism; ``None`` leaves the input.
 
-    Hash partitioning decorrelates doc_id ranges from input file layout
-    (one hot file cannot pin a range of books to one task) exactly like
-    the salted repartitionByRange it replaces, but without the range
-    variant's boundary-sampling pass — RangePartitioning runs a separate
-    sampling job that re-executes the whole child plan (a second full
-    scan of the spans payload) before the real exchange, measured ~1 s
-    of the bench's proofread_synth (r6; guide section 2.4: remove
-    shuffles/passes outright).
-
-    The exchange fires only when the input is NARROWER than the session
-    parallelism: a scan that already yields at least one split per core
-    is already spread (each task's share is bounded by maxPartitionBytes
-    / one row group), and re-shuffling the whole spans payload through
-    disk just to hit the knob's exact partition count buys nothing —
-    measured another ~1 s of proofread_synth (guide section 2.4; the
-    guard is the same scale-adaptive shape as partitioning.spread_input:
-    at 100 TB the scan has thousands of splits and the knob only fires
-    for narrow or single-row-group inputs, where it is needed)."""
+    Hash, not range, partitioning: a range partitioning's
+    boundary-sampling job re-executes the whole child plan (a second
+    full scan of the spans payload) before the real exchange (r6)."""
     if not cfg.rebalance_partitions:
         return docs
-    if not docs.isStreaming:
-        sc = docs.sparkSession.sparkContext
-        if docs.rdd.getNumPartitions() >= min(cfg.rebalance_partitions,
-                                              sc.defaultParallelism):
-            return docs
-    return docs.repartition(cfg.rebalance_partitions, "doc_id")
+    return spread_input(docs, "doc_id", partitions=cfg.rebalance_partitions)
 
 
 def proofread_fast(docs: DataFrame, lex_bc, cfg: RunConfig) -> DataFrame:
@@ -113,16 +101,6 @@ def proofread_fast(docs: DataFrame, lex_bc, cfg: RunConfig) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # skew path
-
-
-def tokens_udf():
-    """R1 tokenizer as a scalar pandas UDF: text -> array of lowercase
-    tokens (raw, pre-correction — matches the frozen word_freq spec)."""
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def toks(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: [w.lower() for w in TOKEN_RE.findall(t)]
-                     if t else [])
-    return toks
 
 
 def _make_correct_fn(lex_bc, freq_k: int):
@@ -145,11 +123,8 @@ def _make_correct_fn(lex_bc, freq_k: int):
                     pr = DocProofreader(idx, freq_k=freq_k, freq=freq)
                     readers[row.doc_id] = pr
                 c0, f0 = pr.corrections, pr.flagged
-                lines = row.text.split("\n")
-                lines = pr.repair_hyphenation(lines)
-                lines = pr.correct_lines(lines)
                 out_rows.append((row.doc_id, row.offset, "text",
-                                 "\n".join(lines), row.media_ref,
+                                 pr.correct_span(row.text), row.media_ref,
                                  pr.corrections - c0, pr.flagged - f0))
             yield pd.DataFrame(out_rows, columns=[
                 "doc_id", "offset", "kind", "text", "media_ref",
@@ -162,46 +137,15 @@ def _make_segment_fn():
 
     Runs as grouped applyInPandas: cheap linear string work, no spell
     scoring — acceptable as one task even for a giant book."""
-    from ocr_proofreader_spark.functions.rules import DocProofreader as _DP
-
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("offset")
-        doc_id = pdf["doc_id"].iloc[0]
-        # reuse the engine segmenter with corrections disabled: feed spans
-        # through run() with a proofreader whose lexicon marks every token
-        # known (empty corrections happen because text is already corrected)
-        seg = _SegmentOnly()
-        spans = [{"kind": k, "text": t, "media_ref": m, "offset": o}
-                 for k, t, m, o in zip(pdf["kind"], pdf["text"],
-                                       pdf["media_ref"], pdf["offset"])]
-        out, _ = seg.run(spans)
-        return _out_pdf([(doc_id,
-                          [{"kind": k, "text": t, "media_ref": m, "order": o}
-                           for k, t, m, o in out],
-                          len(spans),
+        out = DocProofreader.segment(
+            zip(pdf["kind"], pdf["text"], pdf["media_ref"]))
+        return _out_pdf([(pdf["doc_id"].iloc[0], _span_dicts(out),
+                          len(pdf),
                           int(pdf["corrections"].sum()),
                           int(pdf["flagged"].sum()))])
     return fn
-
-
-class _SegmentOnly(DocProofreader):
-    """Segmentation-only proofreader: text is already corrected, so the
-    correction hooks become identity functions."""
-
-    def __init__(self):
-        super().__init__(lex=None, freq_k=1, freq={})
-
-    def repair_hyphenation(self, lines):
-        return lines
-
-    def correct_line(self, line):
-        return line
-
-    def correct_lines(self, lines):
-        return lines
-
-    def count_freq(self, spans):
-        self.freq = {"": 1}  # non-empty: run() skips recount
 
 
 def proofread_chunked(spark: SparkSession, docs: DataFrame, lex_bc,
@@ -232,15 +176,9 @@ def chunked_corrected_spans(spark: SparkSession, docs: DataFrame, lex_bc,
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"))
 
-    # distributed per-book word frequencies over RAW text (S10 semantics),
-    # tokenized JVM-side (whole-stage codegen, zero Python)
-    from ocr_proofreader_spark.functions.sql_exprs import R1_TOKENS_LOWER
-    freq = (spans.filter(F.col("kind") == "text")
-            .select("doc_id",
-                    F.explode(F.expr(R1_TOKENS_LOWER.format(col="text")))
-                    .alias("word"))
-            .groupBy("doc_id", "word").agg(F.count("*").alias("freq")))
-    freq_maps = (freq.groupBy("doc_id")
+    # distributed per-book word frequencies over RAW text (S10
+    # semantics): the derived word_freq table, tokenized JVM-side
+    freq_maps = (word_freq(docs).groupBy("doc_id")
                  .agg(F.collect_list("word").alias("freq_words"),
                       F.collect_list("freq").alias("freq_counts")))
 
@@ -280,7 +218,6 @@ def proofread(spark: SparkSession, docs: DataFrame,
         return proofread_fast(docs, lex_bc, cfg)
     size_col = (F.col("n_spans") if "n_spans" in docs.columns
                 else F.size("spans"))
-    small = docs.filter(size_col <= cfg.chunk_threshold_spans)
     big = docs.filter(size_col > cfg.chunk_threshold_spans)
     if "n_spans" in docs.columns and not docs.isStreaming \
             and big.isEmpty():
@@ -291,8 +228,10 @@ def proofread(spark: SparkSession, docs: DataFrame,
         # scan with LIMIT 1 — row groups whose max(n_spans) is under the
         # threshold are skipped without decoding a single spans cell —
         # so probing costs ~nothing at any scale, and is only attempted
-        # when the column (and therefore the pushdown) exists.
-        return proofread_fast(small, lex_bc, cfg)
-    out_small = proofread_fast(small, lex_bc, cfg)
-    out_big = proofread_chunked(spark, big, lex_bc, cfg)
-    return out_small.unionByName(out_big)
+        # when the column (and therefore the pushdown) exists.  The fast
+        # path then reads the UNFILTERED frame: a stale probe (a giant
+        # doc landing after it ran) costs speed, never rows.
+        return proofread_fast(docs, lex_bc, cfg)
+    small = docs.filter(size_col <= cfg.chunk_threshold_spans)
+    return proofread_fast(small, lex_bc, cfg).unionByName(
+        proofread_chunked(spark, big, lex_bc, cfg))

@@ -6,12 +6,13 @@ arrives as one small file (or one giant row group) produces ONE scan
 task, and every narrow operator stacked on top of it — token explodes,
 per-row md5s, Arrow-batched Python passes — serializes on one core no
 matter how many the session has.  ``spread_input`` hash-repartitions the
-frame up to the session's default parallelism, but only when the scan is
-actually narrower than that: at production scale the input has thousands
-of splits, the guard is false, and no shuffle is added.  The keys are
-the frame's own first column when it is a stable id (callers pass it
-explicitly) so placement is deterministic under task retry (guide
-section 2.5 on rand()-derived keys; SPARK-38388).
+frame, but only when the scan is actually narrower than the session's
+default parallelism: at production scale the input has thousands of
+splits, the guard is false, and no shuffle is added.  The keys are the
+frame's own stable id (callers pass it explicitly) so placement is
+deterministic under task retry (guide section 2.5 on rand()-derived
+keys; SPARK-38388).  This is the engine's one placement guard; the
+flagship's S4 ``operators.proofread.rebalance`` delegates to it.
 """
 
 from __future__ import annotations
@@ -19,14 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_input(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition ``df`` by ``keys`` to the session parallelism iff the
-    current plan has fewer partitions than cores; no-op otherwise (and
-    for streaming frames, which cannot be inspected this way)."""
+def spread_input(df: DataFrame, *keys: str,
+                 partitions: int | None = None) -> DataFrame:
+    """Repartition ``df`` by ``keys`` into ``partitions`` (default: the
+    session parallelism) iff the plan has fewer than ``min(partitions,
+    parallelism)`` splits; no-op otherwise, and for streaming frames,
+    which cannot be inspected this way."""
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    target = partitions or parallelism
+    if df.rdd.getNumPartitions() >= min(target, parallelism):
         return df
     return df.repartition(target, *keys) if keys else df.repartition(target)

@@ -57,7 +57,9 @@ class SyntheticBooksReader(DataSourceReader):
 
     def partitions(self):
         if self.n_docs == 0:
-            return []
+            # one empty split: PySpark turns an empty list into [None],
+            # which read() cannot take
+            return [_Range(0, 0, self.seed)]
         per = -(-self.n_docs // self.n_parts)        # ceil split
         return [_Range(lo, min(lo + per, self.n_docs), self.seed)
                 for lo in range(0, self.n_docs, per)]

@@ -3,7 +3,10 @@
 Submitted via spark-submit --py-files dist/engine.zip at two parallelism
 levels; prints JSON with proofread wall time, docs/sec, and an
 order-insensitive output digest (bit_xor of per-doc xxhash64) proving the two
-runs produced identical bytes (determinism check, SURVEY.md section 6)."""
+runs produced identical bytes (determinism check, SURVEY.md section 6),
+plus the session confs in effect, read back from the session that ran.
+The session comes from the production job's ``build_session``, so the
+scaling numbers measure the system ``proofread_job`` runs."""
 
 from __future__ import annotations
 
@@ -11,7 +14,6 @@ import argparse
 import json
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -23,19 +25,13 @@ def main() -> None:
     args = ap.parse_args()
 
     from ocr_proofreader_spark.config import RunConfig
+    from ocr_proofreader_spark.jobs.proofread_job import build_session
     from ocr_proofreader_spark.lexicon import (broadcast_lexicon,
                                                load_base_lexicon)
     from ocr_proofreader_spark.operators.proofread import proofread
 
-    spark = (SparkSession.builder
-             .appName(f"scaling-bench-{args.cpus}")
-             .config("spark.sql.shuffle.partitions", str(args.cpus))
-             .config("spark.sql.files.maxPartitionBytes", "16m")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = build_session(f"scaling-bench-{args.cpus}",
+                          shuffle_partitions=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(args.corpus)
@@ -66,9 +62,13 @@ def main() -> None:
               "wall_sec": round(wall, 3),
               "docs_per_sec": round(digest_row["docs"] / wall, 1),
               "digest": int(digest_row["digest"]),
-              "shuffle_partitions": args.cpus,
-              "nsalt": cfg.nsalt,
-              "arrow_batch": 1024}
+              "shuffle_partitions": int(
+                  spark.conf.get("spark.sql.shuffle.partitions")),
+              "max_partition_bytes": spark.conf.get(
+                  "spark.sql.files.maxPartitionBytes"),
+              "arrow_batch": int(spark.conf.get(
+                  "spark.sql.execution.arrow.maxRecordsPerBatch")),
+              "rebalance_partitions": cfg.rebalance_partitions}
     print(json.dumps(result))
     with open(args.out_json, "w") as fh:
         json.dump(result, fh)

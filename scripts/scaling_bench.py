@@ -34,6 +34,10 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+# session confs and placement each bench_job run reports it ran with
+KNOBS = ("shuffle_partitions", "max_partition_bytes", "arrow_batch",
+         "rebalance_partitions")
+
 PAIRS = [  # (n_cpus, 4n_cpus, corpus_docs)
     # both pairs sized so every wall stays >> host noise after the R4
     # prefilter speedup (walls under ~40s proved noise-dominated)
@@ -100,6 +104,7 @@ def bench_pair(n: int, n4: int, corpus: str, zip_path: str, runs: int,
     Efficiency is computed from the per-level MIN wall (the least-noise
     estimate; external load only ever adds time), medians reported too."""
     walls = {n: [], n4: []}
+    knobs = {}
     digests = set()
     n_docs = None
     for r in range(runs):
@@ -108,6 +113,7 @@ def bench_pair(n: int, n4: int, corpus: str, zip_path: str, runs: int,
                                os.path.join(bench_dir,
                                             f"run_{cpus}_{r}.json"))
             walls[cpus].append(res["wall_sec"])
+            knobs[cpus] = {k: res[k] for k in KNOBS}
             digests.add(res["digest"])
             n_docs = res["docs"]
             print(f"  local[{cpus}] run {r}: {res['wall_sec']}s "
@@ -122,7 +128,8 @@ def bench_pair(n: int, n4: int, corpus: str, zip_path: str, runs: int,
                      "wall_sec_median": statistics.median(walls[cpus]),
                      "runs": walls[cpus],
                      "docs_per_sec": round(n_docs / best, 1),
-                     "digest": digest}
+                     "digest": digest,
+                     "knobs": knobs[cpus]}
     out["efficiency"] = round(
         (out[n4]["docs_per_sec"] / out[n]["docs_per_sec"]) / (n4 / n), 3)
     return out
@@ -161,6 +168,27 @@ def _measure_pairs(pairs, levels, bench_dir, runs, results, calib, bw):
         r = bench_pair(n, n4, corpora[docs], zip_path, runs, bench_dir)
         r["docs"] = docs
         results[f"local{n}_vs_local{n4}"] = r
+
+
+def knobs_line(results: dict, pairs) -> str:
+    """The BASELINE.md knob line, built from the confs each level's runs
+    read back from their own session (not from what the code intends)."""
+    levels = []
+    for n, n4, _ in pairs:
+        r = results[f"local{n}_vs_local{n4}"]
+        for c in (n, n4):
+            k = r[c].get("knobs")
+            if k is None:
+                levels.append(f"local[{c}]: not recorded by this run")
+                continue
+            levels.append(
+                f"local[{c}]: shuffle.partitions={k['shuffle_partitions']}"
+                f", maxPartitionBytes={k['max_partition_bytes']}"
+                f", arrow maxRecordsPerBatch={k['arrow_batch']}"
+                f", hash repartition({k['rebalance_partitions']}, doc_id)"
+                " only when the scan has fewer splits than cores")
+    return "Knobs (read back from each run's session): " + \
+        "; ".join(levels) + "."
 
 
 def main() -> None:
@@ -322,9 +350,7 @@ def main() -> None:
         "stage exists in the plan: the fast path is a single "
         "shuffle-free mapInPandas stage (see tests/test_plans.py).",
         "",
-        "Knobs: spark.sql.shuffle.partitions = cpus; "
-        "repartitionByRange(salt, doc_id) into 2x cpus ranges (NSALT=8); "
-        "arrow maxRecordsPerBatch=1024; maxPartitionBytes=16m; AQE on.",
+        knobs_line(results, pairs),
     ]
     with open(os.path.join(bench_dir, "BASELINE.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")

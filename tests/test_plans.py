@@ -23,14 +23,33 @@ def test_rebalance_adds_exactly_one_hash_exchange(spark, corpus_small,
     """r6: hash repartition by doc_id, NOT repartitionByRange — range
     partitioning runs a boundary-sampling job that re-executes the
     whole child plan (a second full scan of the spans payload) before
-    the real exchange."""
+    the real exchange.  Both callers of the one placement guard
+    (``partitioning.spread_input``) are pinned on both sides of it: a
+    narrow input gets exactly one hash exchange, an input already split
+    to the session parallelism gets none added."""
+    from ocr_proofreader_spark.partitioning import spread_input
+
     docs = spark.read.parquet(f"{corpus_small}/documents.parquet")
     lex_bc = broadcast_lexicon(spark, base_lexicon)
-    out = proofread_fast(docs, lex_bc, RunConfig(rebalance_partitions=8))
-    plan = P.physical_plan(out)
-    assert P.count_exchanges(out) == 1
-    assert "hashpartitioning(doc_id" in plan
-    assert "rangepartitioning" not in plan
+    parallelism = spark.sparkContext.defaultParallelism
+    callers = {
+        "proofread_fast": lambda df: proofread_fast(
+            df, lex_bc, RunConfig(rebalance_partitions=8)),
+        "spread_input": lambda df: spread_input(df, "doc_id"),
+    }
+    narrow = docs
+    assert narrow.rdd.getNumPartitions() < parallelism
+    wide = docs.repartition(2 * parallelism)   # round-robin, no doc_id
+    for name, place in callers.items():
+        out = place(narrow)
+        plan = P.physical_plan(out)
+        assert P.count_exchanges(out) == 1, name
+        assert "hashpartitioning(doc_id" in plan, name
+        assert "rangepartitioning" not in plan, name
+
+        out = place(wide)
+        assert P.count_exchanges(out) == P.count_exchanges(wide), name
+        assert "hashpartitioning(doc_id" not in P.physical_plan(out), name
 
 
 def test_word_freq_has_mapside_combine_single_shuffle(spark, corpus_small):

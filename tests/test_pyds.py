@@ -28,6 +28,9 @@ def test_synthetic_books_datasource(spark):
                  .option("n_docs", 150).option("partitions", 3).load())
     d3 = _digest(generate_corpus(spark, 150, partitions=11))
     assert d1 == d2 == d3
+    # n_docs=0 is a valid empty scan, not a planning-time crash
+    assert (spark.read.format("synthetic_books")
+            .option("n_docs", 0).load().count()) == 0
     # the connector output feeds the pipeline like any other scan
     from ocr_proofreader_spark.config import RunConfig
     from ocr_proofreader_spark.lexicon import (broadcast_lexicon,

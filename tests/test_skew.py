@@ -25,7 +25,7 @@ def _giant_doc(n_repeats: int = 120):
 
 def test_giant_doc_routes_chunked_and_matches_oracle(spark, base_lexicon):
     spans = _giant_doc()
-    cfg = RunConfig(chunk_threshold_spans=4096, chunk_spans=64)
+    cfg = RunConfig(chunk_threshold_spans=4096)
     assert len(spans) > cfg.chunk_threshold_spans
 
     docs = spark.createDataFrame([("giant-1", spans)], DOCUMENTS_IN)
@@ -65,7 +65,7 @@ def test_giant_book_correction_spreads_across_tasks(spark, base_lexicon):
     from ocr_proofreader_spark.operators.proofread import (
         chunked_corrected_spans, proofread_chunked)
 
-    cfg = RunConfig(chunk_threshold_spans=4096, chunk_spans=64)
+    cfg = RunConfig(chunk_threshold_spans=4096)
     spans = _giant_doc(n_repeats=820)          # ~10x the 4096 threshold
     assert len(spans) >= 10 * cfg.chunk_threshold_spans
     docs = spark.createDataFrame([("giant-10x", spans)], DOCUMENTS_IN)
@@ -137,6 +137,32 @@ def test_nspans_probe_drops_empty_skew_arm(spark, corpus_small,
     b = sorted(proofread(spark, docs, RunConfig(), lex_bc).collect(),
                key=key)
     assert [r.asDict() for r in a] == [r.asDict() for r in b]
+
+
+def test_stale_probe_keeps_every_doc(spark, base_lexicon, monkeypatch):
+    """A stale emptiness probe (it reports no giant doc, yet one is
+    there) may cost speed but never rows: the fast path then reads the
+    unfiltered input, so every input doc comes out, proofread as the
+    oracle proofreads it."""
+    rows = [GEN.gen_doc(i)[:2] for i in range(4)]
+    cfg = RunConfig(chunk_threshold_spans=max(len(s) for _, s in rows))
+    rows.append(("giant-1", _giant_doc(n_repeats=1)))
+    docs = spark.createDataFrame(rows, DOCUMENTS_IN).withColumn(
+        "n_spans", F.size("spans"))
+    assert docs.filter(F.col("n_spans")
+                       > cfg.chunk_threshold_spans).count() == 1
+
+    monkeypatch.setattr(type(docs), "isEmpty", lambda self: True)
+    lex_bc = broadcast_lexicon(spark, base_lexicon)
+    out = {r["doc_id"]: r["spans"]
+           for r in proofread(spark, docs, cfg, lex_bc).collect()}
+    assert sorted(out) == sorted(doc_id for doc_id, _ in rows)
+    for doc_id, spans in rows:
+        exp, _ = proofread_document(spans, base_lexicon, GEN.freq_k)
+        assert [(s["kind"], s["text"], s["media_ref"], s["order"])
+                for s in out[doc_id]] == [
+            (s["kind"], s["text"], s["media_ref"], s["order"])
+            for s in exp], doc_id
 
 
 def test_aqe_splits_hot_key_join(spark):

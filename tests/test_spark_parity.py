@@ -53,7 +53,7 @@ def test_chunked_path_matches_fast_path(spark, corpus_small, base_lexicon):
     lex_bc = broadcast_lexicon(spark, base_lexicon)
     fast = proofread(spark, docs, RunConfig(), lex_bc)
     forced = proofread(spark, docs,
-                       RunConfig(chunk_threshold_spans=0, chunk_spans=4),
+                       RunConfig(chunk_threshold_spans=0),
                        lex_bc)
     a = _spans_tuples(fast.collect())
     b = _spans_tuples(forced.collect())
