@@ -13,9 +13,7 @@ holds the magic-byte dispatch for all of them):
   all real-world web images that aren't JPEG use.
 
 That is enough to make the decode stage REAL end-to-end: payload bytes
-in, pixel dimensions + features out, with the deterministic md5 fake
-(`decode_media(fake_decode=True)`) kept only for refs that carry no
-payload.  A production deployment swaps :func:`sniff_and_decode` for a
+in, pixel dimensions + features out.  A production deployment swaps :func:`sniff_and_decode` for a
 full decoder (Pillow/ffmpeg) without touching the Spark plumbing — the
 UDF signature, schema and batch shape are identical.
 """

@@ -39,7 +39,12 @@ def curate(spark: SparkSession, docs: DataFrame,
     below this form the decontamination benchmark set (a real
     deployment passes the eval-suite table instead).  The returned
     frame carries (doc_id, lang, text) with text LINE-DEDUPED and all
-    filters applied; metrics counts survivors per stage."""
+    filters applied; metrics counts survivors per stage.
+
+    The returned frame is persisted (its survivor count and the
+    caller's write are two actions over it) and every intermediate
+    stage frame is already unpersisted: the caller owns the returned
+    frame and should ``unpersist()`` it after its last action."""
     from ocr_proofreader_spark.operators import training_ops as ops
 
     metrics = {"input_docs": docs.count()}
@@ -96,8 +101,9 @@ def curate(spark: SparkSession, docs: DataFrame,
     # 5. deterministic stratified sampling (per-language mix rates)
     sampled = (clean.join(
         ops.stratified_sample(clean).filter(F.col("kept"))
-        .select("doc_id"), "doc_id", "left_semi"))
+        .select("doc_id"), "doc_id", "left_semi")).persist()
     metrics["after_stratified_sample"] = sampled.count()
+    clean.unpersist()
     return sampled, metrics
 
 
@@ -115,6 +121,7 @@ def main() -> None:
     docs = spark.read.parquet(args.input)
     curated, metrics = curate(spark, docs)
     curated.write.mode("overwrite").parquet(args.output)
+    curated.unpersist()
     metrics["output_docs"] = spark.read.parquet(args.output).count()
     line = json.dumps(metrics)
     print(line)

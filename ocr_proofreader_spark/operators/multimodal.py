@@ -1,13 +1,12 @@
 """Multimodal column plumbing: media spans as opaque references/binary with
-typed metadata, decode/feature-extract as Arrow-batched UDF stages.
+typed metadata, decode/feature-extract as an Arrow-batched UDF stage.
 
-All three modalities have REAL pure-Python codec paths over binary
-payload columns — images (PPM/PGM/BMP/PNG/baseline JPEG via
-``decode_media_bytes``), audio (RIFF/WAV PCM via
-``decode_audio_bytes``), video (MJPEG-in-AVI via
-``sample_frames_real``) — each with per-row poison isolation.  The
-md5-derived fakes (``decode_media``/``sample_frames``) remain for
-payload-less refs and as the SQL-expressible twins of the plumbing."""
+Scanned books carry page images only, so there is one modality and one
+REAL pure-Python codec path over a binary payload column:
+PPM/PGM/BMP/PNG/baseline JPEG/GIF via ``decode_media_bytes``, with
+per-row poison isolation.  ``synth_payload`` stands in for real scan
+bytes with md5-derived solid images, which keeps the decode path
+SQL-expressible for the DuckDB twin."""
 
 from __future__ import annotations
 
@@ -43,39 +42,6 @@ def media_inventory(docs_spans: DataFrame) -> DataFrame:
                     .cast("int").alias("page")))
 
 
-def decode_media(media: DataFrame, feature_dim: int = 8,
-                 fake_decode: bool = True) -> DataFrame:
-    """Decode/feature-extract stage over media refs.
-
-    Real deployments read the binary payload and decode; this sandbox has
-    no codecs, so ``fake_decode`` derives deterministic pixel metadata and
-    features from the ref's md5 — schema, batching and partitioning are
-    identical to the real path."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake_decode:
-                raise NotImplementedError(
-                    "decode_media(fake_decode=False) has no payload to "
-                    "read; use decode_media_bytes over a binary payload "
-                    "column (real PPM/PGM/BMP/PNG/JPEG codecs) instead")
-            rows = []
-            for doc_id, ref, page in zip(pdf["doc_id"], pdf["media_ref"],
-                                         pdf["page"]):
-                h = hashlib.md5(ref.encode()).digest()
-                width = 600 + h[0] % 200
-                height = 800 + h[1] % 200
-                # divide in float64, then narrow — the same double-round
-                # the SQL oracle's CAST(x/255.0 AS FLOAT) performs
-                feats = (np.frombuffer(h[:feature_dim], dtype=np.uint8)
-                         .astype(np.float64) / 255.0).astype(np.float32)
-                rows.append((doc_id, ref, page, width, height,
-                             feats.tolist()))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "media_ref", "page", "width", "height",
-                "features"])
-    return media.mapInPandas(fn, MEDIA_META)
-
-
 MEDIA_BYTES_META = T.StructType(MEDIA_META.fields + [
     T.StructField("error", T.StringType(), True),
 ])
@@ -84,9 +50,9 @@ MEDIA_BYTES_META = T.StructType(MEDIA_META.fields + [
 def decode_media_bytes(media: DataFrame, feature_dim: int = 8,
                        on_error: str = "null") -> DataFrame:
     """REAL decode stage over a ``payload`` binary column: pure-Python
-    PPM/PGM/BMP codecs (functions/codecs.py) parse pixels and emit the
-    same (width, height, features) schema as :func:`decode_media`, plus
-    an ``error`` column.
+    PPM/PGM/BMP/PNG/JPEG/GIF codecs (functions/codecs.py and siblings)
+    parse pixels and emit (width, height, features) per ref, plus an
+    ``error`` column.
 
     ``on_error='null'`` (default) emits a null-dims row with the codec
     error message instead of failing the task — at corpus scale corrupt
@@ -173,233 +139,3 @@ def synth_payload(media: DataFrame) -> DataFrame:
         T.StructField("payload", T.BinaryType(), False),
     ])
     return media.mapInPandas(fn, schema)
-
-
-RESIZED_META = T.StructType(MEDIA_META.fields + [
-    T.StructField("out_width", T.IntegerType(), False),
-    T.StructField("out_height", T.IntegerType(), False),
-    T.StructField("scale", T.FloatType(), False),
-])
-
-
-def resize_media(decoded: DataFrame, max_side: int = 512) -> DataFrame:
-    """Resize stage over decoded media: scale every image so its longer
-    side is ``max_side``, preserving aspect ratio.
-
-    The geometry (scale factor, output dims) is computed JVM-side with
-    built-in expressions — only a real pixel resample would need the
-    binary payload, and that part belongs to the same stubbed decoder.
-    Row count and partitioning are unchanged, so this composes with
-    ``decode_media`` without a shuffle."""
-    scale = F.lit(float(max_side)) / F.greatest("width", "height")
-    return decoded.select(
-        "*",
-        F.ceil(F.col("width") * scale).cast("int").alias("out_width"),
-        F.ceil(F.col("height") * scale).cast("int").alias("out_height"),
-        scale.cast("float").alias("scale"))
-
-
-FRAME_META = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("media_ref", T.StringType(), False),
-    T.StructField("frame_idx", T.IntegerType(), False),
-    T.StructField("t_offset_sec", T.FloatType(), False),
-    T.StructField("frame_features", T.ArrayType(T.FloatType()), True),
-])
-
-
-def sample_frames(media: DataFrame, n_frames: int = 4,
-                  fake_decode: bool = True) -> DataFrame:
-    """Frame-sampling stage for video-like media: emit ``n_frames``
-    evenly spaced frame rows per media ref (a 1->N mapInPandas
-    expansion with bounded output batches).
-
-    Without codecs the clip duration and per-frame features are derived
-    deterministically from the ref's md5; the real decoder slots into
-    the same iterator (read binary -> seek -> decode frame) with
-    identical schema and batch shape."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake_decode:
-                raise NotImplementedError(
-                    "sample_frames(fake_decode=False) has no payload to "
-                    "read; use sample_frames_real over an MJPEG-AVI "
-                    "binary payload column (real codec) instead")
-            rows = []
-            for doc_id, ref in zip(pdf["doc_id"], pdf["media_ref"]):
-                h = hashlib.md5(ref.encode()).digest()
-                duration = 1.0 + h[2]                 # 1..256 "seconds"
-                for i in range(n_frames):
-                    t = duration * i / n_frames
-                    fh = hashlib.md5(f"{ref}#{i}".encode()).digest()
-                    feats = (np.frombuffer(fh[:8], dtype=np.uint8)
-                             .astype(np.float64) / 255.0).astype(np.float32)
-                    rows.append((doc_id, ref, i, float(t), feats.tolist()))
-                if len(rows) >= 4096:                 # bound output batch
-                    yield pd.DataFrame(rows, columns=[
-                        f.name for f in FRAME_META])
-                    rows = []
-            if rows:
-                yield pd.DataFrame(rows,
-                                   columns=[f.name for f in FRAME_META])
-    return media.mapInPandas(fn, FRAME_META)
-
-
-AUDIO_META = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("media_ref", T.StringType(), False),
-    T.StructField("sample_rate", T.IntegerType(), True),
-    T.StructField("n_samples", T.LongType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-    T.StructField("features", T.ArrayType(T.FloatType()), True),
-    T.StructField("error", T.StringType(), True),
-])
-
-
-def synth_audio_payload(media: DataFrame) -> DataFrame:
-    """media + a deterministic WAV ``payload``: a constant-amplitude
-    8-bit PCM mono clip whose level/length derive from the ref's md5
-    (amplitude byte b2, n_samples 4000 + b1*16, rate 8000).  Constant
-    signals make the decoded band features EXACTLY (b2-128)/128 (see
-    audio_band_features), so the real audio decode path is bit-exactly
-    oracle-checkable the same way the solid-color image legs are."""
-    from ocr_proofreader_spark.functions.audio import encode_wav
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for ref in pdf["media_ref"]:
-                h = hashlib.md5(ref.encode()).digest()
-                n = 4000 + h[1] * 16
-                amp = (h[2] - 128) / 128.0
-                payloads.append(encode_wav(
-                    np.full((n, 1), amp, dtype=np.float64), rate=8000))
-            out = pdf[["doc_id", "media_ref", "page"]].copy()
-            out["payload"] = payloads
-            yield out
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("page", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-    return media.mapInPandas(fn, schema)
-
-
-def decode_audio_bytes(media: DataFrame, feature_dim: int = 8,
-                       on_error: str = "null") -> DataFrame:
-    """REAL audio decode stage over a WAV ``payload`` binary column:
-    RIFF/PCM parsing (functions/audio.py) emits sample-rate / length /
-    duration metadata plus temporal band features; corrupt payloads
-    isolate to error rows exactly like the image decode stage
-    (``on_error='fail'`` raises for tests)."""
-    from ocr_proofreader_spark.functions.audio import (audio_band_features,
-                                                       decode_wav)
-    from ocr_proofreader_spark.functions.codecs import CodecError
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, payload in zip(
-                    pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                try:
-                    rate, samples = decode_wav(
-                        bytes(payload) if payload is not None else b"")
-                    feats = audio_band_features(samples, feature_dim)
-                    n = len(samples)
-                    rows.append((doc_id, ref, rate, n,
-                                 1000 * n // rate, feats.tolist(), None))
-                except (CodecError, ValueError, struct.error,
-                        IndexError, ZeroDivisionError) as e:
-                    if on_error == "fail":
-                        raise
-                    rows.append((doc_id, ref, None, None, None, None,
-                                 str(e)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "media_ref", "sample_rate", "n_samples",
-                "duration_ms", "features", "error"])
-    return (media.select("doc_id", "media_ref", "payload")
-            .mapInPandas(fn, AUDIO_META))
-
-
-FRAME_REAL_META = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("media_ref", T.StringType(), False),
-    T.StructField("frame_idx", T.IntegerType(), True),
-    T.StructField("t_offset_ms", T.LongType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("features", T.ArrayType(T.FloatType()), True),
-    T.StructField("error", T.StringType(), True),
-])
-
-
-def synth_video_payload(media: DataFrame) -> DataFrame:
-    """media + a deterministic MJPEG-AVI ``payload``: 6 + b4%6 solid
-    gray 12x16 frames at 25 fps, frame i's level (b2 + 17*i) % 256 —
-    solid JPEG frames decode bit-exactly (all-ones quant), so every
-    sampled-frame field is md5-derivable by the DuckDB twin."""
-    from ocr_proofreader_spark.functions.video import encode_avi_mjpeg
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for ref in pdf["media_ref"]:
-                h = hashlib.md5(ref.encode()).digest()
-                total = 6 + h[4] % 6
-                frames = [np.full((16, 12, 1), (h[2] + 17 * i) % 256,
-                                  dtype=np.uint8) for i in range(total)]
-                payloads.append(encode_avi_mjpeg(frames,
-                                                 usec_per_frame=40000))
-            out = pdf[["doc_id", "media_ref", "page"]].copy()
-            out["payload"] = payloads
-            yield out
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("media_ref", T.StringType(), False),
-        T.StructField("page", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), False),
-    ])
-    return media.mapInPandas(fn, schema)
-
-
-def sample_frames_real(media: DataFrame, n_frames: int = 4,
-                       feature_dim: int = 8,
-                       on_error: str = "null") -> DataFrame:
-    """REAL video frame sampling over an MJPEG-AVI ``payload`` column:
-    container parse (functions/video.py), evenly spaced frame
-    selection, and baseline-JPEG decode of ONLY the sampled frames —
-    the real-codec sibling of the md5-fake :func:`sample_frames`, with
-    the same 1->N mapInPandas expansion and poison-row isolation."""
-    from ocr_proofreader_spark.functions.codecs import (CodecError,
-                                                        band_features)
-    from ocr_proofreader_spark.functions.video import sample_frame_pixels
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_REAL_META]
-        for pdf in batches:
-            rows = []
-            for doc_id, ref, payload in zip(
-                    pdf["doc_id"], pdf["media_ref"], pdf["payload"]):
-                try:
-                    samples = sample_frame_pixels(
-                        bytes(payload) if payload is not None else b"",
-                        n_frames)
-                    for idx, t_ms, px in samples:
-                        feats = band_features(px, feature_dim)
-                        rows.append((doc_id, ref, idx, t_ms,
-                                     px.shape[1], px.shape[0],
-                                     feats.tolist(), None))
-                except (CodecError, ValueError, struct.error,
-                        IndexError) as e:
-                    if on_error == "fail":
-                        raise
-                    rows.append((doc_id, ref, None, None, None, None,
-                                 None, str(e)))
-                if len(rows) >= 4096:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-    return (media.select("doc_id", "media_ref", "payload")
-            .mapInPandas(fn, FRAME_REAL_META))

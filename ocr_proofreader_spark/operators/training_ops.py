@@ -1,8 +1,8 @@
 """Training-data pipeline operators over the flat documents / embeddings
 tables: deduplication (exact, MinHash-LSH, SimHash, n-gram Jaccard),
 similarity search (brute-force cosine, LSH-bucketed ANN), and text
-analysis (token counts, quality score, language-ID heuristic, document
-fingerprint).
+analysis (quality/repetition metrics, BPE token counts, trigram
+language ID, document fingerprints).
 
 Design rules:
 * everything stays JVM-side (built-in functions / higher-order lambdas)
@@ -31,34 +31,7 @@ TOKENS = 'regexp_extract_all(text, "[^ ]+", 0)'
 # text analysis
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.expr(f"size({TOKENS})").cast("long").alias("n_tokens"))
-
-
-def quality_score(docs: DataFrame) -> DataFrame:
-    return (docs
-            .withColumn("n_tokens", F.expr(f"size({TOKENS})").cast("long"))
-            .select(
-                "doc_id", "n_tokens",
-                F.length("text").cast("long").alias("n_chars"),
-                F.round(F.length("text") / F.col("n_tokens"), 4)
-                .alias("chars_per_token")))
-
-
 EN_STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
-
-
-def lang_guess(docs: DataFrame) -> DataFrame:
-    stop_list = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
-    hits = F.expr(
-        f"size(filter(split(text, ' '), w -> w IN ({stop_list})))") \
-        .cast("long")
-    return docs.select(
-        "doc_id", hits.alias("en_hits"),
-        F.when(hits >= 2, F.lit("en")).otherwise(F.lit("other"))
-        .alias("lang_guess"))
 
 
 def doc_fingerprint(docs: DataFrame) -> DataFrame:
@@ -454,22 +427,6 @@ def distinct_token_sketch(docs: DataFrame, rsd: float = 0.02,
 # deduplication
 
 
-def normalize_text(docs: DataFrame) -> DataFrame:
-    """Unicode NFC normalization (the standard dedup preprocessing step:
-    composed vs decomposed accents must not defeat exact/hash dedup).
-    Spark has no NFC built-in, so this is one Arrow-batched scalar UDF;
-    the contract output is the normalized text's md5 so the DuckDB twin
-    (``nfc_normalize``) hash-checks the whole transform."""
-    import unicodedata
-
-    @F.pandas_udf(T.StringType())
-    def nfc(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: unicodedata.normalize("NFC", t)
-                     if t is not None else None)
-
-    return docs.select("doc_id", F.md5(nfc("text")).alias("nfc_hash"))
-
-
 def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup by content hash: keeper = min doc_id per hash."""
     return (docs
@@ -560,8 +517,9 @@ def minhash_candidates(docs: DataFrame, bands: int = 4,
 def simhash(docs: DataFrame, bits: int = 8) -> DataFrame:
     """md5-based SimHash over the token stream (engine-portable).
 
-    Each token votes +-1 per bit of an 8-bit md5-derived value; the doc's
-    simhash packs the majority votes.
+    Each token votes +-1 per bit of a ``bits``-bit md5-derived value (the
+    first ``ceil(bits/4)`` hex digits); the doc's simhash packs the
+    majority votes.
 
     Input spread to the session parallelism (guide section 2.5): the
     token explode + per-token md5 partial aggregate are the whole cost
@@ -569,7 +527,8 @@ def simhash(docs: DataFrame, bits: int = 8) -> DataFrame:
     from ocr_proofreader_spark.partitioning import spread_input
     words = spread_input(docs.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(F.expr(TOKENS)).alias("word"))
-    v = F.conv(F.substring(F.md5("word"), 1, 2), 16, 10).cast("int")
+    nhex = (bits + 3) // 4
+    v = F.conv(F.substring(F.md5("word"), 1, nhex), 16, 10).cast("long")
     votes = [F.sum(F.when(F.shiftright(v, b).bitwiseAND(F.lit(1)) == 1,
                           1).otherwise(-1)).alias(f"v{b}")
              for b in range(bits)]
@@ -671,7 +630,7 @@ def simhash_near_dup(docs: DataFrame, bits: int = 16,
         raise ValueError(
             f"simhash_near_dup: bits={bits} cannot support "
             f"max_hamming={max_hamming} losslessly with banding")
-    sh = simhash_wide(docs, bits)
+    sh = simhash(docs, bits)
     bands = sh.select(
         "doc_id", "simhash",
         F.posexplode(F.array(*[
@@ -689,26 +648,6 @@ def simhash_near_dup(docs: DataFrame, bits: int = 16,
                     .cast("long").alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
             .distinct())
-
-
-def simhash_wide(docs: DataFrame, bits: int = 16) -> DataFrame:
-    """``simhash`` generalized past 8 bits: md5-derived per-token bit
-    votes, packed majority.  Kept separate so the 8-bit driver query's
-    hash stays frozen."""
-    from ocr_proofreader_spark.partitioning import spread_input
-    words = spread_input(docs.select("doc_id", "text"), "doc_id").select(
-        "doc_id", F.explode(F.expr(TOKENS)).alias("word"))
-    nhex = (bits + 3) // 4
-    v = F.conv(F.substring(F.md5("word"), 1, nhex), 16, 10).cast("long")
-    votes = [F.sum(F.when(F.shiftright(v, b).bitwiseAND(F.lit(1)) == 1,
-                          1).otherwise(-1)).alias(f"v{b}")
-             for b in range(bits)]
-    agg = words.groupBy("doc_id").agg(*votes)
-    sim = None
-    for b in range(bits):
-        bit = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = bit if sim is None else sim + bit
-    return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
 # RE2-safe and Java-regex-identical PII patterns: no lookaround, no
@@ -1303,11 +1242,6 @@ def embedding_project(emb: DataFrame, out_dim: int = 16) -> DataFrame:
             .select("vec_id", "dim",
                     F.floor(F.col("value") * 10000).cast("long")
                     .alias("value_e4")))
-
-
-def embedding_norms(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        "vec_id", F.round(F.expr(_norm_expr("embedding")), 3).alias("l2"))
 
 
 def label_centroid_sim(emb: DataFrame) -> DataFrame:

@@ -31,12 +31,6 @@ def count_exchanges(df: DataFrame) -> int:
                if "Exchange" in line and "BroadcastExchange" not in line)
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    plan = physical_plan(df)
-    return ("BroadcastHashJoin" in plan
-            or "BroadcastNestedLoopJoin" in plan)
-
-
 def has_partial_aggregate(df: DataFrame) -> bool:
     # partial_count / partial_min / ... = map-side combine present
     return "partial_" in physical_plan(df)

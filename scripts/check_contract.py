@@ -1,7 +1,9 @@
 """Local replica of the driver's correctness gate: run every
 ``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()`` twin
 on DuckDB, compare row count + column names + order-insensitive value
-hash.  Usage: python scripts/check_contract.py [sf_dir]"""
+hash.  Every OK/rows line ends with the Spark-side value hash, so two
+runs (e.g. before and after a change) can be diffed query by query.
+Usage: python scripts/check_contract.py [sf_dir]"""
 
 from __future__ import annotations
 
@@ -69,38 +71,34 @@ def main(sf_dir: str) -> int:
             df = fn(spark, sf_dir)
             cols = df.columns
             rows = [tuple(r) for r in df.collect()]
+            spark_hash = value_hash(cols, rows)
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error {e}")
             continue
         if name not in oracles:
             print(f"rows  {name}: {len(rows)} rows ({time.time()-t0:.1f}s)"
-                  f" [rows-only]")
+                  f" [rows-only] {spark_hash}")
             continue
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
+            oracle_hash = value_hash(ocols, orows)
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error {str(e).splitlines()[0]}")
             continue
         ok_count = len(rows) == len(orows)
         ok_cols = sorted(cols) == sorted(ocols)
-        try:
-            ok_hash = (value_hash(cols, rows) == value_hash(ocols, orows)
-                       if ok_cols else False)
-        except TypeError as e:
-            failures.append(name)
-            print(f"FAIL  {name}: {e}")
-            continue
+        ok_hash = ok_cols and spark_hash == oracle_hash
         status = "OK   " if (ok_count and ok_cols and ok_hash) else "FAIL "
         if status.startswith("FAIL"):
             failures.append(name)
         col_info = "Y" if ok_cols else f"{sorted(cols)} != {sorted(ocols)}"
         hash_info = "Y" if ok_hash else "N"
         print(f"{status} {name}: rows {len(rows)}/{len(orows)}"
-              f" cols={col_info} hash={hash_info}"
+              f" cols={col_info} hash={hash_info} {spark_hash}"
               f" ({time.time()-t0:.1f}s)")
     spark.stop()
     print(f"\n{len(qs) - len(failures)}/{len(qs)} passed")

@@ -23,7 +23,13 @@ def test_curate_chain_semantics(spark):
     if not os.path.exists(src):
         pytest.skip("driver testdata missing")
     docs = spark.read.parquet(src)
+    # curate() leaves exactly one cached plan behind: the returned frame
+    # (the caller owns it); every intermediate stage frame is released
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
     out, m = curate(spark, docs)
+    assert cache.numCachedEntries() == n_cached + 1
+    assert out.storageLevel.useMemory or out.storageLevel.useDisk
     order = ["input_docs", "after_quality_filter", "after_line_dedup",
              "after_near_dup", "after_decontamination",
              "after_stratified_sample"]
@@ -47,6 +53,9 @@ def test_curate_chain_semantics(spark):
     assert m2 == m
     assert {(r["doc_id"], r["text"]) for r in out2.collect()} == \
         {(r["doc_id"], r["text"]) for r in rows}
+    out.unpersist()
+    out2.unpersist()
+    assert cache.numCachedEntries() == n_cached
 
 
 def test_curate_cli(tmp_path):

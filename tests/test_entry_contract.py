@@ -63,9 +63,8 @@ def test_registry_fits_driver_window():
     must stay at EXACTLY 50 and the media queries inside the window."""
     qs = list(entrymod.queries())
     assert len(qs) == 50
-    # round-5 rotation: the md5-fake media legs moved to extras; the
-    # real-codec leg and the promoted never-verified queries must sit
-    # inside the driver window
+    # round-5 rotation: the real-codec media leg and the promoted
+    # never-verified queries must sit inside the driver window
     for name in ("media_inventory", "media_decode_real",
                  "pdf_image_roundtrip", "simhash_near_dup",
                  "stream_stream_join", "stream_stream_join_outer",
@@ -73,9 +72,7 @@ def test_registry_fits_driver_window():
                  "token_count_bpe_merged"):
         assert qs.index(name) < 50
     ex = entrymod.extra_queries()
-    for name in ("media_decode", "media_resize", "media_frames",
-                 "normalize_text", "minhash_signatures", "simhash",
-                 "embedding_norms"):
+    for name in ("simhash", "doc_fingerprint"):
         assert name in ex, f"displaced query {name} lost its local gate"
 
 

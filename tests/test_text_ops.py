@@ -1,10 +1,9 @@
 """Unit semantics for the text-analysis training ops on hand-built docs
 (the sf-contract checks run on mostly-ASCII synthetic text, so the
-interesting cases — composed vs decomposed accents, token order, punct
-classes — are pinned here)."""
+interesting cases — token order, punct classes, line duplicates — are
+pinned here)."""
 
 import hashlib
-import unicodedata
 
 import pytest
 
@@ -19,16 +18,6 @@ def docs(spark):
         (5, "Stop. Really, stop! Why?"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_normalize_text_unifies_composition(spark, docs):
-    from ocr_proofreader_spark.operators.training_ops import normalize_text
-    out = {r["doc_id"]: r["nfc_hash"] for r in normalize_text(docs).collect()}
-    assert out[1] == out[2]                  # NFC unifies the two forms
-    expected = hashlib.md5(
-        unicodedata.normalize("NFC", "déjà vu").encode()
-    ).hexdigest()
-    assert out[1] == expected
 
 
 def test_rolling_fingerprint_is_order_sensitive(spark, docs):
@@ -257,7 +246,7 @@ def test_simhash_near_dup_banding_is_lossless(spark):
     >= 2 of 4 bands intact) — near-identical docs pair up, disjoint
     docs don't."""
     from ocr_proofreader_spark.operators.training_ops import (
-        simhash_near_dup, simhash_wide)
+        simhash, simhash_near_dup)
     base = "the quick brown fox jumps over the lazy dog " * 6
     docs = spark.createDataFrame(
         [(0, base), (1, base + "extra"), (2, base.replace("fox", "cat")),
@@ -267,8 +256,8 @@ def test_simhash_near_dup_banding_is_lossless(spark):
         "doc_id long, text string")
     got = {(r["d1"], r["d2"]): r["hamming"]
            for r in simhash_near_dup(docs).collect()}
-    # brute-force reference from the wide fingerprints
-    sh = {r["doc_id"]: r["simhash"] for r in simhash_wide(docs).collect()}
+    # brute-force reference from the 16-bit fingerprints
+    sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, 16).collect()}
     expected = {}
     ids = sorted(sh)
     for i in ids:
