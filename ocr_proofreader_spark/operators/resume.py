@@ -1,12 +1,18 @@
 """S2/S15/S16: checkpointed resumability with per-partition lineage.
 
 Unit of replay = a deterministic hash bucket of doc_id (stable across runs
-and cluster sizes).  Protocol per bucket:
+and cluster sizes).  Unit of execution = a *wave*: the pending buckets, in
+ascending order, split into groups of ``ceil(sqrt(num_buckets))``.  Per
+wave:
 
-1. proofread the bucket's docs (full cluster parallelism inside the bucket),
-2. write output to ``<out>/_tmp/<run_id>/<bucket>``,
-3. atomic rename to ``<out>/data/bucket=<b>``,
-4. write the marker ``<out>/_markers/<b>.done`` and append a lineage row.
+1. proofread the wave's docs in one pass (full cluster parallelism),
+2. write it once with ``partitionBy("bucket")`` to
+   ``<out>/_tmp/<run_id>/wave-<k>``; one ``Observation`` carries each
+   bucket's doc/span/correction/flag counts, so no metric column reaches
+   the output,
+3. then, bucket by bucket: atomic rename of ``bucket=<b>`` to
+   ``<out>/data/bucket=<b>``, a lineage row, the marker
+   ``<out>/_markers/<b>.done``.
 
 A killed job leaves unfinished buckets markerless; on restart with the same
 output root, only markerless buckets replay (exactly-once at bucket level —
@@ -15,21 +21,50 @@ same protocol rides on snapshot commits instead of directory renames
 (SURVEY.md section 3.3); the local-FS rename here matches the parquet
 backend of catalog.py.
 
+Cost model, B buckets and wave size W: a run scans the input ``B / W``
+times and a crash loses at most one wave's work, ``W / B`` of the run.
+``W = 1`` scans B times, ``W = B`` scans once but a crash loses the
+whole run; ``W = ceil(sqrt(B))`` balances the two at about sqrt(B)
+scans and 1/sqrt(B) of the run lost.  The wave filter ``_bucket IN (...)`` is md5 of
+doc_id, so it still prunes nothing unless the input is stored bucketed
+by the same hash: each wave decodes the whole input.
+
+Lineage rows are written from the driver with pyarrow, one small parquet
+file per committed bucket under a hidden name renamed into place — no
+Spark job per row.  Like the data renames this assumes a local (or
+POSIX-mounted) output root.
+
 The anti-join form of the resume filter (SURVEY.md S2) is exposed as
 ``resume_filter`` for single-shot plans and the driver cross-checks."""
 
 from __future__ import annotations
 
+import math
 import os
+import shutil
 import time
+import uuid
+from collections import Counter
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.operators.proofread import proofread
-from ocr_proofreader_spark.schemas import LINEAGE
+from ocr_proofreader_spark.schemas import DOCUMENTS_OUT, LINEAGE
+
+# per-doc metric columns of proofread(): summed per bucket into lineage,
+# never written to the output
+METRICS = ("span_count", "corrections", "flagged")
+# the output table as read back: data files plus the bucket= directory
+OUTPUT = T.StructType(DOCUMENTS_OUT.fields
+                      + [T.StructField("bucket", T.IntegerType())])
+LINEAGE_ARROW = to_arrow_schema(LINEAGE)
 
 
 # Stamped into every output root so a resume NEVER mixes bucket layouts:
@@ -112,67 +147,101 @@ class ResumableRunner:
         """partition_id -> prior lineage rows, read once per run()."""
         if not os.path.isdir(self.lineage_dir):
             return {}
-        rows = (self.spark.read.parquet(self.lineage_dir)
-                .groupBy("partition_id").count().collect())
-        return {r["partition_id"]: r["count"] for r in rows}
+        ids = pq.read_table(self.lineage_dir, columns=["partition_id"])
+        return Counter(ids.column("partition_id").to_pylist())
 
     def _append_lineage(self, row: dict) -> None:
-        df = self.spark.createDataFrame([row], LINEAGE)
-        df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
+        """One parquet file per row, written under a hidden name (which
+        Spark and pyarrow readers skip) and renamed into place, so a
+        reader never sees a partial file."""
+        os.makedirs(self.lineage_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.lineage_dir, f".{name}")
+        pq.write_table(pa.Table.from_pylist([row], schema=LINEAGE_ARROW), tmp)
+        os.rename(tmp, os.path.join(self.lineage_dir, name))
 
     # -- the run -------------------------------------------------------------
 
     def run(self, docs: DataFrame, fail_after: int | None = None) -> None:
-        """Process all pending buckets; ``fail_after`` injects a crash after
-        N completed buckets (SURVEY.md test 5.2-6)."""
+        """Process all pending buckets, one wave at a time; ``fail_after``
+        injects a crash once N buckets have been committed (SURVEY.md test
+        5.2-6), checked before each wave and each bucket's commit."""
         cfg = self.cfg
-        done = self.done_buckets()
+        pending = sorted(set(range(cfg.num_buckets)) - self.done_buckets())
         prior = self._prior_attempts()
         bucketed = docs.withColumn("_bucket", bucket_col(cfg.num_buckets))
-        completed_this_run = 0
-        for b in range(cfg.num_buckets):
-            if b in done:
-                continue
-            if fail_after is not None and completed_this_run >= fail_after:
-                raise RuntimeError(f"injected failure before bucket {b}")
-            t0 = time.time()
-            part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-            out = proofread(self.spark, part, cfg, self.lex_bc)
-            obs = Observation(f"lineage-{b}")
-            observed = out.observe(
-                obs,
-                F.count("*").alias("doc_count"),
-                F.coalesce(F.sum("span_count"), F.lit(0)).alias("span_count"),
-                F.coalesce(F.sum("corrections"), F.lit(0)).alias("corrections"),
-                F.coalesce(F.sum("flagged"), F.lit(0)).alias("flagged"),
-            ).drop("span_count", "corrections", "flagged")
+        size = math.ceil(math.sqrt(cfg.num_buckets))
+        tmp_root = os.path.join(self.out_root, "_tmp", cfg.run_id)
+        committed = 0
 
-            tmp = os.path.join(self.out_root, "_tmp", cfg.run_id, str(b))
-            final = os.path.join(self.data_dir, f"bucket={b}")
-            observed.write.mode("overwrite").parquet(tmp)
-            metrics = obs.get
-            if os.path.isdir(final):  # stale partial from a dead run
-                import shutil
-                shutil.rmtree(final)
-            os.rename(tmp, final)
-            self._append_lineage({
-                "run_id": cfg.run_id,
-                "partition_id": b,
-                "doc_count": int(metrics["doc_count"]),
-                "span_count": int(metrics["span_count"]),
-                "corrections": int(metrics["corrections"]),
-                "flagged": int(metrics["flagged"]),
-                "status": "ok",
-                "wall_ms": int((time.time() - t0) * 1000),
-                "attempt": prior.get(b, 0) + 1,
-                "finished_at": datetime.now(timezone.utc),
-            })
-            with open(os.path.join(self.marker_dir, f"{b}.done"), "w") as fh:
-                fh.write(cfg.run_id)
-            completed_this_run += 1
+        def check(b: int) -> None:
+            if fail_after is not None and committed >= fail_after:
+                raise RuntimeError(f"injected failure before bucket {b}")
+
+        for k in range(0, len(pending), size):
+            wave = pending[k:k + size]
+            check(wave[0])
+            t0 = time.time()
+            wave_dir = os.path.join(tmp_root, f"wave-{k // size}")
+            counts = self._write_wave(bucketed, wave, wave_dir)
+            for b in wave:
+                check(b)
+                self._commit(b, os.path.join(wave_dir, f"bucket={b}"))
+                self._append_lineage({
+                    "run_id": cfg.run_id,
+                    "partition_id": b,
+                    **counts[b],
+                    "status": "ok",
+                    # the wave's start to this bucket's commit
+                    "wall_ms": int((time.time() - t0) * 1000),
+                    "attempt": prior.get(b, 0) + 1,
+                    "finished_at": datetime.now(timezone.utc),
+                })
+                with open(os.path.join(self.marker_dir, f"{b}.done"),
+                          "w") as fh:
+                    fh.write(cfg.run_id)
+                committed += 1
+        shutil.rmtree(tmp_root, ignore_errors=True)
+
+    def _write_wave(self, bucketed: DataFrame, wave: list[int],
+                    wave_dir: str) -> dict[int, dict[str, int]]:
+        """One proofread pass over the wave's buckets, one partitioned
+        write; returns bucket -> its lineage counts (``doc_count`` and
+        ``METRICS``)."""
+        cfg = self.cfg
+        part = bucketed.filter(F.col("_bucket").isin(wave)).drop("_bucket")
+        out = (proofread(self.spark, part, cfg, self.lex_bc)
+               .withColumn("bucket", bucket_col(cfg.num_buckets)))
+        aggs = []
+        for b in wave:
+            hit = F.col("bucket") == b
+            aggs.append(F.count(F.when(hit, 1)).alias(f"doc_count_{b}"))
+            aggs += [F.coalesce(F.sum(F.when(hit, F.col(m))), F.lit(0))
+                     .alias(f"{m}_{b}") for m in METRICS]
+        obs = Observation()
+        (out.observe(obs, *aggs).drop(*METRICS)
+         .write.mode("overwrite").partitionBy("bucket").parquet(wave_dir))
+        row = obs.get
+        return {b: {m: int(row[f"{m}_{b}"])
+                    for m in ("doc_count",) + METRICS} for b in wave}
+
+    def _commit(self, b: int, src: str) -> None:
+        """Move bucket b's wave output to ``data/bucket=<b>``.  An empty
+        bucket has no ``src`` (partitionBy writes no directory for it) and
+        gets an empty one, so every committed bucket has its directory."""
+        final = os.path.join(self.data_dir, f"bucket={b}")
+        if os.path.isdir(final):  # stale partial from a dead run
+            shutil.rmtree(final)
+        if os.path.isdir(src):
+            os.rename(src, final)
+        else:
+            os.makedirs(final)
 
     def read_output(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_dir)
+        """The output table; the schema is given, not inferred, so a root
+        whose buckets are all empty (no data file) still reads as 0 rows
+        of ``doc_id, spans, bucket``."""
+        return self.spark.read.schema(OUTPUT).parquet(self.data_dir)
 
     def read_lineage(self, dedupe: bool = True) -> DataFrame:
         """Lineage rows, deduped by default to the latest attempt per

@@ -3,14 +3,19 @@ unfinished buckets and the final output is identical to an uninterrupted
 run."""
 
 import os
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.lexicon import broadcast_lexicon
+from ocr_proofreader_spark.operators import resume
 from ocr_proofreader_spark.operators.proofread import proofread
-from ocr_proofreader_spark.operators.resume import ResumableRunner, resume_filter
+from ocr_proofreader_spark.operators.resume import (ResumableRunner,
+                                                    bucket_col,
+                                                    resume_filter)
+from ocr_proofreader_spark.schemas import LINEAGE
 
 
 def _tuples(rows):
@@ -57,15 +62,136 @@ def test_kill_and_resume(spark, corpus_small, base_lexicon, tmp_path):
     assert len(lineage) == 6
     assert {r["partition_id"] for r in lineage} == set(range(6))
     assert all(r["status"] == "ok" for r in lineage)
+    assert all(r["attempt"] == 1 for r in lineage)
     assert sum(r["doc_count"] for r in lineage) == 80
     assert sum(r["corrections"] for r in lineage) > 0
+
+    # a successful run leaves no scratch behind
+    assert not os.path.exists(os.path.join(out_root, "_tmp", "r2"))
+
+
+@pytest.mark.parametrize("n_docs,num_buckets", [(1, 8), (0, 4)])
+def test_empty_buckets_and_empty_input(spark, corpus_small, base_lexicon,
+                                       tmp_path, n_docs, num_buckets):
+    """Empty buckets are still committed (directory, marker, a
+    ``doc_count = 0`` lineage row), and an all-empty output root still
+    reads back as 0 rows with the output's columns."""
+    docs = spark.read.parquet(f"{corpus_small}/documents.parquet")
+    first = docs.select("doc_id").first()["doc_id"]
+    docs = docs.filter(F.col("doc_id") == first) if n_docs else \
+        docs.filter(F.lit(False))
+    cfg = RunConfig(run_id="r1", num_buckets=num_buckets)
+    out_root = str(tmp_path / "out")
+    runner = ResumableRunner(spark, out_root, cfg,
+                             broadcast_lexicon(spark, base_lexicon))
+    runner.run(docs)
+
+    assert runner.done_buckets() == set(range(num_buckets))
+    for b in range(num_buckets):
+        assert os.path.isdir(os.path.join(out_root, "data", f"bucket={b}"))
+    lineage = runner.read_lineage().collect()
+    assert sorted(r["partition_id"] for r in lineage) == \
+        list(range(num_buckets))
+    assert sorted(r["doc_count"] for r in lineage) == \
+        [0] * (num_buckets - n_docs) + [1] * n_docs
+    out = runner.read_output()
+    assert out.columns == ["doc_id", "spans", "bucket"]
+    assert [r["doc_id"] for r in out.collect()] == [first] * n_docs
+
+
+def test_lineage_format_compat(spark, corpus_small, base_lexicon, tmp_path):
+    """A root half done by the per-bucket runner, whose lineage rows were
+    one-row Spark writes, resumes under the driver-written lineage files:
+    both kinds read as one table, old rows count as prior attempts, and a
+    bucket replayed after its rename but before its marker gets attempt 2
+    and wins the dedupe."""
+    docs = (spark.read.parquet(f"{corpus_small}/documents.parquet")
+            .limit(40).cache())
+    lex_bc = broadcast_lexicon(spark, base_lexicon)
+    old_cfg = RunConfig(run_id="old", num_buckets=4)
+    out_root = str(tmp_path / "out")
+    old = ResumableRunner(spark, out_root, old_cfg, lex_bc)
+
+    bucketed = docs.withColumn("b", bucket_col(4))
+    for b in (0, 1):
+        out = proofread(spark, bucketed.filter(F.col("b") == b).drop("b"),
+                        old_cfg, lex_bc).cache()
+        (out.drop("span_count", "corrections", "flagged")
+         .write.parquet(os.path.join(out_root, "data", f"bucket={b}")))
+        sums = out.agg(F.count("*").alias("doc_count"),
+                       *[F.sum(m).alias(m) for m in
+                         ("span_count", "corrections", "flagged")]).first()
+        spark.createDataFrame([{
+            "run_id": "old", "partition_id": b,
+            **{k: int(v or 0) for k, v in sums.asDict().items()},
+            "status": "ok", "wall_ms": 1, "attempt": 1,
+            "finished_at": datetime.now(timezone.utc),
+        }], LINEAGE).coalesce(1).write.mode("append").parquet(
+            old.lineage_dir)
+        out.unpersist()
+    # bucket 0 committed; bucket 1 crashed between lineage row and marker
+    with open(os.path.join(old.marker_dir, "0.done"), "w") as fh:
+        fh.write("old")
+    assert old._prior_attempts() == {0: 1, 1: 1}
+    mtime0 = os.path.getmtime(os.path.join(out_root, "data", "bucket=0"))
+
+    new = ResumableRunner(spark, out_root,
+                          RunConfig(run_id="new", num_buckets=4), lex_bc)
+    new.run(docs)
+    assert new.done_buckets() == {0, 1, 2, 3}
+    assert os.path.getmtime(
+        os.path.join(out_root, "data", "bucket=0")) == mtime0
+
+    raw = new.read_lineage(dedupe=False).collect()
+    assert sorted((r["partition_id"], r["attempt"], r["run_id"])
+                  for r in raw) == [(0, 1, "old"), (1, 1, "old"),
+                                    (1, 2, "new"), (2, 1, "new"),
+                                    (3, 1, "new")]
+    latest = {r["partition_id"]: r for r in new.read_lineage().collect()}
+    assert (latest[1]["attempt"], latest[1]["run_id"]) == (2, "new")
+    assert sum(r["doc_count"] for r in latest.values()) == 40
+    assert new._prior_attempts() == {0: 1, 1: 2, 2: 1, 3: 1}
+
+    resumed = _tuples(new.read_output().collect())
+    assert resumed == _tuples(proofread(spark, docs, old_cfg,
+                                        lex_bc).collect())
+
+
+def test_one_proofread_pass_per_wave(spark, corpus_small, base_lexicon,
+                                     tmp_path, monkeypatch):
+    """Pending buckets run in waves of ceil(sqrt(num_buckets)), one
+    proofread() per wave; fail_after still counts committed buckets."""
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return proofread(*args, **kwargs)
+
+    monkeypatch.setattr(resume, "proofread", counting)
+    docs = (spark.read.parquet(f"{corpus_small}/documents.parquet")
+            .limit(40).cache())
+    lex_bc = broadcast_lexicon(spark, base_lexicon)
+
+    r16 = ResumableRunner(spark, str(tmp_path / "b16"),
+                          RunConfig(run_id="r", num_buckets=16), lex_bc)
+    r16.run(docs)
+    assert len(calls) == 4
+    assert r16.done_buckets() == set(range(16))
+    assert r16.read_output().count() == 40
+
+    calls.clear()
+    r6 = ResumableRunner(spark, str(tmp_path / "b6"),
+                         RunConfig(run_id="r", num_buckets=6), lex_bc)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r6.run(docs, fail_after=3)
+    assert len(calls) == 1
+    assert len(r6.done_buckets()) == 3
 
 
 def test_resume_filter_anti_join(spark, corpus_small):
     docs = spark.read.parquet(f"{corpus_small}/documents.parquet").limit(50)
     done = spark.createDataFrame([(0,), (1,)], "partition_id int")
     kept = resume_filter(docs, done, num_buckets=4)
-    from ocr_proofreader_spark.operators.resume import bucket_col
     remaining = (kept.withColumn("b", bucket_col(4))
                  .select("b").distinct().collect())
     assert {r["b"] for r in remaining} <= {2, 3}
