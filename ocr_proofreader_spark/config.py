@@ -23,9 +23,6 @@ class RunConfig:
     lexicon_path: str = field(default_factory=lambda: os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "fixtures", "lexicon_base.txt"))
-    # lang -> dictionary path for multilingual corpora (must include a
-    # 'default' entry); None = single-lexicon mode via lexicon_path
-    lexicon_paths: dict[str, str] | None = None
     freq_k: int = 5                     # S11: book word freq >= K joins lexicon
     rebalance_partitions: int | None = None  # None -> leave input partitioning
     # Docs above this take the skew path.  Measured on local[32]: a

@@ -3,11 +3,13 @@
     spark-submit --master local[32] --py-files dist/engine.zip \
         ocr_proofreader_spark/jobs/proofread_job.py \
         --input <documents.parquet> --output <out_root> \
-        [--resume] [--bench-json <path>]
+        [--num-buckets N] [--lexicon LANG=PATH ...]
 
 Reads an interleaved documents table, proofreads it (fast path + skew
 path), writes proofread docs + word_freq + lexicon derived tables, with
-per-bucket lineage and checkpointed resume (SURVEY.md EP1)."""
+per-bucket lineage, and prints one JSON result line on stdout (SURVEY.md
+EP1).  Resume is automatic: a re-run on the same ``--output`` proofreads
+only the buckets that have no done marker yet."""
 
 from __future__ import annotations
 
@@ -23,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from pyspark.sql import SparkSession
 
 from ocr_proofreader_spark.config import RunConfig
-from ocr_proofreader_spark.lexicon import broadcast_lexicon, load_base_lexicon
+from ocr_proofreader_spark.lexicon import broadcast_lexicons, load_lexicons
 from ocr_proofreader_spark.operators.resume import ResumableRunner
 from ocr_proofreader_spark.operators.word_freq import lexicon_table, word_freq
 
@@ -71,15 +73,22 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--num-buckets", type=int, default=16)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--bench-json", default=None)
-    ap.add_argument("--skip-derived", action="store_true",
-                    help="skip word_freq/lexicon side tables (bench mode)")
     ap.add_argument("--lexicon", action="append", default=None,
                     metavar="LANG=PATH",
                     help="per-language dictionary (repeatable; include "
                          "default=PATH); docs pick theirs via the input's "
                          "lang column")
     args = ap.parse_args(argv)
+    lexicon_paths = {}
+    if args.lexicon:
+        bad = [s for s in args.lexicon if "=" not in s]
+        if bad:
+            ap.error(f"--lexicon expects LANG=PATH, got {bad[0]!r}")
+        lexicon_paths = dict(s.split("=", 1) for s in args.lexicon)
+        # fail fast here, not deep in an executor's KeyError: docs whose
+        # lang has no dedicated dictionary fall back to 'default'
+        if "default" not in lexicon_paths:
+            ap.error("--lexicon map must include a default=PATH entry")
 
     own_session = spark is None
     if own_session:
@@ -88,24 +97,8 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     cfg = RunConfig(run_id=args.run_id, num_buckets=args.num_buckets,
                     rebalance_partitions=int(
                         spark.conf.get("spark.sql.shuffle.partitions")))
-    if args.lexicon:
-        bad = [s for s in args.lexicon if "=" not in s]
-        if bad:
-            ap.error(f"--lexicon expects LANG=PATH, got {bad[0]!r}")
-        cfg.lexicon_paths = dict(s.split("=", 1) for s in args.lexicon)
-    if cfg.lexicon_paths:
-        # fail fast here, not deep in an executor's KeyError: docs whose
-        # lang has no dedicated dictionary fall back to 'default'
-        if "default" not in cfg.lexicon_paths:
-            ap.error("--lexicon map must include a default=PATH entry")
-        from ocr_proofreader_spark.lexicon import (broadcast_lexicons,
-                                                   load_lexicons)
-        by_lang = load_lexicons(cfg.lexicon_paths)
-        base = by_lang["default"]
-        lex_bc = broadcast_lexicons(spark, by_lang)
-    else:
-        base = load_base_lexicon(cfg.lexicon_path)
-        lex_bc = broadcast_lexicon(spark, base)
+    by_lang = load_lexicons(lexicon_paths or {"default": cfg.lexicon_path})
+    lex_bc = broadcast_lexicons(spark, by_lang)
 
     docs = spark.read.parquet(args.input)
     t0 = time.time()
@@ -114,14 +107,11 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     phase_b = time.time() - t0
 
     t1 = time.time()
-    if not args.skip_derived:
-        wf = word_freq(docs)
-        wf.write.mode("overwrite").parquet(
-            os.path.join(args.output, "word_freq"))
-        lexicon_table(spark, base, spark.read.parquet(
-            os.path.join(args.output, "word_freq")), cfg.freq_k) \
-            .write.mode("overwrite").parquet(
-            os.path.join(args.output, "lexicon"))
+    wf_path = os.path.join(args.output, "word_freq")
+    word_freq(docs).write.mode("overwrite").parquet(wf_path)
+    lexicon_table(spark, by_lang["default"], spark.read.parquet(wf_path),
+                  cfg.freq_k).write.mode("overwrite").parquet(
+        os.path.join(args.output, "lexicon"))
     phase_a = time.time() - t1
 
     n_docs = runner.read_output().count()
@@ -133,9 +123,6 @@ def main(argv: list[str] | None = None, spark=None) -> None:
               "shuffle_partitions":
                   spark.conf.get("spark.sql.shuffle.partitions")}
     print(json.dumps(result))
-    if args.bench_json:
-        with open(args.bench_json, "w") as fh:
-            json.dump(result, fh)
     if own_session:
         spark.stop()
 

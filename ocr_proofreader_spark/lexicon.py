@@ -1,11 +1,11 @@
 """Lexicon loading, broadcasting, and worker-side index caching.
 
-The base dictionary is broadcast ONCE — either a single frozenset or a
-``lang -> frozenset`` map for multilingual corpora; each Python worker
-builds its (first-letter, length)-bucketed ``LexIndex`` lazily and caches
-it per (broadcast id, lang), so the index build cost is paid once per
-worker, not per batch (SURVEY.md S11; BASELINE.json:6 'shipped as
-broadcast variables so no per-row Python executes')."""
+The dictionaries are broadcast ONCE as a ``lang -> frozenset`` map with a
+``'default'`` entry (a single-language run broadcasts only ``'default'``);
+each Python worker builds its (first-letter, length)-bucketed ``LexIndex``
+lazily and caches it per (broadcast id, lang), so the index build cost is
+paid once per worker, not per batch (SURVEY.md S11; BASELINE.json:6
+'shipped as broadcast variables so no per-row Python executes')."""
 
 from __future__ import annotations
 
@@ -41,7 +41,8 @@ def load_lexicons(paths: dict[str, str]) -> dict[str, frozenset]:
 
 
 def broadcast_lexicon(spark, base: frozenset):
-    return spark.sparkContext.broadcast(base)
+    """Broadcast one dictionary for every doc, whatever its lang."""
+    return broadcast_lexicons(spark, {"default": base})
 
 
 def broadcast_lexicons(spark, by_lang: dict[str, frozenset]):
@@ -52,9 +53,8 @@ def broadcast_lexicons(spark, by_lang: dict[str, frozenset]):
 
 def get_index(bc, lang: str | None = None) -> LexIndex:
     """Worker-side: LexIndex for a broadcast lexicon, cached per
-    (broadcast id, lang).  The broadcast value is either one frozenset
-    (single-language runs — ``lang`` is ignored) or a lang->frozenset
-    map, resolved via ``lang`` with ``'default'`` as the fallback.
+    (broadcast id, lang).  The broadcast value is a lang->frozenset map,
+    resolved via ``lang`` with ``'default'`` as the fallback.
 
     The cache key uses the broadcast's unique spill path (stable for its
     lifetime, never reused), NOT ``id(bc.value)``: a destroyed
@@ -64,15 +64,11 @@ def get_index(bc, lang: str | None = None) -> LexIndex:
     calling closure, unlike the value."""
     bc_id = getattr(bc, "_path", None) or id(bc)
     val = bc.value
-    if isinstance(val, dict):
-        use = lang if lang in val else "default"
-        base = val.get(use)
-        if base is None:
-            raise KeyError(
-                f"no lexicon for lang {lang!r} and no 'default' entry")
-        key = (bc_id, use)
-    else:
-        base, key = val, (bc_id, None)
+    use = lang if lang in val else "default"
+    base = val.get(use)
+    if base is None:
+        raise KeyError(f"no lexicon for lang {lang!r} and no 'default' entry")
+    key = (bc_id, use)
     idx = _INDEX_CACHE.get(key)
     if idx is None:
         if len(_INDEX_CACHE) >= _MAX_CACHED_INDEXES:

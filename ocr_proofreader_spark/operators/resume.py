@@ -18,8 +18,8 @@ A killed job leaves unfinished buckets markerless; on restart with the same
 output root, only markerless buckets replay (exactly-once at bucket level —
 the rules are deterministic, so a replay is byte-identical).  On Iceberg the
 same protocol rides on snapshot commits instead of directory renames
-(SURVEY.md section 3.3); the local-FS rename here matches the parquet
-backend of catalog.py.
+(SURVEY.md section 3.3); the job writes plain parquet, so the local-FS
+rename here is the commit.
 
 Cost model, B buckets and wave size W: a run scans the input ``B / W``
 times and a crash loses at most one wave's work, ``W / B`` of the run.
@@ -34,8 +34,9 @@ file per committed bucket under a hidden name renamed into place — no
 Spark job per row.  Like the data renames this assumes a local (or
 POSIX-mounted) output root.
 
-The anti-join form of the resume filter (SURVEY.md S2) is exposed as
-``resume_filter`` for single-shot plans and the driver cross-checks."""
+The resume filter (SURVEY.md S2) is the marker set: ``done_buckets()``
+lists the committed buckets, and each wave's ``_bucket IN (...)`` filter
+keeps only docs of pending buckets."""
 
 from __future__ import annotations
 
@@ -84,19 +85,6 @@ def bucket_col(num_buckets: int):
     h = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
                 16, 10).cast("bigint"))
     return F.pmod(h, F.lit(num_buckets)).cast("int")
-
-
-def resume_filter(docs: DataFrame, done: DataFrame,
-                  num_buckets: int) -> DataFrame:
-    """S2: drop docs whose bucket already completed (broadcast anti-join).
-
-    No distinct on the done side: anti-join semantics ignore duplicate
-    build rows, so deduping would only add a shuffle."""
-    return (docs.withColumn("_bucket", bucket_col(num_buckets))
-            .join(F.broadcast(done.select(F.col("partition_id")
-                                          .alias("_bucket"))),
-                  "_bucket", "left_anti")
-            .drop("_bucket"))
 
 
 class ResumableRunner:

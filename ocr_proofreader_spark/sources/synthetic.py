@@ -16,21 +16,21 @@ from pyspark.sql import DataFrame, SparkSession
 from ocr_proofreader_spark.schemas import DOCUMENTS_IN
 
 
-def generate_corpus(spark: SparkSession, n_docs: int, seed: int = 42,
-                    validate: bool = False,
-                    partitions: int | None = None) -> DataFrame:
+def generate_corpus(spark: SparkSession, n_docs: int,
+                    seed: int = 42) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from fixtures.gen import CorpusGenerator
         gen = CorpusGenerator(seed=seed)
         for pdf in batches:
-            out = [gen.gen_doc(int(i), validate=validate)[:2]
+            # validate=False: gen_doc's default re-runs the rules on every
+            # doc to check it, which would slow generation for bench.py
+            out = [gen.gen_doc(int(i), validate=False)[:2]
                    for i in pdf["id"]]
             yield pd.DataFrame({"doc_id": [r[0] for r in out],
                                 "spans": [r[1] for r in out]})
 
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions",
-                                        "32")) * 4
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions",
+                                    "32")) * 4
     return (spark.range(n_docs)
             .repartition(partitions)
             .mapInPandas(fn, DOCUMENTS_IN))

@@ -3,12 +3,11 @@
 ``dropDuplicates`` on the content hash emits the first arrival per hash
 and suppresses every later duplicate — the standard streaming-ingest
 dedup stage of a training-data pipeline.  State is one entry per unique
-hash; on an unbounded stream a production deployment bounds it with
-``dropDuplicatesWithinWatermark`` keyed on an ingest timestamp —
-``dedup_stream_bounded`` below is that form (the driver's documents
-table carries no event time, so it synthesizes a deterministic ingest
-timestamp; suppression is guaranteed only for duplicates arriving
-within the watermark delay, in exchange for state that expires).
+hash.  On an unbounded stream a deployment bounds that state with
+``dropDuplicatesWithinWatermark`` keyed on an ingest timestamp: state
+then expires past the watermark delay, and only duplicates arriving
+within the delay are guaranteed to be suppressed.  The documents table
+carries no event time, so this operator keeps the unbounded form.
 
 WHICH doc is emitted first per hash is arrival-order-dependent, so the
 deterministic (and DuckDB-checkable) projection is the distinct hash set
@@ -57,39 +56,3 @@ def dedup_stream_hashes(spark: SparkSession, input_path: str,
         q.awaitTermination()
         return spark.read.parquet(output_dir)
     return run_to_scratch_parquet(deduped, spark, "dedup_stream_")
-
-
-def dedup_stream_bounded(spark: SparkSession, input_path: str,
-                         delay: str = "1 hour",
-                         max_files_per_trigger: int | None = None
-                         ) -> DataFrame:
-    """Bounded-state streaming dedup: ``dropDuplicatesWithinWatermark``
-    on the content hash, keyed on a synthesized deterministic ingest
-    timestamp (the driver's documents table has no event time).
-
-    State holds only hashes whose event time is within ``delay`` of the
-    stream's max event time — entries older than the watermark are
-    evicted, so state size is O(arrival rate x delay), not O(distinct
-    hashes ever seen).  The contract: duplicates arriving within the
-    watermark window are suppressed (exactly the unbounded operator's
-    behavior there); a duplicate arriving later than ``delay`` after
-    the retained copy MAY be re-emitted — the standard
-    bounded-state/completeness trade every production ingest makes."""
-    schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    stream = reader.parquet(as_stream_dir(input_path))
-    # deterministic synthetic ingest time: seconds after an epoch base,
-    # spread by doc_id so the corpus spans a multi-hour ingest window
-    hashed = (stream
-              .select(F.md5(F.col("text")).alias("content_hash"),
-                      F.timestamp_seconds(
-                          F.lit(1_700_000_000)
-                          + F.col("doc_id").cast("long") % 7200)
-                      .alias("ingest_ts"))
-              .withWatermark("ingest_ts", delay)
-              .dropDuplicatesWithinWatermark(["content_hash"]))
-    return run_to_scratch_parquet(hashed.select("content_hash"), spark,
-                                  "dedup_stream_wm_")

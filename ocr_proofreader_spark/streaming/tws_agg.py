@@ -21,11 +21,10 @@ ENVIRONMENT GATE: transformWithState's state-server protocol imports
 ``google.protobuf`` (pyspark 4.1 ships the generated StateMessage_pb2
 but not protobuf itself), which this container lacks and cannot
 install — the streaming run raises
-STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at pre-init.  Like the
-Iceberg backend (catalog.py), the operator is complete and the
-processor fold is unit-tested against a fake state (tests/
-test_streaming.py); the end-to-end test self-skips until protobuf is
-present.  It also requires the RocksDB state store provider
+STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE at pre-init.  The
+operator is complete and the processor fold is unit-tested against a
+fake state (tests/test_streaming.py); the end-to-end test self-skips
+until protobuf is present.  It also requires the RocksDB state store provider
 (``spark.sql.streaming.stateStore.providerClass``).
 """
 

@@ -116,7 +116,7 @@ def test_pdf_roundtrip_on_corpus(spark):
 def test_extraction_is_shuffle_free(spark):
     from ocr_proofreader_spark.operators.extraction import (
         extract_main_html, synth_html)
-    from ocr_proofreader_spark.plans import physical as P
+    import plan_shapes as P
     docs = (spark.read.parquet(os.path.join(SF, "documents.parquet"))
             .select("doc_id", "text"))
     assert P.count_exchanges(extract_main_html(synth_html(docs))) == 0
@@ -237,7 +237,7 @@ def test_pdf_image_roundtrip_stage(spark):
     doc_id, digests present, NULL text propagates NULLs."""
     from ocr_proofreader_spark.operators.extraction import \
         pdf_image_roundtrip
-    from ocr_proofreader_spark.plans import physical as P
+    import plan_shapes as P
     docs = spark.createDataFrame(
         [(0, "alpha"), (1, "beta"), (2, "gamma"), (3, None)],
         "doc_id long, text string")

@@ -1,5 +1,6 @@
 """EP1 CLI surface: proofread_job.main() end-to-end in-process, including
-the repeatable --lexicon LANG=PATH flag (multilingual runs)."""
+the repeatable --lexicon LANG=PATH flag (multilingual runs), the derived
+tables and the JSON result line on stdout."""
 
 import json
 import os
@@ -15,7 +16,7 @@ SCHEMA = ("doc_id string, lang string, spans array<struct<"
           "kind:string,text:string,media_ref:string,offset:int>>")
 
 
-def test_job_cli_multilingual(spark, tmp_path):
+def test_job_cli_multilingual(spark, tmp_path, capsys):
     from ocr_proofreader_spark.jobs import proofread_job
 
     rows = [("fr-1", "fr",
@@ -24,12 +25,10 @@ def test_job_cli_multilingual(spark, tmp_path):
              [("text", "the housa was fine", None, 0)])]
     inp = str(tmp_path / "docs")
     out = str(tmp_path / "out")
-    bench = str(tmp_path / "bench.json")
     spark.createDataFrame(rows, SCHEMA).write.parquet(inp)
 
     proofread_job.main([
-        "--input", inp, "--output", out, "--skip-derived",
-        "--num-buckets", "2", "--bench-json", bench,
+        "--input", inp, "--output", out, "--num-buckets", "2",
         "--lexicon", f"default={ROOT}/fixtures/lexicon_base.txt",
         "--lexicon", f"fr={ROOT}/fixtures/lexicon_fr.txt",
     ], spark=spark)
@@ -38,6 +37,7 @@ def test_job_cli_multilingual(spark, tmp_path):
            for r in spark.read.parquet(os.path.join(out, "data")).collect()}
     assert "problème" in got["fr-1"]      # corrected under the fr lexicon
     assert "house" in got["en-1"]         # corrected under the default
-    with open(bench) as fh:
-        rep = json.load(fh)
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["docs"] == 2 and rep["docs_per_sec"] > 0
+    for table in ("word_freq", "lexicon"):
+        assert spark.read.parquet(os.path.join(out, table)).count() > 0

@@ -7,7 +7,7 @@ from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.lexicon import broadcast_lexicon
 from ocr_proofreader_spark.operators.proofread import proofread_fast
 from ocr_proofreader_spark.operators.word_freq import word_freq
-from ocr_proofreader_spark.plans import physical as P
+import plan_shapes as P
 
 
 def test_fast_path_is_shuffle_free(spark, corpus_small, base_lexicon):
@@ -57,16 +57,6 @@ def test_word_freq_has_mapside_combine_single_shuffle(spark, corpus_small):
     wf = word_freq(docs)
     assert P.has_partial_aggregate(wf)
     assert P.count_exchanges(wf) == 1
-
-
-def test_resume_anti_join_broadcasts(spark, corpus_small):
-    from ocr_proofreader_spark.operators.resume import resume_filter
-    docs = spark.read.parquet(f"{corpus_small}/documents.parquet")
-    done = spark.createDataFrame([(0,)], "partition_id int")
-    kept = resume_filter(docs, done, 8)
-    plan = P.physical_plan(kept)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert P.count_exchanges(kept) == 0
 
 
 def test_scan_prunes_columns(spark, corpus_small):
@@ -158,31 +148,6 @@ def test_new_ops_plan_shapes(spark):
     # tf agg + tf-by-word + df agg-by-word + top-k by doc + the 1-row
     # SinglePartition gather for the corpus count
     assert P.count_exchanges(tfidf) == 5
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Co-located bucketed join: two tables bucketed on the same key
-    join with ZERO exchanges — the scale answer for repeated
-    fact-to-fact joins (SURVEY.md section 2.4 bucketing)."""
-    from ocr_proofreader_spark.catalog import read_table, write_bucketed
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = spark.range(0, 10_000).selectExpr(
-            "id AS k", "id * 2 AS v1")
-        df2 = spark.range(0, 10_000).selectExpr(
-            "id AS k", "id * 3 AS v2")
-        write_bucketed(df, "bt_a", ["k"], 8)
-        write_bucketed(df2, "bt_b", ["k"], 8)
-        joined = read_table(spark, "bt_a").join(
-            read_table(spark, "bt_b"), "k")
-        assert joined.count() == 10_000
-        plan = P.physical_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert P.count_exchanges(joined) == 0   # no shuffle either side
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")
 
 
 def test_label_centroid_no_vector_collect(spark):

@@ -12,9 +12,7 @@ from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.lexicon import broadcast_lexicon
 from ocr_proofreader_spark.operators import resume
 from ocr_proofreader_spark.operators.proofread import proofread
-from ocr_proofreader_spark.operators.resume import (ResumableRunner,
-                                                    bucket_col,
-                                                    resume_filter)
+from ocr_proofreader_spark.operators.resume import ResumableRunner, bucket_col
 from ocr_proofreader_spark.schemas import LINEAGE
 
 
@@ -186,19 +184,6 @@ def test_one_proofread_pass_per_wave(spark, corpus_small, base_lexicon,
         r6.run(docs, fail_after=3)
     assert len(calls) == 1
     assert len(r6.done_buckets()) == 3
-
-
-def test_resume_filter_anti_join(spark, corpus_small):
-    docs = spark.read.parquet(f"{corpus_small}/documents.parquet").limit(50)
-    done = spark.createDataFrame([(0,), (1,)], "partition_id int")
-    kept = resume_filter(docs, done, num_buckets=4)
-    remaining = (kept.withColumn("b", bucket_col(4))
-                 .select("b").distinct().collect())
-    assert {r["b"] for r in remaining} <= {2, 3}
-    total = docs.count()
-    dropped = (docs.withColumn("b", bucket_col(4))
-               .filter(F.col("b").isin([0, 1])).count())
-    assert kept.count() == total - dropped
 
 
 def test_hash_version_guard(spark, base_lexicon, tmp_path):

@@ -6,7 +6,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from ocr_proofreader_spark.operators import semistructured as ss
-from ocr_proofreader_spark.plans import physical as P
+import plan_shapes as P
 
 
 def test_xml_roundtrip_escaping_cases(spark):

@@ -95,7 +95,7 @@ def test_threshold_none_equals_union(spark, corpus_small, base_lexicon):
     """r6: chunk_threshold_spans=None (caller guarantees no doc reaches
     any threshold) must be byte-identical to the default fast+skew
     union, while planning zero exchanges and a single scan."""
-    from ocr_proofreader_spark.plans import physical as P
+    import plan_shapes as P
 
     docs = spark.read.parquet(f"{corpus_small}/documents.parquet")
     lex_bc = broadcast_lexicon(spark, base_lexicon)
@@ -119,7 +119,7 @@ def test_nspans_probe_drops_empty_skew_arm(spark, corpus_small,
     emptiness probe finds no doc over the threshold, the plan must be
     the fast path alone — no union arm, no chunked-branch scans — and
     byte-identical to the full union."""
-    from ocr_proofreader_spark.plans import physical as P
+    import plan_shapes as P
 
     docs = spark.read.parquet(f"{corpus_small}/documents.parquet")
     dst = str(tmp_path / "docs_nspans")

@@ -1,45 +1,6 @@
-"""Structured Streaming variant: AvailableNow + foreachBatch reuses the
-batch operator and produces identical spans."""
-
-import os
-import shutil
-
-from ocr_proofreader_spark.config import RunConfig
-from ocr_proofreader_spark.lexicon import broadcast_lexicon
-from ocr_proofreader_spark.operators.proofread import proofread_fast
-from ocr_proofreader_spark.streaming.proofread_stream import proofread_stream
-
-
-def _tuples(rows):
-    return {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
-                          for s in r["spans"]]
-            for r in rows}
-
-
-def test_stream_matches_batch(spark, corpus_small, base_lexicon, tmp_path):
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    shutil.copy(os.path.join(corpus_small, "documents.parquet"),
-                os.path.join(in_dir, "part-0.parquet"))
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    cfg = RunConfig()
-    lex_bc = broadcast_lexicon(spark, base_lexicon)
-
-    q = proofread_stream(spark, in_dir, out_dir, ckpt, cfg, lex_bc)
-    q.awaitTermination(180)
-
-    got = _tuples(spark.read.parquet(out_dir).collect())
-    batch = _tuples(
-        proofread_fast(spark.read.parquet(in_dir), lex_bc, cfg)
-        .drop("span_count", "corrections", "flagged").collect())
-    assert got == batch
-    assert len(got) == 300
-
-    # restart with same checkpoint: no new files -> no duplicate output
-    q2 = proofread_stream(spark, in_dir, out_dir, ckpt, cfg, lex_bc)
-    q2.awaitTermination(60)
-    assert spark.read.parquet(out_dir).count() == 300
+"""Structured Streaming operators (stateful sessionizing, watermarked
+windows and joins, streaming dedup, transformWithState): state and output
+are checked across micro-batches."""
 
 
 def test_stateful_sessionize_stream_across_batches(spark, tmp_path):
@@ -182,55 +143,6 @@ def test_dedup_stream_suppresses_across_microbatches(spark, tmp_path):
         F.md5("text").alias("h")).distinct().collect())
     assert got == expected                     # set equality AND no dup
     assert len(got) < docs.count()             # input really had dups
-
-
-def test_dedup_stream_bounded_state_with_watermark(spark, tmp_path):
-    """Bounded-state dedup (dropDuplicatesWithinWatermark): duplicates
-    inside the watermark window are suppressed across micro-batches,
-    and the state store holds only in-window hashes (bounded), not
-    every hash ever seen."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from ocr_proofreader_spark.streaming.dedup_stream import \
-        dedup_stream_bounded
-
-    src = "/root/testdata/sf0.001/documents.parquet"
-    if not os.path.exists(src):
-        pytest.skip("driver testdata missing")
-    base = spark.read.parquet(src)
-    # inject duplicates of the FIRST 100 docs: synthetic ingest_ts is
-    # doc_id-derived, so dup pairs share a timestamp — always inside
-    # any watermark window, suppression must be total
-    docs = base.unionByName(base.filter(F.col("doc_id") < 100))
-    multi = str(tmp_path / "docs_wm")
-    docs.repartition(4).write.parquet(multi)
-
-    out = dedup_stream_bounded(spark, multi, delay="24 hours",
-                               max_files_per_trigger=1)
-    got = sorted(r["content_hash"] for r in out.collect())
-    expected = sorted(r["h"] for r in docs.select(
-        F.md5("text").alias("h")).distinct().collect())
-    assert got == expected
-    assert len(got) < docs.count()
-
-    # boundedness is the operator's defining property: the streaming
-    # plan must carry the watermark + within-watermark dedup nodes
-    # (state evicted past the delay), not the unbounded dropDuplicates
-    from ocr_proofreader_spark.streaming.stateful import as_stream_dir
-    schema = base.schema
-    plan_df = (spark.readStream.schema(schema)
-               .parquet(as_stream_dir(multi))
-               .select(F.md5("text").alias("content_hash"),
-                       F.timestamp_seconds(F.lit(1_700_000_000))
-                       .alias("ingest_ts"))
-               .withWatermark("ingest_ts", "1 hour")
-               .dropDuplicatesWithinWatermark(["content_hash"]))
-    logical = plan_df._jdf.queryExecution().logical().toString()
-    assert "DeduplicateWithinWatermark" in logical
-    assert "EventTimeWatermark" in logical
 
 
 def test_tws_running_agg_processor_fold():

@@ -354,7 +354,7 @@ def test_group_quantiles_disc_vs_bruteforce(spark):
 
     from ocr_proofreader_spark.operators.relational import \
         group_quantiles_disc
-    from ocr_proofreader_spark.plans import physical as P
+    import plan_shapes as P
 
     rows = []
     vals_a = [1.00] * 10 + [2.00] * 5 + [3.50] * 3 + [9.99]
