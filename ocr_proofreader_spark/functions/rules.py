@@ -6,8 +6,19 @@ executors.  It is written independently from the slow pure-Python oracle
 (``oracle/refsem.py``); tests demand span-sequence equality between the two
 on every document (BASELINE.json:15).  Optimizations over the oracle:
 
-* (first-letter, length)-bucketed lexicon index -> candidate scans touch a
-  handful of words instead of the whole dictionary;
+* R4 candidate search in one of two exact arms, chosen per query by
+  comparing sizes (``DocProofreader._scorer_fix``):
+
+  - the *bucket scan* walks the lexicon's (first-letter, length +-2)
+    buckets, and is used while that span is no larger than the token's
+    edit neighbourhood (~2 * len * |alphabet| strings);
+  - the *neighbourhood arm* probes the token's plain-Levenshtein edits1
+    strings that keep its first letter against the base and book-frequent
+    words, and only when none hits scans the book's words of frequency
+    >= 3.  R4 accepts ``d == 1 or (d == 2 and f >= 3)``, so any d=1
+    candidate outranks every d=2 one and a d=2 winner must have f >= 3:
+    neither step depends on the lexicon's size;
+
 * per-document memoization -> each unique token is corrected once;
 * common-prefix/suffix stripping + banded DP for the distance<=2 check;
 * known-token fast path via a single set probe.
@@ -161,9 +172,16 @@ class LexIndex:
     per-doc memo miss only once per task lifetime instead of once per
     document (r6: ~15-20% off the rules chain; guide section 4.5, amortize
     per-task state).  Size-capped so a pathological cased-form flood
-    cannot grow it without bound."""
+    cannot grow it without bound.
 
-    __slots__ = ("base", "buckets", "known_hits")
+    ``spans[(first, L)]`` is how many base words an R4 bucket scan for a
+    token of first letter ``first`` and length ``L`` visits (the buckets
+    ``(first, L-2 .. L+2)``), and ``alphabet`` holds every character of
+    the base words.  ``DocProofreader._scorer_fix`` compares the two to
+    choose between the bucket scan and the neighbourhood arm, whose edit
+    strings draw their characters from ``alphabet``."""
+
+    __slots__ = ("base", "buckets", "spans", "alphabet", "known_hits")
     KNOWN_HITS_CAP = 1_000_000
 
     def __init__(self, base: frozenset):
@@ -175,6 +193,12 @@ class LexIndex:
             m1, m2 = char_masks(w)
             buckets.setdefault((w[0], len(w)), []).append((w, m1, m2))
         self.buckets = buckets
+        spans: dict[tuple[str, int], int] = {}
+        for (first, ln), lst in buckets.items():
+            for L in range(max(1, ln - 2), ln + 3):
+                spans[first, L] = spans.get((first, L), 0) + len(lst)
+        self.spans = spans
+        self.alphabet = "".join(sorted(set("".join(base))))
 
     def bucket_candidates(self, first: str, length: int):
         for ln in range(max(1, length - 2), length + 3):
@@ -198,8 +222,8 @@ class DocProofreader:
     themselves when None (the shuffle-free fast path), or injected by the
     chunked skew path where a chunk cannot see the whole book."""
 
-    __slots__ = ("lex", "freq_k", "freq", "_freq_buckets", "_memo",
-                 "corrections", "flagged")
+    __slots__ = ("lex", "freq_k", "freq", "_freq_buckets", "_neighbourhood",
+                 "_memo", "corrections", "flagged")
 
     def __init__(self, lex: LexIndex, freq_k: int = 5,
                  freq: dict[str, int] | None = None):
@@ -208,6 +232,8 @@ class DocProofreader:
         self.freq = freq if freq is not None else {}
         self._freq_buckets: dict[
             tuple[str, int], list[tuple[str, int, int]]] | None = None
+        self._neighbourhood: tuple[
+            set[str], str, dict[tuple[str, int], list[str]]] | None = None
         self._memo: dict[str, tuple[str, int, int]] = {}
         self.corrections = 0
         self.flagged = 0
@@ -252,6 +278,30 @@ class DocProofreader:
             lst = self._freq_buckets.get((first, ln))
             if lst:
                 yield from lst
+
+    def _neighbourhood_index(self):
+        """Per-doc state of the R4 neighbourhood arm, built on first use:
+        the book-frequent words (freq >= K, alphabetic, not in base), the
+        edit alphabet (the index's plus every character of those words),
+        and the words of freq >= 3 that are R4 candidates (in base, or
+        book-frequent), bucketed by (first, len)."""
+        if self._neighbourhood is None:
+            base = self.lex.base
+            k = self.freq_k
+            frequent: set[str] = set()
+            ge3: dict[tuple[str, int], list[str]] = {}
+            for w, c in self.freq.items():
+                if c < 3 and c < k:
+                    continue
+                if w not in base:
+                    if c < k or not ALPHA_RE.match(w):
+                        continue
+                    frequent.add(w)
+                if c >= 3:
+                    ge3.setdefault((w[0], len(w)), []).append(w)
+            alphabet = "".join(sorted(set(self.lex.alphabet).union(*frequent)))
+            self._neighbourhood = (frequent, alphabet, ge3)
+        return self._neighbourhood
 
     # -- R2 ------------------------------------------------------------------
 
@@ -305,6 +355,65 @@ class DocProofreader:
     # -- R4 ------------------------------------------------------------------
 
     def _scorer_fix(self, tok: str) -> str | None:
+        """R4: the best base or book-frequent word at distance <= 2 with
+        the same first letter, ranked by ``(d, -freq, |dlen|, cand)`` and
+        accepted iff ``d == 1 or (d == 2 and freq >= 3)``; recased.
+
+        Two arms give the same answer; this picks the cheaper one per
+        query by comparing sizes.  The bucket scan visits
+        ``lex.spans[(first, L)]`` words; the neighbourhood arm probes
+        about ``2 * L * |alphabet|`` edit strings.  The lexicon-only
+        bound is checked first, so a doc's alphabet is only extended with
+        its frequent words' characters when that bound already picks the
+        neighbourhood arm."""
+        t = tok.lower()
+        L = len(t)
+        span = self.lex.spans.get((t[0], L), 0)
+        if (span > 2 * L * len(self.lex.alphabet)
+                and span > 2 * L * len(self._neighbourhood_index()[1])):
+            return self._neighbourhood_fix(tok)
+        return self._scan_fix(tok)
+
+    def _neighbourhood_fix(self, tok: str) -> str | None:
+        """R4 by edit neighbourhood.  Step 1 probes every string one
+        plain-Levenshtein edit from the token (no transpositions: d is
+        Levenshtein) at positions >= 1, which are exactly the distance-1
+        strings that keep its first letter, against base and the
+        book-frequent words.  Any hit wins, since every d=1 candidate
+        outranks every d=2 one.  Step 2 runs only when none hits: a d=2
+        winner is accepted only at freq >= 3, so scanning the book's
+        freq >= 3 candidates finds it.  The alphabet covers every
+        character of base and of the frequent words, so no candidate is
+        missed."""
+        t = tok.lower()
+        frequent, alphabet, ge3 = self._neighbourhood_index()
+        base = self.lex.base
+        if t in base or t in frequent:
+            return None  # d = 0 ranks first and is never accepted
+        L = len(t)
+        freq = self.freq
+        splits = [(t[:i], t[i:]) for i in range(1, L + 1)]
+        edits = {a + b[1:] for a, b in splits[:-1]}
+        edits.update([a + c + b[1:] for a, b in splits[:-1]
+                      for c in alphabet])
+        edits.update([a + c + b for a, b in splits for c in alphabet])
+        hits = (edits & base) | (edits & frequent)
+        if hits:
+            return recase(min(hits, key=lambda w: (
+                -freq.get(w, 0), abs(len(w) - L), w)), tok)
+        first = t[0]
+        best_key = None
+        for ln in range(max(1, L - 2), L + 3):
+            for cand in ge3.get((first, ln), ()):
+                if dist_le2(t, cand) <= 2:  # no d <= 1 left: d == 2
+                    key = (-freq[cand], abs(ln - L), cand)
+                    if best_key is None or key < best_key:
+                        best_key = key
+        return None if best_key is None else recase(best_key[2], tok)
+
+    def _scan_fix(self, tok: str) -> str | None:
+        """R4 by bucket scan: every base and book-frequent word in the
+        token's (first, len +- 2) buckets, ranked by the full key."""
         t = tok.lower()
         first = t[0]
         L = len(t)

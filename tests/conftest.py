@@ -65,3 +65,20 @@ def base_lexicon() -> frozenset:
     from ocr_proofreader_spark.lexicon import load_base_lexicon
     from ocr_proofreader_spark.config import RunConfig
     return load_base_lexicon(RunConfig().lexicon_path)
+
+
+@pytest.fixture(scope="session")
+def md5_lexicon(base_lexicon) -> frozenset:
+    """The base lexicon plus md5-derived lowercase pseudo-words (lengths
+    3-10) up to 30 000 words: large enough that R4 picks the
+    neighbourhood arm for most tokens, unlike every fixture lexicon."""
+    import hashlib
+    words = set(base_lexicon)
+    k = 0
+    while len(words) < 30_000:
+        h = hashlib.md5(f"r4-lexicon-{k}".encode()).digest()
+        k += 1
+        n = 3 + h[0] % 8
+        words.add("".join("abcdefghijklmnopqrstuvwxyz"[b % 26]
+                          for b in h[1:1 + n]))
+    return frozenset(words)

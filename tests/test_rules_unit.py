@@ -1,8 +1,12 @@
 """Unit tests for the engine's rule implementations on plain Python data
 (no JVM) — SURVEY.md test 5.2-3."""
 
+import os
+import random
+
 from ocr_proofreader_spark.functions.rules import (DocProofreader, LexIndex,
                                                    TOKEN_RE, dist_le2, recase)
+from ocr_proofreader_spark.lexicon import load_base_lexicon
 
 LEX = LexIndex(frozenset(
     "the a of day beautiful some such fine house horse chapter part one two "
@@ -73,8 +77,8 @@ def test_book_frequent_word_becomes_known():
 
 
 def test_distance2_needs_freq3():
-    # 'wrds' -> 'words' is distance 2 wait: wrds->words insert o = 1.
-    # use 'wodrs' (transpose = distance 2): corrected only if freq >= 3
+    # 'wodrs' -> 'words' is a transposition, i.e. Levenshtein distance 2:
+    # corrected only if freq >= 3
     pr = _pr(freq={})
     assert pr.correct_token("wodrs") == "wodrs"
     assert pr.flagged == 1
@@ -89,7 +93,7 @@ def test_heading_regex_and_allcaps():
     assert DocProofreader.is_heading("THE GREAT FOREST", True, True)
     assert not DocProofreader.is_heading("THE GREAT FOREST", False, True)
     assert not DocProofreader.is_heading(
-        "A B C D E F G", True, True) or True  # 7 single-letter tokens
+        "A B C D E F G", True, True)  # 7 single-letter tokens
     assert not DocProofreader.is_heading("ONE TWO THREE FOUR FIVE SIX SEVEN",
                                          True, True)
 
@@ -128,3 +132,93 @@ def test_dist_le2_matches_reference_levenshtein():
         b = "".join(rng.choice("abcdef")
                     for _ in range(rng.randint(3, 10)))
         assert dist_le2(a, b) == lev(a, b), (a, b)
+
+
+# -- R4: bucket scan vs neighbourhood arm ------------------------------------
+
+FIXTURES = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "fixtures")
+
+
+def _edit(rng, w: str, alphabet: str) -> str:
+    """One random delete, substitute, insert or adjacent transposition."""
+    i = rng.randrange(len(w))
+    op = rng.randrange(4)
+    if op == 0 and len(w) > 1:
+        return w[:i] + w[i + 1:]
+    if op == 1:
+        return w[:i] + rng.choice(alphabet) + w[i + 1:]
+    if op == 3 and i + 1 < len(w):
+        return w[:i] + w[i + 1] + w[i] + w[i + 2:]
+    j = rng.randrange(len(w) + 1)
+    return w[:j] + rng.choice(alphabet) + w[j:]
+
+
+def _doc(rng, base: frozenset, words: list[str], alphabet: str):
+    """A book's freq map and its R4 query tokens.  The map holds base words
+    at counts 1-4 and 5-30, non-base near-misses at counts 1-12 (the
+    frequent ones use characters outside the lexicon's alphabet, so the
+    doc's edit alphabet must grow), and non-alphabetic frequent words,
+    which are never candidates.  Tokens are 1-2 random edits of base or
+    book words, in random case."""
+    freq = {}
+    for w in rng.sample(words, min(len(words), 120)):
+        freq[w] = rng.randint(1, 4) if rng.random() < 0.7 \
+            else rng.randint(5, 30)
+    extra = alphabet + "øßþæ"
+    for w in rng.sample(words, min(len(words), 60)):
+        nw = _edit(rng, w, extra)
+        if nw not in base:
+            freq[nw] = rng.choice((1, 2, 3, 4, 5, 7, 12))
+    freq["o'neil"] = 9
+    freq["x-ray"] = 6
+    pool = words[:] if len(words) < 400 else rng.sample(words, 400)
+    pool += [w for w in freq if w.isalpha()]
+    toks = []
+    for _ in range(250):
+        t = rng.choice(pool)
+        for _ in range(rng.randint(1, 2)):
+            t = _edit(rng, t, extra)
+        toks.append(rng.choice((t, t.capitalize(), t.upper())))
+    return freq, toks
+
+
+def test_r4_arms_agree(md5_lexicon):
+    """Both R4 arms, called directly, give the same ``_scorer_fix``
+    result (recase included) on 7 500 seeded tokens over the base, the
+    accented French and a 3*10^4-word md5 lexicon."""
+    lexicons = {
+        "base": load_base_lexicon(os.path.join(FIXTURES, "lexicon_base.txt")),
+        "fr": load_base_lexicon(os.path.join(FIXTURES, "lexicon_fr.txt")),
+        "md5": md5_lexicon}
+    rng = random.Random(8)
+    outcomes = {"d1": 0, "d2": 0, "none": 0}
+    for name, base in lexicons.items():
+        lex = LexIndex(base)
+        words = sorted(base)
+        for _ in range(10):
+            freq, toks = _doc(rng, base, words, lex.alphabet)
+            pr = DocProofreader(lex, freq_k=5, freq=freq)
+            for tok in toks:
+                got = pr._neighbourhood_fix(tok)
+                assert got == pr._scan_fix(tok), (name, tok)
+                if got is None:
+                    outcomes["none"] += 1
+                else:
+                    outcomes[f"d{dist_le2(tok.lower(), got.lower())}"] += 1
+    assert sum(outcomes.values()) == 7500
+    assert min(outcomes.values()) >= 500, outcomes
+
+
+def test_r4_inserts_apostrophe_and_hyphen(md5_lexicon):
+    """A base word reachable only by inserting ``'`` or ``-`` is found by
+    both arms, and the crossover sends these queries to the neighbourhood
+    arm, whose alphabet must therefore hold both characters."""
+    lex = LexIndex(md5_lexicon | {"o'clock", "well-born"})
+    pr = DocProofreader(lex, freq_k=5, freq={})
+    for tok, want in (("oclock", "o'clock"), ("wellborn", "well-born")):
+        assert [w for w in lex.base if dist_le2(tok, w) <= 1] == [want]
+        assert lex.spans[tok[0], len(tok)] > 2 * len(tok) * len(lex.alphabet)
+        assert pr._neighbourhood_fix(tok) == want
+        assert pr._scan_fix(tok) == want
+        assert pr._scorer_fix(tok) == want

@@ -58,3 +58,41 @@ def test_chunked_path_matches_fast_path(spark, corpus_small, base_lexicon):
     a = _spans_tuples(fast.collect())
     b = _spans_tuples(forced.collect())
     assert a == b
+
+
+def test_big_lexicon_matches_oracle_on_both_paths(spark, md5_lexicon,
+                                                  monkeypatch):
+    """Every fixture lexicon is small enough that R4's bucket scan always
+    wins the crossover; a 3*10^4-word lexicon sends R4 to the
+    neighbourhood arm.  The fast path and the chunked path must still
+    equal the oracle on 20 generated books."""
+    from fixtures.gen import CorpusGenerator
+    from ocr_proofreader_spark.functions.rules import DocProofreader, LexIndex
+    from ocr_proofreader_spark.schemas import DOCUMENTS_IN
+    from oracle.refsem import proofread_document
+
+    gen = CorpusGenerator(seed=42)
+    rows = [gen.gen_doc(i, validate=False)[:2] for i in range(20)]
+
+    arms = {"_neighbourhood_fix": 0, "_scan_fix": 0}
+    for name in arms:
+        def counted(self, tok, _name=name, _fn=getattr(DocProofreader, name)):
+            arms[_name] += 1
+            return _fn(self, tok)
+        monkeypatch.setattr(DocProofreader, name, counted)
+    idx = LexIndex(md5_lexicon)
+    for _, spans in rows:
+        DocProofreader(idx, freq_k=gen.freq_k).run(spans)
+    monkeypatch.undo()
+    assert arms["_neighbourhood_fix"] > 10 * arms["_scan_fix"], arms
+
+    expected = {}
+    for doc_id, spans in rows:
+        out, _ = proofread_document(spans, md5_lexicon, gen.freq_k)
+        expected[doc_id] = [(s["kind"], s["text"], s["media_ref"], s["order"])
+                            for s in out]
+    docs = spark.createDataFrame(rows, DOCUMENTS_IN)
+    lex_bc = broadcast_lexicon(spark, md5_lexicon)
+    for cfg in (RunConfig(), RunConfig(chunk_threshold_spans=0)):
+        got = _spans_tuples(proofread(spark, docs, cfg, lex_bc).collect())
+        assert got == expected, cfg
