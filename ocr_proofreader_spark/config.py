@@ -14,8 +14,9 @@ class RunConfig:
     (mapInPandas per doc); ``rebalance_partitions`` only adds a hash
     repartition on doc_id when the input scan is narrower than the
     session parallelism; docs longer than ``chunk_threshold_spans`` take
-    the chunked skew path (distributed word_freq, then span-parallel
-    correction after ``repartition(n, doc_id, offset)``) instead of a
+    the chunked skew path (distributed word_freq, then chunk-parallel
+    correction: each book sliced into ``spark.sql.shuffle.partitions``
+    chunk rows, spread by a round-robin ``repartition(n)``) instead of a
     single task.
     """
 

@@ -558,11 +558,24 @@ class DocProofreader:
         return text.split("\n")
 
     def correct_span(self, text: str) -> str:
-        """R2 hyphen repair, then the token pass, over one text span:
-        span-local given the book's ``freq`` (rule R0), so the skew path
-        runs it on a giant book's spans in many tasks."""
+        """R2 hyphen repair, then the token pass, over one text span."""
         return "\n".join(self.correct_lines(
             self.repair_hyphenation(text.split("\n"))))
+
+    def correct(self, spans) -> list[dict]:
+        """R2-R4 over every non-media span with non-blank text, in any
+        order -> span dicts kind/text/media_ref/offset.  Span-local
+        given the book's ``freq`` (rule R0), so the skew path runs it on
+        a giant book's chunks in many tasks."""
+        out = []
+        for sp in spans:
+            text = sp["text"]
+            if sp["kind"] != "media" and text and text.strip():
+                text = self.correct_span(text)
+            out.append({"kind": sp["kind"], "text": text,
+                        "media_ref": sp["media_ref"],
+                        "offset": sp["offset"]})
+        return out
 
     # -- R5/R6 segmentation -----------------------------------------------------
 
@@ -577,8 +590,8 @@ class DocProofreader:
 
     @staticmethod
     def segment(spans) -> list[tuple[str, str, str, int]]:
-        """R5/R6 over one doc's corrected spans, given as (kind, text,
-        media_ref) in offset order -> (kind, text, media_ref, order)."""
+        """R5/R6 over one doc's corrected spans (kind/text/media_ref
+        mappings) in offset order -> (kind, text, media_ref, order)."""
         out: list[tuple[str, str, str, int]] = []
         para: list[str] = []
         deferred: list[str] = []
@@ -595,7 +608,8 @@ class DocProofreader:
                     emit("media", "", ref)
                 deferred.clear()
 
-        for kind, text, media_ref in spans:
+        for sp in spans:
+            kind, text, media_ref = sp["kind"], sp["text"], sp["media_ref"]
             if kind == "media":
                 if para:
                     deferred.append(media_ref or "")
@@ -643,10 +657,4 @@ class DocProofreader:
         spans = sorted(spans, key=lambda s: s["offset"])
         if not self.freq:
             self.count_freq(spans)
-        corrected = []
-        for sp in spans:
-            text = sp["text"]
-            if sp["kind"] != "media" and text and text.strip():
-                text = self.correct_span(text)
-            corrected.append((sp["kind"], text, sp["media_ref"]))
-        return self.segment(corrected), len(spans)
+        return self.segment(self.correct(spans)), len(spans)

@@ -9,18 +9,19 @@ Two physical strategies behind one logical operator:
   this is the property that matters: throughput scales linearly with
   executors because no stage exchanges data.
 
-* **Skew path** (very long books, BASELINE.json:6): spans are exploded and
-  corrected in parallel across the cluster (corrections are span-local,
-  rule R0), with the per-book word-frequency map built by a distributed
-  groupBy and broadcast-joined back to the spans; only the cheap, linear
-  R5/R6 segmentation runs per-doc.  Shuffles touch only the rare giant
-  books, never the bulk of the data.
+* **Skew path** (very long books, BASELINE.json:6): each book is sliced
+  into chunk rows that the fast path's correction loop corrects in
+  parallel (corrections are span-local given the book's frequency map,
+  rule R0, which a distributed groupBy builds and broadcast-joins onto
+  the chunks); only the cheap, linear R5/R6 segmentation runs per-doc.
+  Shuffles touch only the rare giant books, never the bulk of the data.
 
 Input docs may carry extra columns; only (doc_id, spans) are consumed.
 """
 
 from __future__ import annotations
 
+from itertools import repeat
 from typing import Iterator
 
 import pandas as pd
@@ -33,18 +34,12 @@ from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.functions.rules import DocProofreader
 from ocr_proofreader_spark.operators.word_freq import word_freq
 from ocr_proofreader_spark.partitioning import spread_input
-from ocr_proofreader_spark.schemas import DOCUMENTS_OUT_METRICS
+from ocr_proofreader_spark.schemas import (DOCUMENTS_IN,
+                                           DOCUMENTS_OUT_METRICS)
 
-# chunked-path intermediate schemas
-_CORRECTED_SPAN = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("offset", T.IntegerType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("media_ref", T.StringType(), True),
-    T.StructField("corrections", T.IntegerType(), False),
-    T.StructField("flagged", T.IntegerType(), False),
-])
+# skew-path chunk rows: a slice of one book's spans + its R2-R4 counts
+_CORRECTED_CHUNK = T.StructType(DOCUMENTS_IN.fields + [
+    DOCUMENTS_OUT_METRICS["corrections"], DOCUMENTS_OUT_METRICS["flagged"]])
 
 
 def _out_pdf(rows: list) -> pd.DataFrame:
@@ -57,18 +52,20 @@ def _span_dicts(out: list) -> list[dict]:
             for k, t, m, o in out]
 
 
+def _langs(pdf: pd.DataFrame):
+    return pdf["lang"] if "lang" in pdf.columns else repeat(None)
+
+
 def _make_fast_fn(lex_bc, freq_k: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            langs = pdf["lang"] if "lang" in pdf.columns else None
             rows = []
-            for i, (doc_id, spans) in enumerate(zip(pdf["doc_id"],
-                                                    pdf["spans"])):
+            for doc_id, spans, lang in zip(pdf["doc_id"], pdf["spans"],
+                                           _langs(pdf)):
                 # per-doc lexicon select: a cached-index dict probe, so
                 # multilingual batches cost the same as monolingual ones
-                idx = lexmod.get_index(
-                    lex_bc, langs.iloc[i] if langs is not None else None)
-                pr = DocProofreader(idx, freq_k=freq_k)
+                pr = DocProofreader(lexmod.get_index(lex_bc, lang),
+                                    freq_k=freq_k)
                 out, n_in = pr.run(spans)
                 rows.append((doc_id, _span_dicts(out), n_in,
                              pr.corrections, pr.flagged))
@@ -104,45 +101,35 @@ def proofread_fast(docs: DataFrame, lex_bc, cfg: RunConfig) -> DataFrame:
 
 
 def _make_correct_fn(lex_bc, freq_k: int):
-    """Span-local correction (R1-R4) with an injected per-doc freq map."""
+    """R2-R4 over one chunk row of a giant book, given the book's freq
+    map (rule R0): one ``DocProofreader`` per chunk."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        readers: dict[str, DocProofreader] = {}
         for pdf in batches:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                if row.kind != "text" or not row.text:
-                    out_rows.append((row.doc_id, row.offset, row.kind,
-                                     row.text, row.media_ref, 0, 0))
-                    continue
-                pr = readers.get(row.doc_id)
-                if pr is None:
-                    freq = dict(zip(row.freq_words, row.freq_counts)) \
-                        if row.freq_words is not None else {}
-                    idx = lexmod.get_index(lex_bc,
-                                           getattr(row, "lang", None))
-                    pr = DocProofreader(idx, freq_k=freq_k, freq=freq)
-                    readers[row.doc_id] = pr
-                c0, f0 = pr.corrections, pr.flagged
-                out_rows.append((row.doc_id, row.offset, "text",
-                                 pr.correct_span(row.text), row.media_ref,
-                                 pr.corrections - c0, pr.flagged - f0))
-            yield pd.DataFrame(out_rows, columns=[
-                "doc_id", "offset", "kind", "text", "media_ref",
-                "corrections", "flagged"])
+            rows = []
+            for doc_id, spans, lang, words, counts in zip(
+                    pdf["doc_id"], pdf["spans"], _langs(pdf),
+                    pdf["freq_words"], pdf["freq_counts"]):
+                freq = dict(zip(words, counts)) if words is not None else {}
+                pr = DocProofreader(lexmod.get_index(lex_bc, lang),
+                                    freq_k=freq_k, freq=freq)
+                rows.append((doc_id, pr.correct(spans), pr.corrections,
+                             pr.flagged))
+            yield pd.DataFrame(rows, columns=["doc_id", "spans",
+                                              "corrections", "flagged"])
     return fn
 
 
 def _make_segment_fn():
-    """Per-doc R5/R6 segmentation over already-corrected spans.
+    """Per-doc R5/R6 segmentation over a doc's corrected chunks.
 
     Runs as grouped applyInPandas: cheap linear string work, no spell
     scoring — acceptable as one task even for a giant book."""
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset")
-        out = DocProofreader.segment(
-            zip(pdf["kind"], pdf["text"], pdf["media_ref"]))
+        spans = sorted((sp for chunk in pdf["spans"] for sp in chunk),
+                       key=lambda sp: sp["offset"])
+        out = DocProofreader.segment(spans)
         return _out_pdf([(pdf["doc_id"].iloc[0], _span_dicts(out),
-                          len(pdf),
+                          len(spans),
                           int(pdf["corrections"].sum()),
                           int(pdf["flagged"].sum()))])
     return fn
@@ -159,22 +146,20 @@ def proofread_chunked(spark: SparkSession, docs: DataFrame, lex_bc,
 
 def chunked_corrected_spans(spark: SparkSession, docs: DataFrame, lex_bc,
                             cfg: RunConfig) -> DataFrame:
-    """The distributed CORRECTION stage of the skew path: explode to
-    spans, build per-book frequencies JVM-side, broadcast-join the freq
-    maps, spread spans across the cluster on (doc_id, offset) and
-    correct span-locally.  Exposed separately so tests can pin that a
-    giant book's expensive spell-scoring work really does fan out over
-    many tasks (only the cheap linear R5/R6 segmentation in
-    :func:`proofread_chunked` runs as one task per doc)."""
-    lang_cols = ([F.col("lang")] if "lang" in docs.columns else [])
-    spans = docs.select(
-        "doc_id", *lang_cols,
-        F.posexplode("spans").alias("idx", "span")).select(
-        "doc_id", *lang_cols,
-        F.col("span.offset").alias("offset"),
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"))
+    """The distributed CORRECTION stage of the skew path: slice each
+    book JVM-side into ``spark.sql.shuffle.partitions`` chunk rows,
+    broadcast-join the per-book freq maps onto the chunks, spread the
+    chunks round-robin and correct each chunk in its own task.  The map
+    crosses the shuffle and the Arrow boundary once per chunk.  Exposed
+    separately so tests can pin that a giant book's spell-scoring work
+    fans out over many tasks (only the cheap linear R5/R6 segmentation
+    in :func:`proofread_chunked` runs as one task per doc)."""
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    step = f"cast(ceil(size(spans) / {n_part}) as int)"
+    chunks = docs.select(
+        "doc_id", *(["lang"] if "lang" in docs.columns else []),
+        F.explode(F.expr(f"transform(sequence(1, size(spans), {step}), "
+                         f"i -> slice(spans, i, {step}))")).alias("spans"))
 
     # distributed per-book word frequencies over RAW text (S10
     # semantics): the derived word_freq table, tokenized JVM-side
@@ -182,14 +167,13 @@ def chunked_corrected_spans(spark: SparkSession, docs: DataFrame, lex_bc,
                  .agg(F.collect_list("word").alias("freq_words"),
                       F.collect_list("freq").alias("freq_counts")))
 
-    # broadcast-join the (few) giant books' freq maps onto their spans,
-    # spread spans across the cluster, correct span-locally
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (spans
+    # keyless round-robin: one book's chunks land one per partition;
+    # placement cannot change the output
+    return (chunks
             .join(F.broadcast(freq_maps), "doc_id", "left")
-            .repartition(n_part, "doc_id", "offset")
+            .repartition(n_part)
             .mapInPandas(_make_correct_fn(lex_bc, cfg.freq_k),
-                         _CORRECTED_SPAN))
+                         _CORRECTED_CHUNK))
 
 
 # --------------------------------------------------------------------------

@@ -73,6 +73,14 @@ def test_big_lexicon_matches_oracle_on_both_paths(spark, md5_lexicon,
 
     gen = CorpusGenerator(seed=42)
     rows = [gen.gen_doc(i, validate=False)[:2] for i in range(20)]
+    # a non-media span of a kind other than "text" is corrected too
+    rows.append(("caption-1", [
+        {"kind": "text", "text": "A picture of a fox.", "media_ref": "",
+         "offset": 0},
+        {"kind": "media", "text": "", "media_ref": "img/fox.png",
+         "offset": 1},
+        {"kind": "caption", "text": "the qvick brown fox", "media_ref": "",
+         "offset": 2}]))
 
     arms = {"_neighbourhood_fix": 0, "_scan_fix": 0}
     for name in arms:
@@ -96,3 +104,5 @@ def test_big_lexicon_matches_oracle_on_both_paths(spark, md5_lexicon,
     for cfg in (RunConfig(), RunConfig(chunk_threshold_spans=0)):
         got = _spans_tuples(proofread(spark, docs, cfg, lex_bc).collect())
         assert got == expected, cfg
+        assert "the quick brown fox" in " ".join(
+            t for _, t, _, _ in got["caption-1"]), cfg
