@@ -30,20 +30,26 @@ No Spark imports here: the module is picklable into Python workers and unit
 from __future__ import annotations
 
 import re
+from itertools import chain
 
 # --- R1 tokenization (identical character classes to the frozen spec) -----
-TOKEN_RE = re.compile(r"[A-Za-zÀ-ÿ0-9'’-]+")
+# The only spelling of the alphabetic and token classes in the engine: the
+# JVM-side tokenizer (operators/word_freq.py) builds its Java regexes from
+# these strings, which mean the same in Python and Java.
+ALPHA_CLASS = "A-Za-zÀ-ÿ"
+TOKEN_CLASS = ALPHA_CLASS + "0-9'’-"
+TOKEN_RE = re.compile(f"[{TOKEN_CLASS}]+")
 # capturing variant: re.split(line) alternates passthrough / token parts
 # (odd indices are tokens) — one C-level call replaces the per-match
 # finditer + group/start/end bookkeeping in the hottest loop
-TOKEN_SPLIT_RE = re.compile(r"([A-Za-zÀ-ÿ0-9'’-]+)")
-ALPHA_RE = re.compile(r"[A-Za-zÀ-ÿ]+\Z")
-HAS_LETTER_RE = re.compile(r"[A-Za-zÀ-ÿ]")
+TOKEN_SPLIT_RE = re.compile(f"([{TOKEN_CLASS}]+)")
+ALPHA_RE = re.compile(rf"[{ALPHA_CLASS}]+\Z")
+HAS_LETTER_RE = re.compile(f"[{ALPHA_CLASS}]")
 LOWER_RE = re.compile(r"[a-zà-ÿ]")
 UPPER_RE = re.compile(r"[A-ZÀ-Þ]")
 
-HYPHEN_TAIL_RE = re.compile(r"([A-Za-zÀ-ÿ]+)-\Z")
-WORD_HEAD_RE = re.compile(r"[A-Za-zÀ-ÿ]+")
+HYPHEN_TAIL_RE = re.compile(rf"([{ALPHA_CLASS}]+)-\Z")
+WORD_HEAD_RE = re.compile(f"[{ALPHA_CLASS}]+")
 
 LIG_TRANSLATE = str.maketrans({
     "ﬁ": "fi", "ﬂ": "fl", "ﬀ": "ff", "ﬃ": "ffi", "ﬄ": "ffl", "ſ": "s"})
@@ -425,18 +431,8 @@ class DocProofreader:
         # can never reach distance <= 2 — skips the DP for the vast
         # majority of the bucket
         t1, t2 = char_masks(t)
-        for cand, c1, c2 in self.lex.bucket_candidates(first, L):
-            if ((t1 & ~c1).bit_count() + (t2 & ~c2).bit_count() > 2
-                    or (c1 & ~t1).bit_count()
-                    + (c2 & ~t2).bit_count() > 2):
-                continue
-            d = dist_le2(t, cand)
-            if d > 2:
-                continue
-            key = (d, -freq.get(cand, 0), abs(len(cand) - L), cand)
-            if best_key is None or key < best_key:
-                best_key, best_cand = key, cand
-        for cand, c1, c2 in self._frequent_candidates(first, L):
+        for cand, c1, c2 in chain(self.lex.bucket_candidates(first, L),
+                                  self._frequent_candidates(first, L)):
             if ((t1 & ~c1).bit_count() + (t2 & ~c2).bit_count() > 2
                     or (c1 & ~t1).bit_count()
                     + (c2 & ~t2).bit_count() > 2):

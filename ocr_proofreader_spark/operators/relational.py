@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ocr_proofreader_spark.functions.sql_exprs import R1_TOKENS_LOWER
+from ocr_proofreader_spark.operators.word_freq import r1_words
 
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
@@ -48,9 +48,7 @@ def region_revenue(region: DataFrame, nation: DataFrame,
 def top_words_per_lang(docs: DataFrame, k: int = 5) -> DataFrame:
     """Window rank over an aggregation: top-k words by count per lang
     (ties broken lexicographically for determinism)."""
-    counts = (docs
-              .select("lang", F.explode(F.expr(
-                  R1_TOKENS_LOWER.format(col="text"))).alias("word"))
+    counts = (r1_words(docs, "text", "lang")
               .groupBy("lang", "word").agg(F.count("*").alias("cnt")))
     w = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("word"))
     return (counts

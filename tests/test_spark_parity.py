@@ -81,6 +81,11 @@ def test_big_lexicon_matches_oracle_on_both_paths(spark, md5_lexicon,
          "offset": 1},
         {"kind": "caption", "text": "the qvick brown fox", "media_ref": "",
          "offset": 2}]))
+    # the Kelvin sign (U+212A) is an R1 delimiter: the book's frequent
+    # word is "zorb", so "kzorp" has no d=1 book-frequent candidate
+    rows.append(("kelvin-1", [
+        {"kind": "text", "text": "\u212azorb " * 5 + "kzorp",
+         "media_ref": "", "offset": 0}]))
 
     arms = {"_neighbourhood_fix": 0, "_scan_fix": 0}
     for name in arms:
