@@ -78,8 +78,9 @@ def curate(spark: SparkSession, docs: DataFrame,
 
     # 3. near-duplicate DOCUMENT removal: MinHash-LSH candidate pairs
     #    -> connected components -> keep the cluster representative.
-    #    dedup_clusters only emits rows for docs IN some cluster;
-    #    docs with no near-dup at all survive via the anti-join.
+    #    dedup_clusters emits one row per doc (a doc with no near-dup
+    #    is its own cluster and keeper); the anti-join drops the
+    #    non-keepers.
     clusters = ops.dedup_clusters(deduped_lines)
     losers = clusters.filter(~F.col("is_keeper")).select("doc_id")
     unique_docs = deduped_lines.join(losers, "doc_id", "left_anti") \

@@ -2,8 +2,8 @@
 
 Unit of replay = a deterministic hash bucket of doc_id (stable across runs
 and cluster sizes).  Unit of execution = a *wave*: the pending buckets, in
-ascending order, split into groups of ``ceil(sqrt(num_buckets))``.  Per
-wave:
+ascending order, split into at most ``ceil(sqrt(num_buckets))`` groups (see
+the cost model below).  Per wave:
 
 1. proofread the wave's docs in one pass (full cluster parallelism),
 2. write it once with ``partitionBy("bucket")`` to
@@ -16,18 +16,27 @@ wave:
 
 A killed job leaves unfinished buckets markerless; on restart with the same
 output root, only markerless buckets replay (exactly-once at bucket level —
-the rules are deterministic, so a replay is byte-identical).  On Iceberg the
-same protocol rides on snapshot commits instead of directory renames
-(SURVEY.md section 3.3); the job writes plain parquet, so the local-FS
-rename here is the commit.
+the rules are deterministic, so a replay is byte-identical), and the dead
+run's uncommitted wave output under ``_tmp/`` is deleted before the first
+wave.  On Iceberg the same protocol rides on snapshot commits instead of
+directory renames (SURVEY.md section 3.3); the job writes plain parquet, so
+the local-FS rename here is the commit.
 
-Cost model, B buckets and wave size W: a run scans the input ``B / W``
-times and a crash loses at most one wave's work, ``W / B`` of the run.
-``W = 1`` scans B times, ``W = B`` scans once but a crash loses the
-whole run; ``W = ceil(sqrt(B))`` balances the two at about sqrt(B)
-scans and 1/sqrt(B) of the run lost.  The wave filter ``_bucket IN (...)`` is md5 of
-doc_id, so it still prunes nothing unless the input is stored bucketed
-by the same hash: each wave decodes the whole input.
+Cost model, B buckets in N waves: a run scans the input N times (the wave
+filter ``_bucket IN (...)`` is md5 of doc_id, so it prunes nothing unless
+the input is stored bucketed by the same hash: each wave decodes the whole
+input) and a crash loses at most one wave's work, ``1 / N`` of the run.
+N is sized from the input: one *round of splits* is what the cluster reads
+at once, ``defaultParallelism * spark.sql.files.maxPartitionBytes`` bytes,
+and ``N = clamp(ceil(input_bytes / round), 1, ceil(sqrt(B)))`` with
+``input_bytes`` the optimized plan's ``sizeInBytes`` (for a file scan, the
+listed files' total size).  A crash therefore loses at most the larger of
+1/sqrt(B) of the run and one round of splits.  An input smaller than one
+round runs every pending bucket in one wave and scans once; a large input
+keeps sqrt(B) scans and the 1/sqrt(B) loss bound, where ``N = 1`` would
+lose the whole run and ``N = B`` would scan B times.  An input Spark
+cannot size (``sizeInBytes`` unknown, reported as ``Long.MaxValue``)
+also gets sqrt(B) waves.
 
 Lineage rows are written from the driver with pyarrow, one small parquet
 file per committed bucket under a hidden name renamed into place — no
@@ -85,6 +94,17 @@ def bucket_col(num_buckets: int):
     h = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
                 16, 10).cast("bigint"))
     return F.pmod(h, F.lit(num_buckets)).cast("int")
+
+
+def _counts(b: int) -> str:
+    """SQL aggregate of bucket b's lineage counts, a struct of
+    ``doc_count`` and ``METRICS``.  A wave's observation is one SQL
+    expression, not four Columns per bucket: a one-wave run observes
+    every bucket, and building 4 x 256 Columns through py4j took 7-14 s
+    on 4 cores, longer than a whole 300-doc run at 16 buckets."""
+    sums = "".join(f", '{m}', coalesce(sum(if(bucket = {b}, {m}, 0)), 0)"
+                   for m in METRICS)
+    return f"named_struct('doc_count', count_if(bucket = {b}){sums})"
 
 
 class ResumableRunner:
@@ -158,7 +178,9 @@ class ResumableRunner:
         pending = sorted(set(range(cfg.num_buckets)) - self.done_buckets())
         prior = self._prior_attempts()
         bucketed = docs.withColumn("_bucket", bucket_col(cfg.num_buckets))
-        size = math.ceil(math.sqrt(cfg.num_buckets))
+        size = math.ceil(cfg.num_buckets / self._num_waves(docs))
+        # scratch of dead runs: uncommitted wave output nothing will read
+        shutil.rmtree(os.path.join(self.out_root, "_tmp"), ignore_errors=True)
         tmp_root = os.path.join(self.out_root, "_tmp", cfg.run_id)
         committed = 0
 
@@ -191,6 +213,16 @@ class ResumableRunner:
                 committed += 1
         shutil.rmtree(tmp_root, ignore_errors=True)
 
+    def _num_waves(self, docs: DataFrame) -> int:
+        """Waves for a run over ``docs``: one per round of input splits,
+        at least 1 and at most ``ceil(sqrt(num_buckets))``."""
+        plan = docs._jdf.queryExecution().optimizedPlan()
+        round_bytes = (self.spark.sparkContext.defaultParallelism
+                       * self.spark._jsparkSession.sessionState().conf()
+                       .filesMaxPartitionBytes())
+        waves = math.ceil(int(plan.stats().sizeInBytes()) / round_bytes)
+        return max(1, min(waves, math.ceil(math.sqrt(self.cfg.num_buckets))))
+
     def _write_wave(self, bucketed: DataFrame, wave: list[int],
                     wave_dir: str) -> dict[int, dict[str, int]]:
         """One proofread pass over the wave's buckets, one partitioned
@@ -200,18 +232,12 @@ class ResumableRunner:
         part = bucketed.filter(F.col("_bucket").isin(wave)).drop("_bucket")
         out = (proofread(self.spark, part, cfg, self.lex_bc)
                .withColumn("bucket", bucket_col(cfg.num_buckets)))
-        aggs = []
-        for b in wave:
-            hit = F.col("bucket") == b
-            aggs.append(F.count(F.when(hit, 1)).alias(f"doc_count_{b}"))
-            aggs += [F.coalesce(F.sum(F.when(hit, F.col(m))), F.lit(0))
-                     .alias(f"{m}_{b}") for m in METRICS]
         obs = Observation()
-        (out.observe(obs, *aggs).drop(*METRICS)
+        (out.observe(obs, F.expr(f"array({', '.join(map(_counts, wave))})")
+                     .alias("counts"))
+         .drop(*METRICS)
          .write.mode("overwrite").partitionBy("bucket").parquet(wave_dir))
-        row = obs.get
-        return {b: {m: int(row[f"{m}_{b}"])
-                    for m in ("doc_count",) + METRICS} for b in wave}
+        return {b: r.asDict() for b, r in zip(wave, obs.get["counts"])}
 
     def _commit(self, b: int, src: str) -> None:
         """Move bucket b's wave output to ``data/bucket=<b>``.  An empty

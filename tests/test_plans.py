@@ -366,6 +366,38 @@ def test_minhash_candidates_no_hot_bucket_window(spark):
     assert "LeftAnti" in plan
 
 
+def test_minhash_self_join_broadcasts_without_hint(spark, tmp_path):
+    """The LSH self-join carries no broadcast hint: on a small signature
+    table the planner picks a broadcast hash join from its size, and with
+    broadcasting off (a table past the threshold at scale) it falls back
+    to a sort-merge join instead of failing or collecting to the
+    driver."""
+    from ocr_proofreader_spark.operators import training_ops as ops
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 3} jumps over the lazy dog")
+         for i in range(6)], "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)  # a file scan: its size is known
+
+    def self_join(plan: str) -> str:
+        [line] = [ln for ln in plan.splitlines() if "Inner" in ln]
+        return line
+
+    assert "BroadcastHashJoin" in self_join(
+        P.physical_plan(ops.minhash_candidates(docs)))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = P.physical_plan(ops.minhash_candidates(docs))
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in self_join(plan)
+    # the over-cap blacklist keeps its broadcast hint either way
+    assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
+
+
 def test_n_spans_column_prunes_branch_scans(spark, corpus_small,
                                             base_lexicon, tmp_path):
     """The fast/skew split normally needs size(spans), which no parquet

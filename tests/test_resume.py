@@ -64,8 +64,8 @@ def test_kill_and_resume(spark, corpus_small, base_lexicon, tmp_path):
     assert sum(r["doc_count"] for r in lineage) == 80
     assert sum(r["corrections"] for r in lineage) > 0
 
-    # a successful run leaves no scratch behind
-    assert not os.path.exists(os.path.join(out_root, "_tmp", "r2"))
+    # a successful run leaves no scratch behind, its own or the dead run's
+    assert os.listdir(os.path.join(out_root, "_tmp")) == []
 
 
 @pytest.mark.parametrize("n_docs,num_buckets", [(1, 8), (0, 4)])
@@ -157,8 +157,10 @@ def test_lineage_format_compat(spark, corpus_small, base_lexicon, tmp_path):
 
 def test_one_proofread_pass_per_wave(spark, corpus_small, base_lexicon,
                                      tmp_path, monkeypatch):
-    """Pending buckets run in waves of ceil(sqrt(num_buckets)), one
-    proofread() per wave; fail_after still counts committed buckets."""
+    """One proofread() per wave: an input smaller than one round of
+    splits (defaultParallelism x maxPartitionBytes) runs every bucket in
+    one wave, a larger one in ceil(sqrt(num_buckets)) waves; fail_after
+    still counts committed buckets."""
     calls = []
 
     def counting(*args, **kwargs):
@@ -170,9 +172,27 @@ def test_one_proofread_pass_per_wave(spark, corpus_small, base_lexicon,
             .limit(40).cache())
     lex_bc = broadcast_lexicon(spark, base_lexicon)
 
-    r16 = ResumableRunner(spark, str(tmp_path / "b16"),
-                          RunConfig(run_id="r", num_buckets=16), lex_bc)
-    r16.run(docs)
+    def run16(name: str) -> ResumableRunner:
+        calls.clear()
+        r = ResumableRunner(spark, str(tmp_path / name),
+                            RunConfig(run_id="r", num_buckets=16), lex_bc)
+        r.run(docs)
+        return r
+
+    r16 = run16("one_round")
+    assert len(calls) == 1
+    assert r16.done_buckets() == set(range(16))
+    assert r16.read_output().count() == 40
+
+    # 100-byte splits: the 40 docs span more than 4 rounds on the
+    # session's 4 cores, so the wave count stops at ceil(sqrt(16)) = 4
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100b")
+    try:
+        r16 = run16("many_rounds")
+    finally:
+        spark.conf.set(key, old)
     assert len(calls) == 4
     assert r16.done_buckets() == set(range(16))
     assert r16.read_output().count() == 40
