@@ -1014,13 +1014,11 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # NATIVE session_window + watermark sessionizer (late-data-
         # tolerant production form of sessionize_stream_closed)
         "session_window_stream": _session_window_stream,
-        # custom stateful running aggregate — transformWithStateInPandas
-        # where the state-server protocol can start (google.protobuf),
-        # else the protobuf-free applyInPandasWithState twin; the
-        # monotone-counter contract makes both equal the batch groupBy
+        # custom stateful running aggregate (applyInPandasWithState);
+        # the monotone-counter contract makes it equal the batch groupBy
         "user_totals_stream": lambda s, d: __import__(
-            "ocr_proofreader_spark.streaming.tws_agg",
-            fromlist=["user_totals_stream_auto"]).user_totals_stream_auto(
+            "ocr_proofreader_spark.streaming.stateful",
+            fromlist=["user_totals_stream"]).user_totals_stream(
                 s, os.path.join(d, "events.parquet"),
                 max_files_per_trigger=1),
         # STREAM-STATIC broadcast dimension enrichment (stateless)
@@ -1417,7 +1415,7 @@ def _extra_oracles() -> dict[str, str]:
                    CAST(NULL AS BIGINT)
             FROM unmatched u, wm
             WHERE u.t1 + INTERVAL 30 MINUTE < wm.w""",
-        # twin of tws_agg.user_totals_stream(_auto): the monotone-
+        # twin of stateful.user_totals_stream: the monotone-
         # counter emission rule means the max_by-selected final row per
         # user equals the plain batch rollup whatever the micro-batch
         # slicing; total_value rounded after selection on both sides

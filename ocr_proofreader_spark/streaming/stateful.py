@@ -1,19 +1,28 @@
-"""Custom stateful streaming operator: gap-based sessionization with
-``applyInPandasWithState``.
+"""Custom stateful streaming operators on ``applyInPandasWithState``,
+plus the one file-stream reader and the one AvailableNow sink every
+operator in ``streaming/`` shares.
 
-The batch engine sessionizes with lag + cumulative sum
-(operators/relational.py::sessionize); the streaming twin keeps one open
-session per user in Spark state and EMITS a session the moment a later
-event closes it (gap > 30 min).  Open sessions stay in state, so the
-operator's output is exactly the *closed* sessions — a semantics that is
-SQL-expressible over a finite input (all sessions but each user's last),
-which gives this streaming operator a bit-exact DuckDB oracle.
+``sessionize_stream`` is the streaming twin of the batch sessionizer
+(operators/relational.py::sessionize, lag + cumulative sum): it keeps
+one open session per user in Spark state and EMITS a session the moment
+a later event closes it (gap > 30 min).  Open sessions stay in state, so
+the operator's output is exactly the *closed* sessions — a semantics
+that is SQL-expressible over a finite input (all sessions but each
+user's last), which gives this streaming operator a bit-exact DuckDB
+oracle.
 
-State is keyed by user_id (the shuffle key), one row of
-(session_no counter, open-session aggregates) per user — O(users), not
-O(events), so a year of events over 10^9 users holds state the size of
-the user table.  Within a micro-batch the fold is vectorized
-(numpy boundary flags + segment reduction), not per-row Python.
+``user_totals_stream`` keeps a running aggregate per user (event count,
+value sum, max event epoch) and emits the UPDATED aggregate for every
+user a micro-batch touches.  The counters are monotone, so the final
+row per user — the emission with the highest n_events — does not depend
+on micro-batch slicing and equals the plain batch
+``groupBy(user_id).agg(count, sum, max)``.
+
+Both keep state keyed by user_id (the shuffle key), one fixed-width row
+per user — O(users), not O(events), so a year of events over 10^9 users
+holds state the size of the user table.  Within a micro-batch the folds
+are vectorized (numpy boundary flags + segment reduction, pandas sums),
+not per-row Python.
 """
 
 from __future__ import annotations
@@ -22,23 +31,17 @@ import atexit
 import os
 import shutil
 import tempfile
-import uuid
 from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-EVENTS_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("ts", T.TimestampType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("event_type", T.StringType()),
-    T.StructField("value", T.DoubleType()),
-    T.StructField("props", T.StringType()),
-])
+EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
+                 "event_type string, value double, props string")
 
 SESSION_OUT = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -58,39 +61,60 @@ SESSION_STATE = T.StructType([
     T.StructField("total", T.DoubleType()),
 ])
 
+RUNNING_OUT = T.StructType([
+    T.StructField("user_id", T.LongType()),
+    T.StructField("n_events", T.LongType()),
+    T.StructField("total_value", T.DoubleType()),
+    T.StructField("max_epoch", T.LongType()),
+])
 
-def as_stream_dir(input_path: str) -> str:
-    """The file stream source only takes directories: expose a single
-    file through a scratch dir with one symlink."""
-    if not os.path.isfile(input_path):
-        return input_path
-    d = tempfile.mkdtemp(prefix="stream_src_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    os.symlink(os.path.abspath(input_path),
-               os.path.join(d, os.path.basename(input_path)))
-    return d
+# the running aggregate without its key
+RUNNING_STATE = T.StructType(RUNNING_OUT.fields[1:])
+
+
+def read_stream(spark: SparkSession, path: str, schema: T.StructType | str,
+                max_files_per_trigger: int | None = None) -> DataFrame:
+    """File stream over ``path`` (parquet file or directory), at most
+    ``max_files_per_trigger`` files per micro-batch when given.  The file
+    stream source only takes directories, so a single file is exposed
+    through a scratch dir holding one symlink to it."""
+    if os.path.isfile(path):
+        d = tempfile.mkdtemp(prefix="stream_src_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        os.symlink(os.path.abspath(path),
+                   os.path.join(d, os.path.basename(path)))
+        path = d
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger",
+                               str(max_files_per_trigger))
+    return reader.parquet(path)
 
 
 def run_to_scratch_parquet(stream_df: DataFrame, spark: SparkSession,
-                           prefix: str) -> DataFrame:
+                           prefix: str, output_dir: str | None = None,
+                           checkpoint_dir: str | None = None) -> DataFrame:
     """Drain a streaming DataFrame through Trigger.AvailableNow into a
-    scratch parquet sink and return a batch DataFrame over the result.
+    parquet sink and return a batch DataFrame over the sink.
 
-    NOT the memory sink: each memory-sink call pins its full result in
-    the driver for the session lifetime.  The scratch dir (sink +
-    checkpoint) lives under driver-local tempfile.mkdtemp, which is
-    only correct in local mode — on a cluster, executors must write to
-    shared storage, so production callers pass their own
-    output_dir/checkpoint_dir instead of this helper.  Scratch dirs are
-    removed at interpreter exit (the returned DataFrame stays lazy, so
-    an eager unlink would break later actions)."""
-    scratch = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-    out_path = os.path.join(scratch, "out-" + uuid.uuid4().hex[:8])
+    A caller that passes ``output_dir``/``checkpoint_dir`` appends to
+    that sink, and its stream state (watermark, dedup or session state)
+    persists across runs.  Otherwise the sink and checkpoint go to a
+    fresh driver-local tempfile.mkdtemp dir named after ``prefix``,
+    which is only correct in local mode (on a cluster, executors must
+    write to shared storage) and is removed at interpreter exit: the
+    returned DataFrame stays lazy, so an eager unlink would break later
+    actions.  NOT the memory sink: each memory-sink call pins its full
+    result in the driver for the session lifetime."""
+    if output_dir is None:
+        scratch = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+        output_dir = os.path.join(scratch, "out")
+        checkpoint_dir = os.path.join(scratch, "ckpt")
     q = (stream_df.writeStream
          .format("parquet")
-         .option("path", out_path)
-         .option("checkpointLocation", os.path.join(scratch, "ckpt"))
+         .option("path", output_dir)
+         .option("checkpointLocation", checkpoint_dir)
          .outputMode("append")
          .trigger(availableNow=True)
          .start())
@@ -98,7 +122,7 @@ def run_to_scratch_parquet(stream_df: DataFrame, spark: SparkSession,
     # schema from the streaming DataFrame: an append sink that emitted
     # zero rows has no data files, and a bare read.parquet would raise
     # UNABLE_TO_INFER_SCHEMA instead of returning an empty frame
-    return spark.read.schema(stream_df.schema).parquet(out_path)
+    return spark.read.schema(stream_df.schema).parquet(output_dir)
 
 
 def _session_fold(gap_sec: int):
@@ -153,7 +177,7 @@ def sessionize_stream(spark: SparkSession, input_path: str,
     One stateful shuffle on user_id; results drain through a scratch
     parquet sink (run_to_scratch_parquet — the memory sink would pin
     every result in the driver for the session lifetime).  Production
-    would writeStream to the lineage-tracked table with a durable
+    would stream into the lineage-tracked table with a durable
     checkpoint dir.
 
     Ordering caveat: within a micro-batch events are sorted by
@@ -163,14 +187,56 @@ def sessionize_stream(spark: SparkSession, input_path: str,
     an earlier batch would start a new session rather than reopen the
     old one — a watermark+event-time-ordered variant is the fix when
     the source can reorder across batches."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    stream = reader.parquet(as_stream_dir(input_path))
+    stream = read_stream(spark, input_path, EVENTS_SCHEMA,
+                         max_files_per_trigger)
     closed = (stream
               .groupBy("user_id")
               .applyInPandasWithState(
                   _session_fold(gap_minutes * 60), SESSION_OUT,
                   SESSION_STATE, "append", GroupStateTimeout.NoTimeout))
     return run_to_scratch_parquet(closed, spark, "sessionize_stream_")
+
+
+def _running_fold(key: Tuple, pdfs: Iterator[pd.DataFrame],
+                  state: GroupState) -> Iterator[pd.DataFrame]:
+    (user_id,) = key
+    n, tot, mx = 0, 0.0, -(1 << 62)
+    for pdf in pdfs:
+        if len(pdf) == 0:     # empty chunk: int(NaN max) would raise
+            continue
+        n += len(pdf)
+        tot += float(pdf["value"].sum())
+        mx = max(mx, int((pdf["ts"].astype("int64") // 10**9).max()))
+    if n == 0:                # nothing folded: no state write, no emit
+        return
+    if state.exists:
+        pn, pt, pm = state.get
+        n, tot, mx = n + pn, tot + pt, max(mx, pm)
+    state.update((n, tot, mx))
+    yield pd.DataFrame([(user_id, n, tot, mx)],
+                       columns=[f.name for f in RUNNING_OUT])
+
+
+def user_totals_stream(spark: SparkSession, input_path: str,
+                       max_files_per_trigger: int | None = None
+                       ) -> DataFrame:
+    """Run the running-aggregate fold over ``input_path`` with
+    Trigger.AvailableNow and return the FINAL aggregate per user (the
+    emission with the highest event count — counters are monotone, so
+    this equals the batch groupBy whatever the batch slicing was).
+    total_value is rounded after selection: double summation order
+    differs across slicings by ulps."""
+    stream = read_stream(spark, input_path, EVENTS_SCHEMA,
+                         max_files_per_trigger)
+    running = (stream
+               .groupBy("user_id")
+               .applyInPandasWithState(
+                   _running_fold, RUNNING_OUT, RUNNING_STATE,
+                   "append", GroupStateTimeout.NoTimeout))
+    return (run_to_scratch_parquet(running, spark, "user_totals_")
+            .groupBy("user_id")
+            .agg(F.max("n_events").alias("n_events"),
+                 F.expr("max_by(total_value, n_events)").alias("_tv"),
+                 F.max("max_epoch").alias("max_epoch"))
+            .select("user_id", "n_events",
+                    F.round("_tv", 3).alias("total_value"), "max_epoch"))

@@ -1,4 +1,5 @@
-"""Watermarked windowed aggregation over the event stream.
+"""Watermarked windowed aggregation, sessionization and joins over the
+event stream.
 
 Tumbling event-time windows with a watermark: in append mode a window
 row is emitted only once the watermark (max event time seen minus the
@@ -11,7 +12,10 @@ Over a finite input processed with Trigger.AvailableNow the emitted set
 is exactly 'windows whose end <= max(ts) - delay' with no late drops
 (single batch sees everything in order), which is SQL-expressible — the
 DuckDB twin lives in ``__spark_entry__``.  The late-drop behavior needs
-multiple micro-batches and is pinned by tests/test_streaming.py.
+a restart against a checkpointed sink and is pinned by
+tests/test_streaming.py.  Every stream here is read by
+``stateful.read_stream`` and drained by
+``stateful.run_to_scratch_parquet``.
 """
 
 from __future__ import annotations
@@ -20,16 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_proofreader_spark.streaming.stateful import (
-    EVENTS_SCHEMA, as_stream_dir, run_to_scratch_parquet)
-
-
-def _event_stream(spark: SparkSession, input_path: str,
-                  max_files_per_trigger: int | None) -> DataFrame:
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return reader.parquet(as_stream_dir(input_path))
+    EVENTS_SCHEMA, read_stream, run_to_scratch_parquet)
 
 
 def windowed_counts_stream(spark: SparkSession, input_path: str,
@@ -47,7 +42,8 @@ def windowed_counts_stream(spark: SparkSession, input_path: str,
     watermark (the production late-data path; within one AvailableNow
     run the late-record filter uses the trigger's starting watermark,
     so cross-run restarts are where the drop is observable)."""
-    stream = _event_stream(spark, input_path, max_files_per_trigger)
+    stream = read_stream(spark, input_path, EVENTS_SCHEMA,
+                         max_files_per_trigger)
     agg = (stream
            .withWatermark("ts", f"{watermark_minutes} minutes")
            .groupBy(F.window("ts", f"{window_minutes} minutes"),
@@ -56,17 +52,8 @@ def windowed_counts_stream(spark: SparkSession, input_path: str,
                 F.round(F.sum("value"), 3).alias("total_value"))
            .select(F.unix_timestamp("window.start").alias("window_start"),
                    "event_type", "n_events", "total_value"))
-    if output_dir is not None:
-        q = (agg.writeStream
-             .format("parquet")
-             .option("path", output_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        return spark.read.parquet(output_dir)
-    return run_to_scratch_parquet(agg, spark, "windowed_counts_")
+    return run_to_scratch_parquet(agg, spark, "windowed_counts_",
+                                  output_dir, checkpoint_dir)
 
 
 def session_window_stream(spark, input_path: str,
@@ -90,7 +77,8 @@ def session_window_stream(spark, input_path: str,
     ``last_event + gap <= max(ts) - delay`` — the SQL-expressible
     contract the DuckDB twin recomputes.  One stateful shuffle on
     (user_id, window); state is O(open sessions)."""
-    stream = _event_stream(spark, input_path, max_files_per_trigger)
+    stream = read_stream(spark, input_path, EVENTS_SCHEMA,
+                         max_files_per_trigger)
     gap = f"{gap_minutes} minutes"
     agg = (stream
            .withColumn("ts", F.timestamp_seconds(F.unix_timestamp("ts")))
@@ -115,13 +103,12 @@ def stream_stream_join(spark: SparkSession, input_path: str,
                        right_type: str = "purchase",
                        horizon_minutes: int = 30,
                        delay: str = "30 minutes",
-                       max_files_per_trigger: int | None = None
-                       ) -> DataFrame:
-    """Watermarked STREAM-STREAM interval inner join — the remaining
-    major Structured Streaming surface: attribute each ``right_type``
-    event to ``left_type`` events by the same user within
+                       max_files_per_trigger: int | None = None,
+                       how: str = "inner") -> DataFrame:
+    """Watermarked STREAM-STREAM interval join: attribute each
+    ``right_type`` event to ``left_type`` events by the same user within
     ``horizon_minutes`` after the click (the classic click-to-purchase
-    attribution join).
+    attribution join).  ``how`` is ``"inner"`` or ``"leftOuter"``.
 
     Both sides carry watermarks and the join condition bounds the
     event-time range, so the engine can evict join state older than
@@ -134,20 +121,18 @@ def stream_stream_join(spark: SparkSession, input_path: str,
     Emits raw pairs with integer epochs and lag; volume is bounded by
     the horizon (each purchase matches only clicks in its preceding
     window), not quadratic in the stream length."""
-    left = (_event_stream(spark, input_path, max_files_per_trigger)
-            .filter(F.col("event_type") == left_type)
-            .select(F.col("user_id").alias("u1"),
-                    F.col("ts").alias("t1"))
-            .withWatermark("t1", delay))
-    right = (_event_stream(spark, input_path, max_files_per_trigger)
-             .filter(F.col("event_type") == right_type)
-             .select(F.col("user_id").alias("u2"),
-                     F.col("ts").alias("t2"))
-             .withWatermark("t2", delay))
-    joined = (left.join(
-        right,
+    def side(event_type: str, user: str, ts: str) -> DataFrame:
+        return (read_stream(spark, input_path, EVENTS_SCHEMA,
+                            max_files_per_trigger)
+                .filter(F.col("event_type") == event_type)
+                .select(F.col("user_id").alias(user), F.col("ts").alias(ts))
+                .withWatermark(ts, delay))
+
+    joined = (side(left_type, "u1", "t1").join(
+        side(right_type, "u2", "t2"),
         F.expr(f"u1 = u2 AND t2 >= t1 AND "
-               f"t2 <= t1 + interval {horizon_minutes} minutes"))
+               f"t2 <= t1 + interval {horizon_minutes} minutes"),
+        how)
         .select(F.col("u1").alias("user_id"),
                 F.unix_timestamp("t1").alias("click_epoch"),
                 F.unix_timestamp("t2").alias("purchase_epoch"),
@@ -169,7 +154,8 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
     side never shuffles.  value is floored to integer cents so the row
     set is bit-portable; over AvailableNow input the result equals the
     plain batch join, which the DuckDB twin recomputes."""
-    stream = _event_stream(spark, events_path, max_files_per_trigger)
+    stream = read_stream(spark, events_path, EVENTS_SCHEMA,
+                         max_files_per_trigger)
     dims = F.broadcast(
         spark.read.parquet(customer_path)
         .select(F.col("c_custkey").alias("user_id"),
@@ -182,16 +168,11 @@ def stream_static_enrich(spark: SparkSession, events_path: str,
 
 
 def stream_stream_join_outer(spark: SparkSession, input_path: str,
-                             left_type: str = "click",
-                             right_type: str = "purchase",
-                             horizon_minutes: int = 30,
-                             delay: str = "30 minutes",
                              max_files_per_trigger: int | None = None
                              ) -> DataFrame:
-    """LEFT OUTER watermarked stream-stream interval join: like
-    :func:`stream_stream_join`, but clicks with NO purchase in the
-    horizon also emit (null right side) — the attribution report that
-    includes unconverted clicks.
+    """LEFT OUTER :func:`stream_stream_join`: clicks with NO purchase in
+    the horizon also emit (null right side) — the attribution report
+    that includes unconverted clicks.
 
     Outer-ness needs the watermark: a null row for a click can only
     emit once the engine KNOWS no match can still arrive, i.e. when
@@ -201,24 +182,6 @@ def stream_stream_join_outer(spark: SparkSession, input_path: str,
     watermark (max event time - delay); unmatched clicks after that
     line never emit — pinned empirically and recomputed by the DuckDB
     twin's filtered anti-join."""
-    left = (_event_stream(spark, input_path, max_files_per_trigger)
-            .filter(F.col("event_type") == left_type)
-            .select(F.col("user_id").alias("u1"),
-                    F.col("ts").alias("t1"))
-            .withWatermark("t1", delay))
-    right = (_event_stream(spark, input_path, max_files_per_trigger)
-             .filter(F.col("event_type") == right_type)
-             .select(F.col("user_id").alias("u2"),
-                     F.col("ts").alias("t2"))
-             .withWatermark("t2", delay))
-    joined = (left.join(
-        right,
-        F.expr(f"u1 = u2 AND t2 >= t1 AND "
-               f"t2 <= t1 + interval {horizon_minutes} minutes"),
-        "leftOuter")
-        .select(F.col("u1").alias("user_id"),
-                F.unix_timestamp("t1").alias("click_epoch"),
-                F.unix_timestamp("t2").alias("purchase_epoch"),
-                (F.unix_timestamp("t2") - F.unix_timestamp("t1"))
-                .alias("lag_sec")))
-    return run_to_scratch_parquet(joined, spark, "stream_join_outer_")
+    return stream_stream_join(spark, input_path,
+                              max_files_per_trigger=max_files_per_trigger,
+                              how="leftOuter")

@@ -1,6 +1,20 @@
-"""Structured Streaming operators (stateful sessionizing, watermarked
-windows and joins, streaming dedup, transformWithState): state and output
-are checked across micro-batches."""
+"""Structured Streaming operators (stateful sessionizing and running
+aggregates, watermarked windows and joins, streaming dedup): state and
+output are checked across micro-batches."""
+
+import os
+import shutil
+
+
+def _land(df, in_dir, name):
+    """Write ``df`` as the one parquet file ``in_dir/name``, so a file
+    stream with maxFilesPerTrigger=1 reads it as one micro-batch.  The
+    staging dir's leading '_' hides it from the file stream source."""
+    tmp = os.path.join(in_dir, "_" + name)
+    df.coalesce(1).write.parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.rename(os.path.join(tmp, part), os.path.join(in_dir, name))
+    shutil.rmtree(tmp)
 
 
 def test_stateful_sessionize_stream_across_batches(spark, tmp_path):
@@ -8,8 +22,6 @@ def test_stateful_sessionize_stream_across_batches(spark, tmp_path):
     across micro-batches — split the events by time into two files,
     force one file per trigger, and demand exact equality with the batch
     engine's closed sessions (all but each user's last)."""
-    import os
-
     import pytest
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -22,20 +34,13 @@ def test_stateful_sessionize_stream_across_batches(spark, tmp_path):
         pytest.skip("driver testdata missing")
     ev = spark.read.parquet(src)
     in_dir = str(tmp_path / "ev_in")
-    os.makedirs(in_dir)
     # time-ordered split: every user's earlier events land in file 0, so
     # sessions spanning the cut exercise the state carry
     ts_cut = ev.agg(
         F.expr("percentile(unix_timestamp(ts), 0.5)")).first()[0]
     for sub, part_df in (("b0", ev.filter(F.unix_timestamp("ts") <= ts_cut)),
                          ("b1", ev.filter(F.unix_timestamp("ts") > ts_cut))):
-        d = os.path.join(in_dir, sub)
-        part_df.coalesce(1).write.parquet(d)
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(d, part),
-                  os.path.join(in_dir, f"{sub}.parquet"))
-        import shutil
-        shutil.rmtree(d)
+        _land(part_df, in_dir, f"{sub}.parquet")
 
     got = sessionize_stream(spark, in_dir, max_files_per_trigger=1)
     g = {(r["user_id"], r["session_no"]):
@@ -60,9 +65,6 @@ def test_windowed_stream_drops_late_events(spark, tmp_path):
     (Within a single AvailableNow run the late filter uses the trigger's
     starting watermark, so the restart is where the drop is observable.)
     """
-    import os
-    import shutil
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -76,17 +78,9 @@ def test_windowed_stream_drops_late_events(spark, tmp_path):
     in_dir = str(tmp_path / "ev_win")
     out_dir = str(tmp_path / "win_out")
     ckpt = str(tmp_path / "win_ckpt")
-    os.makedirs(in_dir)
-
-    def land(name, part_df):
-        d = os.path.join(in_dir, "_w")
-        part_df.coalesce(1).write.parquet(d)
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(d, part), os.path.join(in_dir, name))
-        shutil.rmtree(d)
 
     # run 1: all on-time events -> watermark = max(ts) - 30min persisted
-    land("b0.parquet", ev)
+    _land(ev, in_dir, "b0.parquet")
     first = windowed_counts_stream(spark, in_dir, output_dir=out_dir,
                                    checkpoint_dir=ckpt)
     n_first = first.count()
@@ -97,7 +91,7 @@ def test_windowed_stream_drops_late_events(spark, tmp_path):
     oldest = ev.orderBy("ts", "event_id").limit(1)
     late = (oldest.withColumn("event_id", F.lit(999999).cast("long"))
             .withColumn("value", F.lit(1000.0)))
-    land("b1.parquet", late)
+    _land(late, in_dir, "b1.parquet")
     got = windowed_counts_stream(spark, in_dir, output_dir=out_dir,
                                  checkpoint_dir=ckpt)
     g = {(r["window_start"], r["event_type"]):
@@ -121,8 +115,6 @@ def test_dedup_stream_suppresses_across_microbatches(spark, tmp_path):
     """Streaming exact dedup: duplicates arriving in LATER micro-batches
     are suppressed by state carried across batches, and the emitted hash
     set equals the batch distinct set."""
-    import os
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -145,96 +137,57 @@ def test_dedup_stream_suppresses_across_microbatches(spark, tmp_path):
     assert len(got) < docs.count()             # input really had dups
 
 
-def test_tws_running_agg_processor_fold():
-    """transformWithStateInPandas processor core: the per-key fold over
-    a fake ValueState matches a pandas groupby whatever the batch
-    slicing — the monotone-counter property user_totals_stream's
-    final-row selection relies on.  (The streaming runtime itself needs
-    google.protobuf — absent here; see tws_agg docstring.)"""
+def test_running_fold():
+    """user_totals_stream's per-key fold over a fake GroupState matches
+    a pandas groupby whatever the batch slicing — the monotone-counter
+    property the final-row selection relies on."""
     import pandas as pd
 
-    from ocr_proofreader_spark.streaming.tws_agg import _RunningAgg
+    from ocr_proofreader_spark.streaming.stateful import _running_fold
 
     class FakeState:
+        """GroupState's ``exists`` and ``get`` are properties."""
+
         def __init__(self):
             self.v = None
 
+        @property
         def exists(self):
             return self.v is not None
 
+        @property
         def get(self):
             return self.v
 
         def update(self, v):
             self.v = v
 
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
     events = pd.DataFrame({
         "ts": pd.to_datetime([1000, 2000, 1500, 9000], unit="s"),
         "value": [1.5, 2.0, 0.25, 3.0],
     })
     for split in (1, 2, 4):   # batch slicing must not change the result
-        proc = _RunningAgg()
-        handle = FakeHandle()
-        proc.init(handle)
+        state = FakeState()
         chunks = [events.iloc[i:i + split] for i in range(0, 4, split)]
         last = None
         for ch in chunks:
-            last = next(proc.handleInputRows((7,), iter([ch]), None))
+            last = next(_running_fold((7,), iter([ch]), state))
         assert last.iloc[0]["n_events"] == 4
         assert abs(last.iloc[0]["total_value"] - 6.75) < 1e-9
         assert last.iloc[0]["max_epoch"] == 9000
-        assert handle.state.v[0] == 4
+        assert state.v == (4, 6.75, 9000)
 
-    # empty chunks (ADVICE r03): an empty pandas chunk must not crash
-    # the fold (int of a NaN max), an all-empty invocation must emit
-    # nothing and leave state untouched (no sentinel max_epoch), and an
-    # empty chunk mixed with real ones must not alter the result
-    proc = _RunningAgg()
-    handle = FakeHandle()
-    proc.init(handle)
-    out = list(proc.handleInputRows((7,), iter([events.iloc[0:0]]), None))
-    assert out == [] and handle.state.v is None
+    # empty chunks: an empty pandas chunk must not crash the fold (int
+    # of a NaN max), an all-empty invocation must emit nothing and leave
+    # state untouched (no sentinel max_epoch), and an empty chunk mixed
+    # with real ones must not alter the result
+    state = FakeState()
+    out = list(_running_fold((7,), iter([events.iloc[0:0]]), state))
+    assert out == [] and state.v is None
     mixed = iter([events.iloc[0:2], events.iloc[0:0], events.iloc[2:4]])
-    last = next(proc.handleInputRows((7,), mixed, None))
+    last = next(_running_fold((7,), mixed, state))
     assert last.iloc[0]["n_events"] == 4
     assert last.iloc[0]["max_epoch"] == 9000
-
-
-def test_tws_stream_end_to_end(spark):
-    """Full transformWithStateInPandas run — self-skips until the
-    container gains google.protobuf (required by the state-server
-    protocol)."""
-    import importlib.util
-    import os
-
-    import pytest
-
-    try:
-        has_protobuf = importlib.util.find_spec(
-            "google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("google.protobuf missing: transformWithState "
-                    "pre-init worker cannot start in this container")
-    from ocr_proofreader_spark.streaming.tws_agg import user_totals_stream
-    src = "/root/testdata/sf0.001/events.parquet"
-    if not os.path.exists(src):
-        pytest.skip("driver testdata missing")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    out = user_totals_stream(spark, src, max_files_per_trigger=1)
-    batch = (spark.read.parquet(src).groupBy("user_id").count())
-    assert out.count() == batch.count()
 
 
 def test_session_window_stream_boundary_semantics(spark, tmp_path):
@@ -245,10 +198,8 @@ def test_session_window_stream_boundary_semantics(spark, tmp_path):
     (1800s, 1801s) whose floored diff is exactly 1800 MERGES like the
     batch sessionizer, instead of splitting on raw sub-second time."""
     import datetime as dt
-    import os
 
-    from pyspark.sql import types as T
-
+    from ocr_proofreader_spark.streaming.stateful import EVENTS_SCHEMA
     from ocr_proofreader_spark.streaming.windowed import (
         session_window_stream)
 
@@ -258,14 +209,6 @@ def test_session_window_stream_boundary_semantics(spark, tmp_path):
         return dt.datetime.fromtimestamp(
             sec, dt.timezone.utc).replace(tzinfo=None)
 
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
     rows = [
         # user 1: end + gap == final watermark -> boundary emission
         (1, ts(base), 1, "view", 1.0, "{}"),
@@ -276,7 +219,7 @@ def test_session_window_stream_boundary_semantics(spark, tmp_path):
         # watermark driver: max ts = base + 3600
         (9, ts(base + 3600.0), 9, "view", 9.9, "{}"),
     ]
-    df = spark.createDataFrame(rows, schema=schema)
+    df = spark.createDataFrame(rows, schema=EVENTS_SCHEMA)
     src = str(tmp_path / "ev_boundary")
     df.coalesce(1).write.parquet(src)
     out = session_window_stream(spark, src)
@@ -295,8 +238,8 @@ def test_stream_stream_join_across_batches(spark, tmp_path):
     in the wrong order must not emit, and the multi-batch result equals
     the single-batch one."""
     import datetime as dt
-    import os
 
+    from ocr_proofreader_spark.streaming.stateful import EVENTS_SCHEMA
     from ocr_proofreader_spark.streaming.windowed import stream_stream_join
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -310,18 +253,12 @@ def test_stream_stream_join_across_batches(spark, tmp_path):
         ev(4, 20, 3, "purchase"), ev(5, 25, 3, "click"),   # wrong order
         ev(6, 30, 4, "click"), ev(7, 31, 4, "purchase"),   # match (b1 only)
     ]
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
     in_dir = str(tmp_path / "ssj_in")
-    os.makedirs(in_dir)
     # batch 0: events up to minute 15; batch 1: the rest — the user-1
     # pair spans the cut, exercising buffered state
     for name, subset in (("b0", rows[:3]), ("b1", rows[3:])):
-        d = str(tmp_path / name)
-        spark.createDataFrame(subset, schema).coalesce(1).write.parquet(d)
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(d, part),
-                  os.path.join(in_dir, f"{name}.parquet"))
+        _land(spark.createDataFrame(subset, EVENTS_SCHEMA), in_dir,
+              f"{name}.parquet")
 
     got = {(r["user_id"], r["lag_sec"])
            for r in stream_stream_join(
@@ -336,8 +273,6 @@ def test_stream_static_enrich_matches_batch(spark, tmp_path):
     """Stateless stream-static enrichment: the per-micro-batch
     broadcast dimension join over split input equals the plain batch
     join, and unmatched stream rows drop (inner semantics)."""
-    import os
-
     import pytest
     from pyspark.sql import functions as F
 
@@ -349,15 +284,10 @@ def test_stream_static_enrich_matches_batch(spark, tmp_path):
         pytest.skip("driver testdata missing")
     ev = spark.read.parquet(ev_src)
     in_dir = str(tmp_path / "ev_in")
-    os.makedirs(in_dir)
     half = ev.agg(F.expr("percentile(event_id, 0.5)")).first()[0]
     for name, sub in (("b0", ev.filter(F.col("event_id") <= half)),
                       ("b1", ev.filter(F.col("event_id") > half))):
-        d = str(tmp_path / name)
-        sub.coalesce(1).write.parquet(d)
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(d, part),
-                  os.path.join(in_dir, f"{name}.parquet"))
+        _land(sub, in_dir, f"{name}.parquet")
 
     got = sorted(tuple(r) for r in stream_static_enrich(
         spark, in_dir, cust_src, max_files_per_trigger=1).collect())
@@ -378,8 +308,8 @@ def test_stream_stream_join_outer_null_emission(spark, tmp_path):
     streams' maxima minus delay) passes its match window — old
     unconverted clicks emit, recent ones stay suppressed."""
     import datetime as dt
-    import os
 
+    from ocr_proofreader_spark.streaming.stateful import EVENTS_SCHEMA
     from ocr_proofreader_spark.streaming.windowed import \
         stream_stream_join_outer
 
@@ -398,42 +328,53 @@ def test_stream_stream_join_outer_null_emission(spark, tmp_path):
     # final watermark = min(max click 12:30, max purchase 12:31) - 30min
     # = 12:00 -> only the -90min click's window (-60min) has closed;
     # users 2/3's unmatched clicks stay suppressed
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
     in_dir = str(tmp_path / "ssjo_in")
-    os.makedirs(in_dir)
     for name, subset in (("b0", rows[:4]), ("b1", rows[4:])):
-        d = str(tmp_path / name)
-        spark.createDataFrame(subset, schema).coalesce(1).write.parquet(d)
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(d, part),
-                  os.path.join(in_dir, f"{name}.parquet"))
+        _land(spark.createDataFrame(subset, EVENTS_SCHEMA), in_dir,
+              f"{name}.parquet")
     got = {(r["user_id"], r["lag_sec"])
            for r in stream_stream_join_outer(
                spark, in_dir, max_files_per_trigger=1).collect()}
     assert got == {(1, 600), (4, 60), (5, None)}
 
 
-def test_tws_fallback_stream_end_to_end(spark):
-    """The protobuf-free applyInPandasWithState twin of
-    user_totals_stream runs e2e in THIS container and must equal the
-    plain batch groupBy (the operator's monotone-counter contract),
-    regardless of micro-batch slicing (maxFilesPerTrigger=1)."""
-    import os
+def test_user_totals_stream_end_to_end(spark, tmp_path, monkeypatch):
+    """The applyInPandasWithState running aggregate over events split by
+    time into two files, one per trigger, must equal the plain batch
+    groupBy (the operator's monotone-counter contract): a user's state
+    carries from micro-batch 0 into micro-batch 1."""
+    import glob
+    import tempfile
 
     import pytest
     from pyspark.sql import functions as F
 
-    from ocr_proofreader_spark.streaming.tws_agg import (
-        user_totals_stream_auto, user_totals_stream_fallback)
+    from ocr_proofreader_spark.streaming.stateful import user_totals_stream
     src = "/root/testdata/sf0.001/events.parquet"
     if not os.path.exists(src):
         pytest.skip("driver testdata missing")
-    out = {r["user_id"]: r for r in user_totals_stream_fallback(
-        spark, src, max_files_per_trigger=1).collect()}
+    ev = spark.read.parquet(src)
+    in_dir = str(tmp_path / "ev_in")
+    ts_cut = ev.agg(
+        F.expr("percentile(unix_timestamp(ts), 0.5)")).first()[0]
+    early = ev.filter(F.unix_timestamp("ts") <= ts_cut)
+    late = ev.filter(F.unix_timestamp("ts") > ts_cut)
+    _land(early, in_dir, "b0.parquet")
+    _land(late, in_dir, "b1.parquet")
+    # some users have events on both sides of the cut
+    assert early.select("user_id").intersect(
+        late.select("user_id")).count() > 0
+
+    # the scratch sink and its checkpoint land under tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = {r["user_id"]: r for r in user_totals_stream(
+        spark, in_dir, max_files_per_trigger=1).collect()}
+    commits = glob.glob(str(tmp_path / "user_totals_*" / "ckpt" /
+                            "commits" / "[0-9]*"))
+    assert len(commits) >= 2          # more than one micro-batch ran
+
     batch = {r["user_id"]: r for r in (
-        spark.read.parquet(src)
-        .groupBy("user_id")
+        ev.groupBy("user_id")
         .agg(F.count("*").alias("n_events"),
              F.round(F.sum("value"), 3).alias("total_value"),
              F.max(F.unix_timestamp("ts")).alias("max_epoch"))
@@ -444,6 +385,3 @@ def test_tws_fallback_stream_end_to_end(spark):
         assert (r["n_events"], r["max_epoch"]) == \
             (b["n_events"], b["max_epoch"]), uid
         assert abs(r["total_value"] - b["total_value"]) < 1e-9, uid
-    # the auto router picks SOME runnable implementation here
-    assert user_totals_stream_auto(
-        spark, src, max_files_per_trigger=4).count() == len(batch)
