@@ -24,7 +24,6 @@ class RunConfig:
     lexicon_path: str = field(default_factory=lambda: os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "fixtures", "lexicon_base.txt"))
-    freq_k: int = 5                     # S11: book word freq >= K joins lexicon
     rebalance_partitions: int | None = None  # None -> leave input partitioning
     # Docs above this take the skew path.  Measured on local[32]: a
     # 2000-span book (~1 MB text) is cheaper inline in the shuffle-free

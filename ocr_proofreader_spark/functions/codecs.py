@@ -277,15 +277,14 @@ def sniff_and_decode(data: bytes) -> np.ndarray:
     raise CodecError(f"unknown image magic {data[:2]!r}")
 
 
-def band_features(pixels: np.ndarray, dim: int = 8) -> np.ndarray:
-    """Deterministic feature vector: mean grayscale of ``dim`` horizontal
+def band_features(pixels: np.ndarray) -> np.ndarray:
+    """Deterministic feature vector: mean grayscale of 8 horizontal
     bands, scaled to [0, 1] float32 — the same shape/dtype the fake
     decoder emits, so downstream schemas are identical.  float64
     accumulation, then one narrowing round (matches the fake path's
     double-then-float discipline)."""
     gray = pixels.astype(np.float64).mean(axis=2)
-    h = gray.shape[0]
-    edges = np.linspace(0, h, dim + 1).astype(int)
+    edges = np.linspace(0, gray.shape[0], 9).astype(int)
     feats = np.array([gray[edges[i]:max(edges[i + 1], edges[i] + 1)].mean()
-                      for i in range(dim)], dtype=np.float64)
+                      for i in range(8)], dtype=np.float64)
     return (feats / 255.0).astype(np.float32)

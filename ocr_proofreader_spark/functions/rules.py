@@ -51,6 +51,9 @@ UPPER_RE = re.compile(r"[A-ZÀ-Þ]")
 HYPHEN_TAIL_RE = re.compile(rf"([{ALPHA_CLASS}]+)-\Z")
 WORD_HEAD_RE = re.compile(f"[{ALPHA_CLASS}]+")
 
+# S11: a word with book frequency >= K joins the lexicon
+FREQ_K = 5
+
 LIG_TRANSLATE = str.maketrans({
     "ﬁ": "fi", "ﬂ": "fl", "ﬀ": "ff", "ﬃ": "ffi", "ﬄ": "ffl", "ſ": "s"})
 LIG_CHARS = "ﬁﬂﬀﬃﬄſ"
@@ -231,7 +234,7 @@ class DocProofreader:
     __slots__ = ("lex", "freq_k", "freq", "_freq_buckets", "_neighbourhood",
                  "_memo", "corrections", "flagged")
 
-    def __init__(self, lex: LexIndex, freq_k: int = 5,
+    def __init__(self, lex: LexIndex, freq_k: int = FREQ_K,
                  freq: dict[str, int] | None = None):
         self.lex = lex
         self.freq_k = freq_k
@@ -451,17 +454,7 @@ class DocProofreader:
             return recase(best_cand, tok)
         return None
 
-    # -- per-token dispatch (memoized) ----------------------------------------
-
-    def correct_token(self, tok: str) -> str:
-        hit = self._memo.get(tok)
-        if hit is None:
-            hit = self._lookup_uncached(tok)
-            self._memo[tok] = hit
-        out, dc, df = hit
-        self.corrections += dc
-        self.flagged += df
-        return out
+    # -- per-token dispatch (memoized in _token_pass) -------------------------
 
     def _lookup_uncached(self, tok: str) -> tuple[str, int, int]:
         """Memo-miss path: consult the index's cross-doc base-known memo

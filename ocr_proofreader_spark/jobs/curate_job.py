@@ -31,14 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def curate(spark: SparkSession, docs: DataFrame,
-           bench_max_doc: int = 5) -> tuple[DataFrame, dict]:
+def curate(spark: SparkSession, docs: DataFrame) -> tuple[DataFrame, dict]:
     """Run the full curation chain; returns (curated_docs, metrics).
 
-    ``docs``: (doc_id, lang, text, ...).  ``bench_max_doc``: doc_ids
-    below this form the decontamination benchmark set (a real
-    deployment passes the eval-suite table instead).  The returned
-    frame carries (doc_id, lang, text) with text LINE-DEDUPED and all
+    ``docs``: (doc_id, lang, text, ...).  Doc_ids below
+    ``training_ops.BENCH_MAX_DOC`` form the decontamination benchmark
+    set (a real deployment uses the eval-suite table instead).  The
+    returned frame carries (doc_id, lang, text) with text LINE-DEDUPED and all
     filters applied; metrics counts survivors per stage.
 
     The returned frame is persisted (its survivor count and the
@@ -90,11 +89,10 @@ def curate(spark: SparkSession, docs: DataFrame,
 
     # 4. benchmark decontamination (8-gram broadcast probe); the
     #    benchmark docs themselves are not training candidates
-    cont = (ops.benchmark_contamination(unique_docs,
-                                        bench_max_doc=bench_max_doc)
+    cont = (ops.benchmark_contamination(unique_docs)
             .filter(F.col("contaminated")).select("doc_id"))
     clean = (unique_docs
-             .filter(F.col("doc_id") >= bench_max_doc)
+             .filter(F.col("doc_id") >= ops.BENCH_MAX_DOC)
              .join(cont, "doc_id", "left_anti")).persist()
     metrics["after_decontamination"] = clean.count()
     unique_docs.unpersist()

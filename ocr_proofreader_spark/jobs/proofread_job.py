@@ -103,14 +103,14 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     docs = spark.read.parquet(args.input)
     t0 = time.time()
     runner = ResumableRunner(spark, args.output, cfg, lex_bc)
-    runner.run(docs)
+    n_proofread = runner.run(docs)
     phase_b = time.time() - t0
 
     t1 = time.time()
     wf_path = os.path.join(args.output, "word_freq")
     word_freq(docs).write.mode("overwrite").parquet(wf_path)
-    lexicon_table(spark, by_lang["default"], spark.read.parquet(wf_path),
-                  cfg.freq_k).write.mode("overwrite").parquet(
+    lexicon_table(spark, by_lang["default"], spark.read.parquet(wf_path)
+                  ).write.mode("overwrite").parquet(
         os.path.join(args.output, "lexicon"))
     phase_a = time.time() - t1
 
@@ -119,7 +119,9 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     result = {"docs": n_docs, "wall_sec": round(wall, 3),
               "proofread_sec": round(phase_b, 3),
               "derived_sec": round(phase_a, 3),
-              "docs_per_sec": round(n_docs / max(phase_b, 1e-9), 2),
+              # this run's docs only: a rerun on a finished root
+              # commits none, whatever the output already holds
+              "docs_per_sec": round(n_proofread / max(phase_b, 1e-9), 2),
               "shuffle_partitions":
                   spark.conf.get("spark.sql.shuffle.partitions")}
     print(json.dumps(result))

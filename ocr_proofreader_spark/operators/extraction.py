@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 # the 'g' flag — hence two spellings of the same strip
 _STRIP_SPARK = "trim(regexp_replace({l}, '<[^>]*>', ''))"
 _STRIP_SQL = "trim(regexp_replace({l}, '<[^>]*>', '', 'g'))"
+# tag-stripped characters a content line needs, on both engines
+MIN_TEXT = 30
 
 # DOM-type blocklist: lines opening a known chrome container are never
 # content, whatever their text density (a long copyright footer beats
@@ -44,7 +46,7 @@ _BOILERPLATE = (
 )
 
 
-def synth_html(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def synth_html(docs: DataFrame) -> DataFrame:
     """docs + an ``html`` column: the text wrapped in deterministic
     boilerplate chrome (pure concat — no Python)."""
     head = "\n".join(_BOILERPLATE[:3])
@@ -55,21 +57,20 @@ def synth_html(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.withColumn(
         "html",
         F.concat(F.lit(head + "\n<p>"),
-                 F.coalesce(F.col(text_col), F.lit("")),
+                 F.coalesce(F.col("text"), F.lit("")),
                  F.lit("</p>\n" + tail)))
 
 
-def extract_main_html(html_docs: DataFrame, min_text: int = 30,
-                      html_col: str = "html") -> DataFrame:
+def extract_main_html(html_docs: DataFrame) -> DataFrame:
     """doc_id + ``main_text``: the density-filtered, tag-stripped lines
     joined in original order."""
     # strip each line ONCE into a struct, then filter/project on it —
     # inlining the strip into the predicate would run the regex 3x/line
     s = _STRIP_SPARK.format(l="l")
     expr = (f"array_join(transform(filter("
-            f"transform(split({html_col}, '\\n'), "
+            f"transform(split(html, '\\n'), "
             f"l -> struct(l AS raw, {s} AS txt)), "
-            f"p -> length(p.txt) >= {min_text} "
+            f"p -> length(p.txt) >= {MIN_TEXT} "
             f"AND length(p.txt) * 2 >= length(p.raw) "
             f"AND NOT p.raw rlike '{_CHROME}'), "
             f"p -> p.txt), '\\n')")
@@ -108,7 +109,7 @@ def pdf_text_roundtrip(docs: DataFrame) -> DataFrame:
             .mapInPandas(fn, "doc_id long, pdf_text_digest string"))
 
 
-def extract_main_sql(min_text: int = 30) -> str:
+def extract_main_sql() -> str:
     """DuckDB twin of synth_html + extract_main_html over ``documents``:
     same boilerplate, same density rule, digest of the extracted text."""
     head = "\n".join(_BOILERPLATE[:3]).replace("'", "''")
@@ -128,7 +129,7 @@ def extract_main_sql(min_text: int = 30) -> str:
                  [p.txt for p in
                   [struct_pack(raw := l, txt := {s})
                    for l in string_split(html, chr(10))]
-                  if length(p.txt) >= {min_text}
+                  if length(p.txt) >= {MIN_TEXT}
                      and length(p.txt) * 2 >= length(p.raw)
                      and not regexp_matches(p.raw, '{_CHROME}')],
                  chr(10)), '')) AS main_digest

@@ -47,18 +47,16 @@ MEDIA_BYTES_META = T.StructType(MEDIA_META.fields + [
 ])
 
 
-def decode_media_bytes(media: DataFrame, feature_dim: int = 8,
-                       on_error: str = "null") -> DataFrame:
+def decode_media_bytes(media: DataFrame) -> DataFrame:
     """REAL decode stage over a ``payload`` binary column: pure-Python
     PPM/PGM/BMP/PNG/JPEG/GIF codecs (functions/codecs.py and siblings)
     parse pixels and emit (width, height, features) per ref, plus an
     ``error`` column.
 
-    ``on_error='null'`` (default) emits a null-dims row with the codec
+    A payload the codecs reject yields a null-dims row with the codec
     error message instead of failing the task — at corpus scale corrupt
     blobs are a certainty and one poison payload must not kill a
-    1000-executor stage; lineage rollups count errors from the column.
-    ``on_error='fail'`` raises (for tests / strict backfills)."""
+    1000-executor stage; lineage rollups count errors from the column."""
     from ocr_proofreader_spark.functions.codecs import (CodecError,
                                                         band_features,
                                                         sniff_and_decode)
@@ -72,7 +70,7 @@ def decode_media_bytes(media: DataFrame, feature_dim: int = 8,
                 try:
                     px = sniff_and_decode(
                         bytes(payload) if payload is not None else b"")
-                    feats = band_features(px, feature_dim)
+                    feats = band_features(px)
                     rows.append((doc_id, ref, page, px.shape[1],
                                  px.shape[0], feats.tolist(), None))
                 # struct.error/IndexError too: a malformed segment can
@@ -81,8 +79,6 @@ def decode_media_bytes(media: DataFrame, feature_dim: int = 8,
                 # parse error must isolate to THIS row, never the stage
                 except (CodecError, ValueError, struct.error,
                         IndexError) as e:
-                    if on_error == "fail":
-                        raise
                     rows.append((doc_id, ref, page, None, None, None,
                                  str(e)))
             yield pd.DataFrame(rows, columns=[

@@ -56,7 +56,7 @@ def _langs(pdf: pd.DataFrame):
     return pdf["lang"] if "lang" in pdf.columns else repeat(None)
 
 
-def _make_fast_fn(lex_bc, freq_k: int):
+def _make_fast_fn(lex_bc):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
@@ -64,8 +64,7 @@ def _make_fast_fn(lex_bc, freq_k: int):
                                            _langs(pdf)):
                 # per-doc lexicon select: a cached-index dict probe, so
                 # multilingual batches cost the same as monolingual ones
-                pr = DocProofreader(lexmod.get_index(lex_bc, lang),
-                                    freq_k=freq_k)
+                pr = DocProofreader(lexmod.get_index(lex_bc, lang))
                 out, n_in = pr.run(spans)
                 rows.append((doc_id, _span_dicts(out), n_in,
                              pr.corrections, pr.flagged))
@@ -92,7 +91,7 @@ def proofread_fast(docs: DataFrame, lex_bc, cfg: RunConfig) -> DataFrame:
     cols = ["doc_id", "spans"] + (["lang"] if "lang" in docs.columns
                                   else [])
     return (rebalance(docs.select(*cols), cfg)
-            .mapInPandas(_make_fast_fn(lex_bc, cfg.freq_k),
+            .mapInPandas(_make_fast_fn(lex_bc),
                          DOCUMENTS_OUT_METRICS))
 
 
@@ -100,7 +99,7 @@ def proofread_fast(docs: DataFrame, lex_bc, cfg: RunConfig) -> DataFrame:
 # skew path
 
 
-def _make_correct_fn(lex_bc, freq_k: int):
+def _make_correct_fn(lex_bc):
     """R2-R4 over one chunk row of a giant book, given the book's freq
     map (rule R0): one ``DocProofreader`` per chunk."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -111,7 +110,7 @@ def _make_correct_fn(lex_bc, freq_k: int):
                     pdf["freq_words"], pdf["freq_counts"]):
                 freq = dict(zip(words, counts)) if words is not None else {}
                 pr = DocProofreader(lexmod.get_index(lex_bc, lang),
-                                    freq_k=freq_k, freq=freq)
+                                    freq=freq)
                 rows.append((doc_id, pr.correct(spans), pr.corrections,
                              pr.flagged))
             yield pd.DataFrame(rows, columns=["doc_id", "spans",
@@ -172,7 +171,7 @@ def chunked_corrected_spans(spark: SparkSession, docs: DataFrame, lex_bc,
     return (chunks
             .join(F.broadcast(freq_maps), "doc_id", "left")
             .repartition(n_part)
-            .mapInPandas(_make_correct_fn(lex_bc, cfg.freq_k),
+            .mapInPandas(_make_correct_fn(lex_bc),
                          _CORRECTED_CHUNK))
 
 
@@ -203,8 +202,7 @@ def proofread(spark: SparkSession, docs: DataFrame,
     size_col = (F.col("n_spans") if "n_spans" in docs.columns
                 else F.size("spans"))
     big = docs.filter(size_col > cfg.chunk_threshold_spans)
-    if "n_spans" in docs.columns and not docs.isStreaming \
-            and big.isEmpty():
+    if "n_spans" in docs.columns and big.isEmpty():
         # Giant books are rare: most runs carry NONE, yet the union arm
         # still costs the chunked plan's two extra scans and ~5 empty
         # exchange stages (~0.6 s/bench run, r6).  With a persisted

@@ -14,6 +14,12 @@ from pyspark.sql import functions as F
 
 from ocr_proofreader_spark.operators.word_freq import r1_words
 
+# the inactivity gap that closes a user's session, in minutes — shared by
+# the batch sessionizer and both streaming ones
+SESSION_GAP_MINUTES = 30
+# the percentiles both quantile operators report
+QUANTILES = (25, 50, 75, 95)
+
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1-shaped rollup: filtered scan -> partial+final hash agg."""
@@ -45,24 +51,24 @@ def region_revenue(region: DataFrame, nation: DataFrame,
                  F.round(F.sum("o_totalprice"), 2).alias("revenue")))
 
 
-def top_words_per_lang(docs: DataFrame, k: int = 5) -> DataFrame:
-    """Window rank over an aggregation: top-k words by count per lang
+def top_words_per_lang(docs: DataFrame) -> DataFrame:
+    """Window rank over an aggregation: top-5 words by count per lang
     (ties broken lexicographically for determinism)."""
     counts = (r1_words(docs, "text", "lang")
               .groupBy("lang", "word").agg(F.count("*").alias("cnt")))
     w = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("word"))
     return (counts
             .withColumn("rk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rk") <= k))
+            .filter(F.col("rk") <= 5))
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Session assignment: lag + cumulative sum over an event-time window
     (the classic gap-based sessionization), then per-session rollup.
     Timestamps are reduced to epoch seconds so outputs are
     engine-portable."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = gap_minutes * 60
+    gap = SESSION_GAP_MINUTES * 60
     with_gap = (events
                 .withColumn("prev_ts", F.lag("ts").over(w))
                 .withColumn(
@@ -132,11 +138,10 @@ def orders_rollup_cube(orders: DataFrame, customer: DataFrame) -> DataFrame:
                     "n_orders", "revenue"))
 
 
-def asof_join_events(events: DataFrame, left_type: str = "purchase",
-                     right_type: str = "view") -> DataFrame:
+def asof_join_events(events: DataFrame) -> DataFrame:
     """AS-OF join — an operator Spark lacks natively — as a composition
-    of built-ins: each ``left_type`` event matched to the most recent
-    ``right_type`` event of the same user with ``r.ts <= l.ts``
+    of built-ins: each purchase event matched to the most recent view
+    event of the same user with ``r.ts <= l.ts``
     (backward-inclusive, DuckDB ASOF JOIN semantics, which is the twin).
 
     Physical strategy: union-tag the two sides and take
@@ -147,10 +152,10 @@ def asof_join_events(events: DataFrame, left_type: str = "purchase",
     pre-deduped to max event_id per (user, ts) so the winner is
     deterministic — the exact rule the oracle applies."""
     base = events.select("user_id", "event_id", "ts", "event_type")
-    right = (base.filter(F.col("event_type") == right_type)
+    right = (base.filter(F.col("event_type") == "view")
              .groupBy("user_id", "ts")
              .agg(F.max("event_id").alias("r_event_id")))
-    left = base.filter(F.col("event_type") == left_type)
+    left = base.filter(F.col("event_type") == "purchase")
     tagged = (right.select("user_id", "ts",
                            F.lit(None).cast("long").alias("event_id"),
                            "r_event_id",
@@ -179,12 +184,9 @@ def asof_join_events(events: DataFrame, left_type: str = "purchase",
         .alias("lag_sec"))
 
 
-def range_join_events(events: DataFrame, window_sec: int = 3600,
-                      left_type: str = "purchase",
-                      right_type: str = "view") -> DataFrame:
-    """RANGE join — each ``left_type`` event counts the same user's
-    ``right_type`` events inside the preceding ``window_sec`` interval
-    (r.ts in (l.ts - window, l.ts]).
+def range_join_events(events: DataFrame) -> DataFrame:
+    """RANGE join — each purchase event counts the same user's view
+    events inside the preceding hour (r.ts in (l.ts - 3600 s, l.ts]).
 
     Physical strategy: a naive theta-join on the BETWEEN predicate
     plans as BroadcastNestedLoop/Cartesian — quadratic per user.
@@ -196,12 +198,13 @@ def range_join_events(events: DataFrame, window_sec: int = 3600,
     binning optimization (pinned BNLJ-free in tests/test_plans.py).
     Cost: each LEFT row probes 2 bins (the left side is duplicated
     once), vs the unbounded per-user blowup of the nested loop."""
+    window_sec = 3600
     base = events.select("user_id", "event_id", "ts", "event_type",
                          F.floor(F.unix_timestamp("ts")).alias("epoch"))
-    left = (base.filter(F.col("event_type") == left_type)
+    left = (base.filter(F.col("event_type") == "purchase")
             .select("user_id", "event_id", "epoch",
                     F.floor(F.col("epoch") / window_sec).alias("bin")))
-    right = (base.filter(F.col("event_type") == right_type)
+    right = (base.filter(F.col("event_type") == "view")
              .select("user_id",
                      F.col("epoch").alias("r_epoch"),
                      F.floor(F.col("epoch") / window_sec).alias("r_bin")))
@@ -274,8 +277,7 @@ def above_avg_balance(customer: DataFrame) -> DataFrame:
                  F.max("cents").alias("max_cents")))
 
 
-def group_quantiles_disc(lineitem: DataFrame,
-                         ps: tuple = (25, 50, 75, 95)) -> DataFrame:
+def group_quantiles_disc(lineitem: DataFrame) -> DataFrame:
     """EXACT discrete quantiles per group, at scale: the p-th
     percentile of l_extendedprice (integer cents) per l_returnflag,
     defined as the smallest value whose cumulative count reaches
@@ -308,7 +310,7 @@ def group_quantiles_disc(lineitem: DataFrame,
     n = hist.groupBy("flag").agg(F.sum("c").alias("n"))
     return (cum.join(n, "flag")
             .select("flag", "cents", "cum", "n",
-                    F.explode(F.array(*[F.lit(p) for p in ps]))
+                    F.explode(F.array(*[F.lit(p) for p in QUANTILES]))
                     .alias("p"))
             .filter(F.col("cum") >= F.expr("div(n * p + 99, 100)"))
             .groupBy("flag", "p")
@@ -317,16 +319,15 @@ def group_quantiles_disc(lineitem: DataFrame,
                     "q_cents"))
 
 
-def group_quantiles_approx_gate(lineitem: DataFrame,
-                                ps: tuple = (25, 50, 75, 95),
-                                accuracy: int = 1000) -> DataFrame:
+def group_quantiles_approx_gate(lineitem: DataFrame) -> DataFrame:
     """``percentile_approx`` (Spark's Greenwald-Khanna sketch — the
     constant-memory, map-side-mergeable way to take quantiles of
     10^12 rows) gated against the exact histogram quantiles of
     :func:`group_quantiles_disc`, on the sketch's OWN guarantee: the
-    returned value's RANK is within n/accuracy of the target rank.  A
-    value-space tolerance would be data-dependent and meaningless on
-    skewed distributions; the rank bound is what GK actually promises.
+    returned value's RANK is within n/accuracy (accuracy 1000) of the
+    target rank.  A value-space tolerance would be data-dependent and
+    meaningless on skewed distributions; the rank bound is what GK
+    actually promises.
 
     Output per (group, percentile): the exact quantile, the sketch's
     rank error, and the pinned bound boolean.  The DuckDB twin
@@ -341,8 +342,9 @@ def group_quantiles_approx_gate(lineitem: DataFrame,
     cum = hist.withColumn("cum", F.sum("c").over(w))
     n = hist.groupBy("flag").agg(F.sum("c").alias("n"))
 
-    fracs = F.array(*[F.lit(p / 100) for p in ps])
-    pcols = F.array(*[F.lit(p) for p in ps])
+    accuracy = 1000
+    fracs = F.array(*[F.lit(p / 100) for p in QUANTILES])
+    pcols = F.array(*[F.lit(p) for p in QUANTILES])
     ap = (vals.groupBy("flag")
           .agg(F.percentile_approx("cents", fracs, F.lit(accuracy))
                .alias("qs"))
@@ -361,7 +363,7 @@ def group_quantiles_approx_gate(lineitem: DataFrame,
     # lineitem — a full duplicate pass at scale; r5 review finding)
     exact = (cum.join(n, "flag")
              .select("flag", "cents", "cum", "n",
-                     F.explode(F.array(*[F.lit(p) for p in ps]))
+                     F.explode(F.array(*[F.lit(p) for p in QUANTILES]))
                      .alias("p"))
              .filter(F.col("cum") >= F.expr("div(n * p + 99, 100)"))
              .groupBy("flag", "p")
@@ -377,11 +379,10 @@ def group_quantiles_approx_gate(lineitem: DataFrame,
                     .alias("rank_within_guarantee")))
 
 
-def trimmed_sum_by_priority(orders: DataFrame,
-                            trim_pct: int = 10) -> DataFrame:
+def trimmed_sum_by_priority(orders: DataFrame) -> DataFrame:
     """Robust revenue per order priority: the sum of o_totalprice
-    (integer cents) after trimming the lowest and highest ``trim_pct``
-    percent of orders — an ORDER-STATISTIC aggregate no single built-in
+    (integer cents) after trimming the lowest and highest 10 percent of
+    orders — an ORDER-STATISTIC aggregate no single built-in
     agg expresses, and the honest use case for Spark's GROUPED_AGG
     pandas UDF flavor (the one Arrow UDF shape the engine did not yet
     exercise: scalar pandas_udf, mapInPandas, applyInPandas and the
@@ -393,7 +394,7 @@ def trimmed_sum_by_priority(orders: DataFrame,
     values genuinely must meet; memory is bounded by the largest group
     (priorities: ~n/5 rows each; for unbounded groups the histogram
     route of group_quantiles_disc is the scale path, which is why both
-    exist).  Trim count k = floor(n * pct / 100) per side, integer
+    exist).  Trim count k = floor(n * 10 / 100) per side, integer
     math; the output is an exact int64 the DuckDB twin reproduces with
     a sorted-list slice."""
     import warnings
@@ -412,7 +413,7 @@ def trimmed_sum_by_priority(orders: DataFrame,
         @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
         def trimmed_sum(v: pd.Series):
             a = np.sort(v.to_numpy(np.int64))
-            k = len(a) * trim_pct // 100
+            k = len(a) * 10 // 100
             return int(a[k:len(a) - k].sum())
 
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")

@@ -59,7 +59,7 @@ from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -170,10 +170,13 @@ class ResumableRunner:
 
     # -- the run -------------------------------------------------------------
 
-    def run(self, docs: DataFrame, fail_after: int | None = None) -> None:
-        """Process all pending buckets, one wave at a time; ``fail_after``
-        injects a crash once N buckets have been committed (SURVEY.md test
-        5.2-6), checked before each wave and each bucket's commit."""
+    def run(self, docs: DataFrame, fail_after: int | None = None) -> int:
+        """Process all pending buckets, one wave at a time, and return
+        the number of docs this call committed (0 when every bucket was
+        already done), summed from the waves' observed counts.
+        ``fail_after`` injects a crash once N buckets have been committed
+        (SURVEY.md test 5.2-6), checked before each wave and each
+        bucket's commit."""
         cfg = self.cfg
         pending = sorted(set(range(cfg.num_buckets)) - self.done_buckets())
         prior = self._prior_attempts()
@@ -182,7 +185,7 @@ class ResumableRunner:
         # scratch of dead runs: uncommitted wave output nothing will read
         shutil.rmtree(os.path.join(self.out_root, "_tmp"), ignore_errors=True)
         tmp_root = os.path.join(self.out_root, "_tmp", cfg.run_id)
-        committed = 0
+        committed = docs_committed = 0
 
         def check(b: int) -> None:
             if fail_after is not None and committed >= fail_after:
@@ -211,7 +214,9 @@ class ResumableRunner:
                           "w") as fh:
                     fh.write(cfg.run_id)
                 committed += 1
+                docs_committed += counts[b]["doc_count"]
         shutil.rmtree(tmp_root, ignore_errors=True)
+        return docs_committed
 
     def _num_waves(self, docs: DataFrame) -> int:
         """Waves for a run over ``docs``: one per round of input splits,
@@ -257,16 +262,13 @@ class ResumableRunner:
         of ``doc_id, spans, bucket``."""
         return self.spark.read.schema(OUTPUT).parquet(self.data_dir)
 
-    def read_lineage(self, dedupe: bool = True) -> DataFrame:
-        """Lineage rows, deduped by default to the latest attempt per
-        bucket: a crash in the window between the data rename and the
-        ``.done`` marker write replays the bucket on restart and appends a
-        second ``ok`` row, so raw reads would double-count rollups.  Pass
-        ``dedupe=False`` for the full audit trail."""
+    def read_lineage(self) -> DataFrame:
+        """Lineage rows deduped to the latest attempt per bucket: a crash
+        in the window between the data rename and the ``.done`` marker
+        write replays the bucket on restart and appends a second ``ok``
+        row, so raw reads of ``lineage_dir`` (the full audit trail) would
+        double-count rollups."""
         df = self.spark.read.parquet(self.lineage_dir)
-        if not dedupe:
-            return df
-        from pyspark.sql import Window
         w = Window.partitionBy("partition_id").orderBy(
             F.desc("attempt"), F.desc("finished_at"))
         return (df.withColumn("_rn", F.row_number().over(w))

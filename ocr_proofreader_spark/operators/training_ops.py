@@ -54,8 +54,8 @@ def doc_fingerprint_rolling(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.expr(fold).alias("rolling_hash"))
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k characteristic terms per doc by tf-idf.
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-3 characteristic terms per doc by tf-idf.
 
     Ranking is on INTEGERS (tf desc, then word) so ties are
     engine-portable; the float idf score is computed after ranking and
@@ -72,7 +72,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     line_dedup r3 and minhash_candidates r5).  The word-keyed join can
     still skew on stopwords, but joins are AQE-skew-splittable where
     windows are not, and the df side ships only vocab-sized partials.
-    Corpus size broadcast-joined; row_number window for the top-k (its
+    Corpus size broadcast-joined; row_number window for the top-3 (its
     doc_id partitions are bounded by per-doc vocabulary)."""
     words = docs.select("doc_id", F.explode(F.expr(TOKENS)).alias("word"))
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
@@ -82,7 +82,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
                                                 F.asc("word"))
     return (tf.join(df, "word")
             .withColumn("rk", F.row_number().over(w_rk))
-            .filter(F.col("rk") <= k)
+            .filter(F.col("rk") <= 3)
             .crossJoin(F.broadcast(n))
             .select("doc_id", "word", "tf", "df", "rk",
                     F.floor(F.col("tf")
@@ -93,15 +93,13 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
 EN_PUNCT_CLASS = "[^.,;:!?]"  # negated: keep only sentence punctuation
 
 
-def quality_metrics(docs: DataFrame,
-                    stopwords: tuple = None) -> DataFrame:
+def quality_metrics(docs: DataFrame) -> DataFrame:
     """Full quality-signal row per doc: token/char counts, sentence-
     punctuation count, stopword hits.  Counts (not ratios) on purpose:
     integer outputs are bit-portable across engines, while ratio
     rounding can land on half-way ties (k/2^a5^b) where Spark rounds
     half-up and DuckDB half-even; consumers derive ratios losslessly."""
-    stop = stopwords or EN_STOPWORDS
-    stop_list = ", ".join(f"'{w}'" for w in stop)
+    stop_list = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
     return docs.select(
         "doc_id",
         F.expr(f"size({TOKENS})").cast("long").alias("n_tokens"),
@@ -241,19 +239,23 @@ def token_count_bpe_merged(docs: DataFrame) -> DataFrame:
         .cast("long").alias("n_bpe_merged"))
 
 
-def minhash_jaccard_estimate(docs: DataFrame, bands: int = 16,
-                             max_doc: int = 100,
-                             tol: float = 0.2) -> DataFrame:
+# the bounded doc subset (doc_id < 100) both all-pairs Jaccard operators
+# run on
+JACCARD_MAX_DOC = 100
+
+
+def minhash_jaccard_estimate(docs: DataFrame) -> DataFrame:
     """Sketch-vs-exact gate for MinHash similarity: estimate each
     pair's Jaccard as the fraction of agreeing MinHash signatures
-    (bands independent permutation-free hashes -> per-pair std
-    sqrt(J(1-J)/bands)) and pin the mean absolute error against the
-    exact n-gram Jaccard under ``tol``.  Runs on the same bounded
+    (16 independent permutation-free hashes -> per-pair std
+    sqrt(J(1-J)/16)) and pin the mean absolute error against the
+    exact n-gram Jaccard under 0.2.  Runs on the same bounded
     subset as ``ngram_jaccard`` (the all-pairs estimator is the
     oracle-side baseline, not the scale path — LSH banding is).  Gate
     pattern as for ANN recall: the DuckDB twin recomputes the ground
     truth (exact pair count) and pins the boolean."""
-    sub = docs.filter(F.col("doc_id") < max_doc)
+    bands = 16
+    sub = docs.filter(F.col("doc_id") < JACCARD_MAX_DOC)
     sigs = minhash_signatures(sub, bands=bands)
     a = sigs.select(F.col("doc_id").alias("d1"), "band",
                     F.col("sig").alias("sig1"))
@@ -264,7 +266,7 @@ def minhash_jaccard_estimate(docs: DataFrame, bands: int = 16,
            .groupBy("d1", "d2")
            .agg((F.sum(F.when(F.col("sig1") == F.col("sig2"), 1)
                        .otherwise(0)) / bands).alias("est")))
-    exact = ngram_jaccard(docs, max_doc_id=max_doc)
+    exact = ngram_jaccard(docs)
     joined = exact.join(est, ["d1", "d2"], "left").select(
         "d1", "d2", "jaccard",
         F.coalesce("est", F.lit(0.0)).alias("est"))
@@ -272,7 +274,7 @@ def minhash_jaccard_estimate(docs: DataFrame, bands: int = 16,
         F.count("*").cast("long").alias("n_pairs"),
         F.avg(F.abs(F.col("est") - F.col("jaccard"))).alias("mae"))
         .select("n_pairs",
-                (F.col("mae") <= tol).alias("mae_floor_met")))
+                (F.col("mae") <= 0.2).alias("mae_floor_met")))
 
 
 # character n-gram profiles for the n-gram language-ID heuristic: high-
@@ -405,22 +407,21 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
                  F.count("*").alias("n_tokens")))
 
 
-def distinct_token_sketch(docs: DataFrame, rsd: float = 0.02,
-                          tol: float = 0.05) -> DataFrame:
+def distinct_token_sketch(docs: DataFrame) -> DataFrame:
     """Sketch-vs-exact gate for vocabulary size: HyperLogLog++
     (``approx_count_distinct``, Spark's built-in sketch — constant
     memory, map-side mergeable, the 100 TB way to count vocabulary)
     against the exact distinct count, with the relative error pinned
-    under ``tol``.  Gate pattern as for ANN recall: the DuckDB twin
+    under 5%.  Gate pattern as for ANN recall: the DuckDB twin
     recomputes the ground truth (exact count) and pins the boolean —
     a sketch drifting past tolerance fails the hash."""
     words = docs.select(F.explode(F.expr(TOKENS)).alias("word"))
     return (words.agg(
-        F.approx_count_distinct("word", rsd=rsd).alias("n_approx"),
+        F.approx_count_distinct("word", rsd=0.02).alias("n_approx"),
         F.countDistinct("word").alias("n_exact"))
         .select(F.col("n_exact").cast("long").alias("n_exact"),
                 (F.abs(F.col("n_approx") - F.col("n_exact"))
-                 <= tol * F.col("n_exact")).alias("within_tol")))
+                 <= 0.05 * F.col("n_exact")).alias("within_tol")))
 
 
 # ---------------------------------------------------------------------------
@@ -435,8 +436,8 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
                  F.count("*").alias("n_copies")))
 
 
-def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """doc_id, shingle (distinct word n-grams).
+def _shingles(docs: DataFrame) -> DataFrame:
+    """doc_id, shingle (distinct word 3-grams).
 
     Input is spread to the session parallelism (guide section 2.5): a
     single-file corpus otherwise runs the shingle build, the 4x band
@@ -449,13 +450,20 @@ def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     pays the post-aggregate exchange the keying elides (r6 A/B, same
     session)."""
     from ocr_proofreader_spark.partitioning import spread_input
-    return (spread_input(docs.select("doc_id", "text"), "doc_id")
+    return _ngrams(spread_input(docs.select("doc_id", "text"), "doc_id"),
+                   3, "shingle")
+
+
+def _ngrams(docs: DataFrame, n: int, alias: str) -> DataFrame:
+    """doc_id + the distinct word ``n``-grams of each doc's text, one
+    row each, named ``alias``; docs shorter than ``n`` tokens drop."""
+    return (docs
             .withColumn("toks", F.expr(TOKENS))
             .filter(F.expr(f"size(toks) >= {n}"))
             .select("doc_id", F.explode(F.expr(
                 f"array_distinct(transform(sequence(0, size(toks)-{n}),"
                 f" i -> concat_ws(' ', slice(toks, i+1, {n}))))"))
-                .alias("shingle")))
+                .alias(alias)))
 
 
 def minhash_signatures(docs: DataFrame, bands: int = 4) -> DataFrame:
@@ -479,8 +487,7 @@ def minhash_signatures(docs: DataFrame, bands: int = 4) -> DataFrame:
                  .alias("sig")))
 
 
-def minhash_candidates(docs: DataFrame, bands: int = 4,
-                       max_bucket: int = 64) -> DataFrame:
+def minhash_candidates(docs: DataFrame) -> DataFrame:
     """LSH candidate duplicate pairs: docs sharing any band signature.
 
     Degenerate hot buckets (boilerplate-heavy corpora put thousands of
@@ -494,14 +501,14 @@ def minhash_candidates(docs: DataFrame, bands: int = 4,
     that map-side-reduces a 10^9-row degenerate bucket to one partial
     per task instead of dragging every copy into a single Window
     partition to count it.  Buckets over the cap form a tiny blacklist
-    (at most ``n_rows / max_bucket`` entries, in practice a handful),
+    (at most ``n_rows / 64`` entries, in practice a handful),
     removed with a broadcast left-anti join — so no shuffle of the
     signature table keys on the skewed (band, sig) key ever happens
     for the hot buckets.  A plan test pins Window absent from this
     operator's plan."""
-    sig = minhash_signatures(docs, bands)
+    sig = minhash_signatures(docs)
     blacklist = (sig.groupBy("band", "sig").count()
-                 .filter(F.col("count") > max_bucket)
+                 .filter(F.col("count") > 64)
                  .select("band", "sig"))
     capped = sig.join(F.broadcast(blacklist), ["band", "sig"], "left_anti")
     a = capped.alias("a")
@@ -540,13 +547,11 @@ def simhash(docs: DataFrame, bits: int = 8) -> DataFrame:
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-DEFAULT_MIX_RATES = {"en": 8000, "fr": 5000}   # per-10000 keep rates
-DEFAULT_MIX_OTHER = 3000
+MIX_RATES = {"en": 8000, "fr": 5000}   # per-10000 keep rates
+MIX_OTHER = 3000                        # every other language
 
 
-def stratified_sample(docs: DataFrame,
-                      rates: dict[str, int] | None = None,
-                      other_rate: int = DEFAULT_MIX_OTHER) -> DataFrame:
+def stratified_sample(docs: DataFrame) -> DataFrame:
     """Deterministic stratified sampling — the data-MIXING step of
     corpus assembly (per-language/per-source keep rates reweight the
     final training mix).  A doc is kept iff the first 15 hex digits of
@@ -555,12 +560,11 @@ def stratified_sample(docs: DataFrame,
     partitionings and engines (no RNG, no sampleBy seed drift), and
     membership is decidable per row — one shuffle-free projection.
     Rates are integers-per-10000 to keep the comparison bit-portable."""
-    rates = DEFAULT_MIX_RATES if rates is None else rates
     bucket = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
                                  1, 15), 16, 10)
               .cast("long") % 10000)
-    rate = F.lit(other_rate)
-    for lang, r in sorted(rates.items()):
+    rate = F.lit(MIX_OTHER)
+    for lang, r in sorted(MIX_RATES.items()):
         rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     return docs.select(
         "doc_id", "lang",
@@ -600,43 +604,27 @@ def quality_filter(docs: DataFrame) -> DataFrame:
         F.array_join(reason_arr, ",").alias("reasons"))
 
 
-def simhash_near_dup(docs: DataFrame, bits: int = 16,
-                     max_hamming: int = 2) -> DataFrame:
+def simhash_near_dup(docs: DataFrame) -> DataFrame:
     """Near-duplicate PAIRS from SimHash fingerprints: docs whose
-    ``bits``-bit simhashes differ in at most ``max_hamming`` bit
-    positions, with the exact Hamming distance reported.
+    16-bit simhashes differ in at most 2 bit positions, with the exact
+    Hamming distance reported.
 
-    Scale shape: the fingerprint is split into ``max_hamming + 2``
-    bands and candidate pairs come from an equi-join on (band index,
-    band value) — by pigeonhole, <= max_hamming differing bits leave
-    at least two bands intact, so the banding is LOSSLESS for this
+    Scale shape: the fingerprint is split into 4 bands of 4 bits and
+    candidate pairs come from an equi-join on (band index, band
+    value) — by pigeonhole, <= 2 differing bits leave at least two
+    bands intact, so the banding is LOSSLESS for this
     radius (no recall loss, unlike MinHash banding) while turning the
     O(n^2) all-pairs comparison into sum-of-bucket^2 equi-join work.
     The exact ``bit_count(xor)`` post-filter then removes band-collision
     false positives.  The DuckDB twin runs the plain quadratic
     hamming join — a different plan whose agreement certifies the
     banding argument, not just the arithmetic."""
-    n_bands = max_hamming + 2
-    width = bits // n_bands + (1 if bits % n_bands else 0)
-    # ceil-division width can leave trailing bands entirely past the
-    # fingerprint (e.g. bits=16, max_hamming=3 -> 5 bands of width 4:
-    # band 4 shifts by 16 and is constant 0 for EVERY doc — one bucket
-    # holding all rows, an O(n^2) join).  Drop those bands; pigeonhole
-    # still holds because the surviving ceil(bits/width) bands tile the
-    # whole fingerprint, so <= max_hamming flipped bits leave >= 1
-    # intact band as long as n_bands > max_hamming — asserted here.
-    n_bands = min(n_bands, -(-bits // width))
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"simhash_near_dup: bits={bits} cannot support "
-            f"max_hamming={max_hamming} losslessly with banding")
-    sh = simhash(docs, bits)
+    sh = simhash(docs, 16)
     bands = sh.select(
         "doc_id", "simhash",
         F.posexplode(F.array(*[
-            (F.shiftright("simhash", b * width)
-             .bitwiseAND(F.lit((1 << width) - 1)))
-            for b in range(n_bands)])).alias("band", "bval"))
+            F.shiftright("simhash", b * 4).bitwiseAND(F.lit(15))
+            for b in range(4)])).alias("band", "bval"))
     a = bands.select(F.col("doc_id").alias("d1"),
                      F.col("simhash").alias("s1"), "band", "bval")
     b = bands.select(F.col("doc_id").alias("d2"),
@@ -646,7 +634,7 @@ def simhash_near_dup(docs: DataFrame, bits: int = 16,
             .select("d1", "d2",
                     F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
                     .cast("long").alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
+            .filter(F.col("hamming") <= 2)
             .distinct())
 
 
@@ -703,33 +691,39 @@ def synth_pii(docs: DataFrame) -> DataFrame:
         .otherwise(F.col("text")))
 
 
-def benchmark_contamination(docs: DataFrame, n: int = 8,
-                            bench_max_doc: int = 5) -> DataFrame:
+# The decontamination benchmark: the 8-gram set of the docs with
+# doc_id < 5 — deterministic and self-contained; a real deployment swaps
+# in the eval-suite table.
+BENCH_GRAM_N = 8
+BENCH_MAX_DOC = 5
+
+
+def _bench_split(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(distinct benchmark grams, (doc_id, gram) rows of every corpus
+    doc) — corpus docs are the ones at or past ``BENCH_MAX_DOC``."""
+    grams = _ngrams(docs, BENCH_GRAM_N, "gram")
+    bench = (grams.filter(F.col("doc_id") < BENCH_MAX_DOC)
+             .select("gram").distinct())
+    return bench, grams.filter(F.col("doc_id") >= BENCH_MAX_DOC)
+
+
+def benchmark_contamination(docs: DataFrame) -> DataFrame:
     """Benchmark-contamination check (decontamination is a standard
     LLM-corpus step: training text sharing long n-grams with an eval
-    set must be flagged).  The 'benchmark' here is the ``n``-gram set
-    of docs with doc_id < ``bench_max_doc`` — deterministic and
-    self-contained; a real deployment swaps in the eval-suite table.
+    set must be flagged) against the ``BENCH_GRAM_N``-gram set of the
+    benchmark docs.
 
     Scale shape: benchmark n-gram sets are small (eval suites are MBs,
     not TBs), so the probe is a BROADCAST semi-join against the
     benchmark grams — the corpus-side scan never shuffles.  Output is
     per-doc hit count + flag; benchmark docs themselves are excluded
     from the report."""
-    grams = (docs
-             .withColumn("toks", F.expr(TOKENS))
-             .filter(F.expr(f"size(toks) >= {n}"))
-             .select("doc_id", F.explode(F.expr(
-                 f"array_distinct(transform(sequence(0, size(toks)-{n}),"
-                 f" i -> concat_ws(' ', slice(toks, i+1, {n}))))"))
-                 .alias("gram")))
-    bench = (grams.filter(F.col("doc_id") < bench_max_doc)
-             .select("gram").distinct())
-    hits = (grams.filter(F.col("doc_id") >= bench_max_doc)
+    bench, corpus = _bench_split(docs)
+    hits = (corpus
             .join(F.broadcast(bench), "gram", "left_semi")
             .groupBy("doc_id")
             .agg(F.count("*").alias("n_hits")))
-    return (docs.filter(F.col("doc_id") >= bench_max_doc)
+    return (docs.filter(F.col("doc_id") >= BENCH_MAX_DOC)
             .select("doc_id")
             .join(hits, "doc_id", "left")
             .select("doc_id",
@@ -738,15 +732,14 @@ def benchmark_contamination(docs: DataFrame, n: int = 8,
             .withColumn("contaminated", F.col("n_hits") > 0))
 
 
-def ngram_jaccard(docs: DataFrame, max_doc_id: int = 100,
-                  n: int = 3) -> DataFrame:
-    """Pairwise n-gram Jaccard similarity for a bounded doc subset.
+def ngram_jaccard(docs: DataFrame) -> DataFrame:
+    """Pairwise 3-gram Jaccard similarity for the docs with doc_id <
+    ``JACCARD_MAX_DOC``.
 
     Computed relationally: |intersection| via a shingle equi-join,
     |union| = |A| + |B| - |intersection|.  Pairs without common shingles
     are omitted (their Jaccard is 0)."""
-    subset = docs.filter(F.col("doc_id") < max_doc_id)
-    sh = _shingles(subset, n)
+    sh = _shingles(docs.filter(F.col("doc_id") < JACCARD_MAX_DOC))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
@@ -765,8 +758,7 @@ def ngram_jaccard(docs: DataFrame, max_doc_id: int = 100,
                             3).alias("jaccard")))
 
 
-def dedup_clusters(docs: DataFrame, bands: int = 4,
-                   max_bucket: int = 64, max_iter: int = 40) -> DataFrame:
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """Duplicate CLUSTERS from the LSH candidate pairs: connected
     components by iterative min-label propagation; ``cluster`` = the
     smallest doc_id in each component, ``is_keeper`` = the one row per
@@ -779,8 +771,8 @@ def dedup_clusters(docs: DataFrame, bands: int = 4,
     rounds, not O(diameter).  That matters: LSH candidate graphs over
     near-duplicate corpora form LONG CHAINS (A~B~C... without A~C), and
     the sf0.01 fixture's giant component needs 16 jumped rounds where
-    plain propagation needs its full ~300-hop diameter.  ``max_iter``
-    40 covers diameters past 2^30 — a backstop, not a tuning knob; the
+    plain propagation needs its full ~300-hop diameter.  The 40-round
+    cap covers diameters past 2^30 — a backstop, not a tuning knob; the
     loop exits on the first converged round (the fixpoint is exactly
     the per-component min, which the recursive-CTE DuckDB twin
     recomputes independently).  Per-round ``localCheckpoint`` truncates
@@ -789,12 +781,13 @@ def dedup_clusters(docs: DataFrame, bands: int = 4,
     check jobs — one extra no-op round past the fixpoint at worst,
     same result).  Deterministic (min-label is order-independent),
     like every op the resume protocol replays."""
-    pairs = minhash_candidates(docs, bands, max_bucket)
+    pairs = minhash_candidates(docs)
     edges = pairs.union(
         pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
     edges = edges.localCheckpoint(eager=True)
     labels = docs.select(F.col("doc_id").alias("node"),
                          F.col("doc_id").alias("label"))
+    max_iter = 40
     for it in range(max_iter):
         nbr = (edges.join(labels, edges.d2 == labels.node)
                .groupBy("d1").agg(F.min("label").alias("nbr_label")))
@@ -866,15 +859,20 @@ def _seq_norm(v) -> float:
     return math.sqrt(acc)
 
 
-def _cosine_raw(emb: DataFrame, query_vec_id: int) -> DataFrame:
-    """vec_id + full-precision cosine vs one broadcast query row.
+# Every similarity query runs against vector 0 and returns its top 10.
+QUERY_VEC_ID = 0
+TOP_K = 10
+
+
+def _cosine_raw(emb: DataFrame) -> DataFrame:
+    """vec_id + full-precision cosine vs the broadcast query row.
 
     The query norm is computed ONCE on the broadcast side (r6): it is a
     per-query constant, and the old per-row ``sqrt(aggregate(q...))``
     re-ran a dim-length fold for every scanned vector — a third of the
     scan's HOF work.  Same operations on the same doubles, so the
     division is bit-identical and the driver hashes are unchanged."""
-    q = (emb.filter(F.col("vec_id") == query_vec_id)
+    q = (emb.filter(F.col("vec_id") == QUERY_VEC_ID)
          .select(F.col("embedding").alias("q"))
          .withColumn("q_norm", F.expr(_norm_expr("q"))))
     return (emb.crossJoin(F.broadcast(q))
@@ -884,23 +882,22 @@ def _cosine_raw(emb: DataFrame, query_vec_id: int) -> DataFrame:
                         * F.col("q_norm"))).alias("c")))
 
 
-def cosine_to_query(emb: DataFrame, query_vec_id: int = 0) -> DataFrame:
-    """Brute-force cosine of every vector against one query vector.
+def cosine_to_query(emb: DataFrame) -> DataFrame:
+    """Brute-force cosine of every vector against the query vector.
 
     The query row is broadcast (single row); the scan itself never
     shuffles — this is the exact-search baseline that any ANN variant is
     measured against."""
     # + 0.0 canonicalizes IEEE -0.0 (engines disagree on its rendering)
-    return _cosine_raw(emb, query_vec_id).select(
+    return _cosine_raw(emb).select(
         "vec_id", (F.round("c", 3) + F.lit(0.0)).alias("cosine"))
 
 
-def ann_topk_brute(emb: DataFrame, query_vec_id: int = 0,
-                   k: int = 10) -> DataFrame:
+def ann_topk_brute(emb: DataFrame) -> DataFrame:
     # rank on the UNROUNDED cosine (ties at 3dp would be engine-dependent)
-    return (_cosine_raw(emb, query_vec_id)
+    return (_cosine_raw(emb)
             .orderBy(F.desc("c"), F.asc("vec_id"))
-            .limit(k)
+            .limit(TOP_K)
             .select("vec_id", (F.round("c", 3) + F.lit(0.0)).alias("cosine")))
 
 
@@ -909,10 +906,10 @@ def _lsh_planes(dim: int, n_planes: int) -> np.ndarray:
     return np.random.RandomState(42).randn(n_planes, dim)
 
 
-def _query_vec(emb: DataFrame, query_vec_id: int) -> np.ndarray:
+def _query_vec(emb: DataFrame) -> np.ndarray:
     """The query embedding, collected ONCE (one driver job) — dimension,
     probe buckets/cells and the rerank literal all derive from it."""
-    qrow = (emb.filter(F.col("vec_id") == query_vec_id)
+    qrow = (emb.filter(F.col("vec_id") == QUERY_VEC_ID)
             .select("embedding").first())
     return np.asarray(qrow["embedding"], dtype=np.float64)
 
@@ -953,12 +950,11 @@ def _lsh_query_codes(qv: np.ndarray, planes: np.ndarray,
                 | (t << bits)) for t in range(tables)]
 
 
-def ann_topk_lsh(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
-                 tables: int = 10, bits: int = 3) -> DataFrame:
+def ann_topk_lsh(emb: DataFrame) -> DataFrame:
     """Scale path: multi-table sign-random-projection LSH + exact rerank
     on the union of the query's buckets.
 
-    Classic (L, m) LSH: ``tables`` independent tables of ``bits``
+    Classic (L, m) LSH: L = 10 independent tables of m = 3
     hyperplanes each; a vector is a candidate iff it lands in the
     query's bucket of ANY table — P(candidate) = 1-(1-(1-θ/π)^m)^L,
     the amplification that buys high recall on weakly-concentrated data.
@@ -975,7 +971,8 @@ def ann_topk_lsh(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
     shape the data-adaptive IVF path (``ann_topk_ivf``: recall 1.0
     scanning 1/4 of cells) is the better scale path; the gates for both
     are driver-checked via ``ann_recall``."""
-    qv = _query_vec(emb, query_vec_id)
+    tables, bits = 10, 3
+    qv = _query_vec(emb)
     planes = _lsh_planes(qv.size, tables * bits)
     codes_of = _srp_codes(planes, tables, bits)
     qcodes = _lsh_query_codes(qv, planes, tables, bits)
@@ -990,12 +987,16 @@ def ann_topk_lsh(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
                            * F.lit(_seq_norm(qv))), 3)
                     .alias("cosine"))
             .orderBy(F.desc("cosine"), F.asc("vec_id"))
-            .limit(k))
+            .limit(TOP_K))
 
 
-def embedding_near_dup(emb: DataFrame, threshold: float = 0.40) -> DataFrame:
+# cosine at or above which two embeddings are near duplicates
+NEAR_DUP_COSINE = 0.40
+
+
+def embedding_near_dup(emb: DataFrame) -> DataFrame:
     """Exact embedding-cosine near-duplicate pairs: all (v1 < v2) with
-    cosine >= threshold.
+    cosine >= ``NEAR_DUP_COSINE``.
 
     This is the exact O(n^2) baseline (norms computed once per row, the
     smaller side broadcast); at corpus scale the blocked
@@ -1012,17 +1013,16 @@ def embedding_near_dup(emb: DataFrame, threshold: float = 0.40) -> DataFrame:
     return (a.join(F.broadcast(b), F.col("v1") < F.col("v2"))
             .withColumn("c", F.expr(_dot_expr("e1", "e2"))
                         / (F.col("n1") * F.col("n2")))
-            .filter(F.col("c") >= threshold)
+            .filter(F.col("c") >= NEAR_DUP_COSINE)
             .select("v1", "v2",
                     (F.round("c", 3) + F.lit(0.0)).alias("cosine")))
 
 
-def embedding_near_dup_lsh(emb: DataFrame, threshold: float = 0.40,
-                           bands: int = 8, r: int = 3) -> DataFrame:
+def embedding_near_dup_lsh(emb: DataFrame) -> DataFrame:
     """Scale path for embedding near-dup: banded sign-random-projection
-    blocking (bands x r deterministic hyperplanes; a pair is a candidate
-    iff all r bits of some band agree), then exact cosine on candidates
-    only.
+    blocking (8 bands x 3 deterministic hyperplanes; a pair is a
+    candidate iff all 3 bits of some band agree), then exact cosine on
+    candidates only.
 
     The equi-join on band codes replaces the all-pairs cross join —
     O(sum of bucket^2) instead of O(n^2), the same blocking structure as
@@ -1030,6 +1030,7 @@ def embedding_near_dup_lsh(emb: DataFrame, threshold: float = 0.40,
     ``embedding_near_dup`` (the exact filter never admits a false
     positive); recall is governed by (bands, r) and pinned by
     tests/test_embedding_ops.py."""
+    bands, r = 8, 3
     first = emb.select(F.size("embedding").alias("d")).first()
     dim = int(first["d"])
     planes = _lsh_planes(dim, bands * r)
@@ -1051,19 +1052,20 @@ def embedding_near_dup_lsh(emb: DataFrame, threshold: float = 0.40,
     return (cand.join(e1, "v1").join(e2, "v2")
             .withColumn("c", F.expr(_dot_expr("e1", "e2"))
                         / (F.col("n1") * F.col("n2")))
-            .filter(F.col("c") >= threshold)
+            .filter(F.col("c") >= NEAR_DUP_COSINE)
             .select("v1", "v2",
                     (F.round("c", 3) + F.lit(0.0)).alias("cosine")))
 
 
 _LLOYD_SCALE = 1 << 20   # fixed-point scale for exact distributed sums
+IVF_CELLS = 16           # coarse-quantizer cells
+IVF_PROBE = 4            # cells a query reranks in
 
 
-def _ivf_centroids(emb: DataFrame, n_cells: int,
-                   sweeps: int = 2) -> np.ndarray:
+def _ivf_centroids(emb: DataFrame) -> np.ndarray:
     """Deterministic coarse-quantizer centroids: FAISS-style sample
-    init (the embeddings of the n_cells smallest vec_ids, L2-
-    normalized) refined by ``sweeps`` fixed-iteration Lloyd passes.
+    init (the embeddings of the ``IVF_CELLS`` smallest vec_ids, L2-
+    normalized) refined by 2 fixed-iteration Lloyd passes.
 
     Every sweep is bit-reproducible — the property the resume protocol
     relies on — because the per-cell mean is computed from FIXED-POINT
@@ -1075,17 +1077,17 @@ def _ivf_centroids(emb: DataFrame, n_cells: int,
     ~10^12 unit-scale components per (cell, dim) before overflow,
     beyond any single cell at target scale.
 
-    Driver traffic stays bounded: one n_cells-row init collect plus
-    one n_cells x dim fixed-point-sum collect per sweep (16 x dim
-    rows), pinned by tests/test_embedding_ops.py.  Empty cells keep
+    Driver traffic stays bounded: one 16-row init collect plus one
+    16 x dim fixed-point-sum collect per sweep, pinned by
+    tests/test_embedding_ops.py.  Empty cells keep
     their previous centroid (the standard Lloyd convention)."""
-    cents = (emb.orderBy("vec_id").limit(n_cells)
+    cents = (emb.orderBy("vec_id").limit(IVF_CELLS)
              .select("embedding").collect())
     C = np.stack([np.asarray(row["embedding"], dtype=np.float64)
                   for row in cents])
     C = C / np.linalg.norm(C, axis=1, keepdims=True)
-    for _ in range(sweeps):
-        assigned = ivf_assign(emb, n_cells, centroids=C)
+    for _ in range(2):
+        assigned = ivf_assign(emb, C)
         rows = (assigned
                 .select("cell", F.posexplode("embedding")
                         .alias("dim", "v"))
@@ -1096,7 +1098,7 @@ def _ivf_centroids(emb: DataFrame, n_cells: int,
                      F.count("*").alias("n"))
                 .collect())
         acc = np.zeros_like(C)
-        cnt = np.zeros(n_cells, dtype=np.int64)
+        cnt = np.zeros(IVF_CELLS, dtype=np.int64)
         for r in rows:
             acc[r["cell"], r["dim"]] = r["s"] / _LLOYD_SCALE
             cnt[r["cell"]] = r["n"]
@@ -1107,72 +1109,66 @@ def _ivf_centroids(emb: DataFrame, n_cells: int,
     return C
 
 
-def ivf_assign(emb: DataFrame, n_cells: int = 16,
-               centroids: np.ndarray | None = None) -> DataFrame:
+def ivf_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
     """emb + ``cell`` = argmax-cosine centroid id: one Arrow-vectorized
     matmul pass.  At cluster scale ``cell`` doubles as the table's
-    physical partition key so a probe prunes files.  Pass precomputed
-    ``centroids`` to avoid re-running the centroid job."""
-    Cn = _ivf_centroids(emb, n_cells) if centroids is None else centroids
-
+    physical partition key so a probe prunes files."""
     @F.pandas_udf(T.IntegerType())
     def cell_of(vs: pd.Series) -> pd.Series:
         mat = np.stack(vs.to_numpy()).astype(np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        return pd.Series(np.argmax(mat @ Cn.T, axis=1).astype("int32"))
+        return pd.Series(np.argmax(mat @ centroids.T, axis=1)
+                         .astype("int32"))
 
     return emb.withColumn("cell", cell_of("embedding"))
 
 
 def ivf_probe_cells(query_vec: np.ndarray,
-                    centroids: np.ndarray, n_probe: int) -> list[int]:
-    """The n_probe cell ids nearest (by cosine) to the query vector —
-    pure driver-side math over the already-collected centroids."""
+                    centroids: np.ndarray) -> list[int]:
+    """The ``IVF_PROBE`` cell ids nearest (by cosine) to the query
+    vector — pure driver-side math over the already-collected
+    centroids."""
     qv = query_vec / np.linalg.norm(query_vec)
-    return [int(c) for c in np.argsort(-(centroids @ qv))[:n_probe]]
+    return [int(c) for c in np.argsort(-(centroids @ qv))[:IVF_PROBE]]
 
 
-def ann_topk_ivf(emb: DataFrame, query_vec_id: int = 0, k: int = 10,
-                 n_cells: int = 16, n_probe: int = 4) -> DataFrame:
+def ann_topk_ivf(emb: DataFrame) -> DataFrame:
     """IVF-Flat ANN: a coarse quantizer partitions vectors into cells;
-    the query reranks exactly inside its n_probe nearest cells only —
-    the candidate scan touches ~n_probe/n_cells of the table instead of
+    the query reranks exactly inside its ``IVF_PROBE`` nearest cells
+    only — the candidate scan touches ~4/16 of the table instead of
     all of it.
 
     Exactly two driver jobs launch before the rerank: one centroid
-    collect (n_cells rows) and one query-vector collect — probe-cell
+    collect (16 rows) and one query-vector collect — probe-cell
     selection is driver-side math and the rerank joins a literal."""
-    Cn = _ivf_centroids(emb, n_cells)
-    qv = _query_vec(emb, query_vec_id)
-    probe = ivf_probe_cells(qv, Cn, n_probe)
-    cand = (ivf_assign(emb, n_cells, centroids=Cn)
-            .filter(F.col("cell").isin(probe)))
+    Cn = _ivf_centroids(emb)
+    qv = _query_vec(emb)
+    probe = ivf_probe_cells(qv, Cn)
+    cand = ivf_assign(emb, Cn).filter(F.col("cell").isin(probe))
     return (cand.withColumn("q", _lit_vec(qv))
             .withColumn("c", F.expr(_dot_expr("embedding", "q"))
                         / (F.expr(_norm_expr("embedding"))
                            * F.lit(_seq_norm(qv))))
             .orderBy(F.desc("c"), F.asc("vec_id"))
-            .limit(k)
+            .limit(TOP_K)
             .select("vec_id", "cell",
                     (F.round("c", 3) + F.lit(0.0)).alias("cosine")))
 
 
-def ann_recall(emb: DataFrame, variant: str = "lsh",
-               query_vec_id: int = 0, k: int = 10,
-               floor: float = 0.8) -> DataFrame:
+def ann_recall(emb: DataFrame, variant: str = "lsh") -> DataFrame:
     """Driver-checkable recall gate for an ANN scale path: one row
     ``(k, brute_topk_digest, recall_floor_met)``.
 
     ``brute_topk_digest`` is md5 over the sorted brute-force top-k ids —
     an oracle (DuckDB) recomputes it independently from the exact-search
     SQL, so the ground-truth side of the gate is genuinely cross-checked.
-    ``recall_floor_met`` asserts |approx ∩ brute| >= ceil(floor*k); the
+    ``recall_floor_met`` asserts |approx ∩ brute| >= ceil(0.8 k); the
     oracle cannot run LSH/IVF, so its twin pins the column to TRUE — a
     recall regression below the floor flips the value and fails the
     hash."""
-    brute = ann_topk_brute(emb, query_vec_id, k).select("vec_id")
+    brute = ann_topk_brute(emb).select("vec_id")
     fn = ann_topk_lsh if variant == "lsh" else ann_topk_ivf
-    approx = fn(emb, query_vec_id, k).select("vec_id")
+    approx = fn(emb).select("vec_id")
     bstats = brute.agg(
         F.count("*").alias("k"),
         F.md5(F.concat_ws(",", F.sort_array(
@@ -1183,13 +1179,11 @@ def ann_recall(emb: DataFrame, variant: str = "lsh",
     return (bstats.crossJoin(hits)
             .select("k", "brute_topk_digest",
                     (F.col("n_hits")
-                     >= F.ceil(F.lit(floor) * F.col("k")).cast("long"))
+                     >= F.ceil(F.lit(0.8) * F.col("k")).cast("long"))
                     .alias("recall_floor_met")))
 
 
-def near_dup_lsh_quality(emb: DataFrame,
-                         threshold: float = 0.40,
-                         floor: float = 0.8) -> DataFrame:
+def near_dup_lsh_quality(emb: DataFrame) -> DataFrame:
     """Driver-checkable quality gate for the blocked near-dup path: one
     row ``(n_exact, subset_ok, recall_floor_met)``.
 
@@ -1197,10 +1191,10 @@ def near_dup_lsh_quality(emb: DataFrame,
     recomputed independently by the DuckDB twin; ``subset_ok`` asserts
     the LSH output admits no pair outside the exact answer (the exact
     re-filter guarantees it — a violation is a bug, not tuning) and
-    ``recall_floor_met`` asserts recall >= floor, both pinned TRUE by
+    ``recall_floor_met`` asserts recall >= 0.8, both pinned TRUE by
     the twin."""
-    exact = embedding_near_dup(emb, threshold).select("v1", "v2")
-    lsh = embedding_near_dup_lsh(emb, threshold).select("v1", "v2")
+    exact = embedding_near_dup(emb).select("v1", "v2")
+    lsh = embedding_near_dup_lsh(emb).select("v1", "v2")
     n_exact = exact.agg(F.count("*").alias("n_exact"))
     n_lsh = lsh.agg(F.count("*").alias("n_lsh"))
     hits = (lsh.join(exact, ["v1", "v2"], "left_semi")
@@ -1209,12 +1203,12 @@ def near_dup_lsh_quality(emb: DataFrame,
             .select("n_exact",
                     (F.col("n_hits") == F.col("n_lsh")).alias("subset_ok"),
                     (F.col("n_hits")
-                     >= F.ceil(F.lit(floor) * F.col("n_exact"))
+                     >= F.ceil(F.lit(0.8) * F.col("n_exact"))
                      .cast("long"))
                     .alias("recall_floor_met")))
 
 
-def embedding_project(emb: DataFrame, out_dim: int = 16) -> DataFrame:
+def embedding_project(emb: DataFrame) -> DataFrame:
     """Random-projection dimensionality reduction (Johnson-Lindenstrauss
     style): one Arrow matmul pass against a SEEDLESS md5-derived matrix
     P[i][j] = (md5("i|j")[0] - 127.5) / 127.5 — a hash-defined matrix
@@ -1229,7 +1223,7 @@ def embedding_project(emb: DataFrame, out_dim: int = 16) -> DataFrame:
     dim = int(dim_row["d"])
     P = np.array([[(hashlib.md5(f"{i}|{j}".encode()).digest()[0]
                     - 127.5) / 127.5
-                   for j in range(out_dim)] for i in range(dim)])
+                   for j in range(16)] for i in range(dim)])
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def proj(vs: pd.Series) -> pd.Series:
@@ -1286,7 +1280,7 @@ def label_centroid_sim(emb: DataFrame) -> DataFrame:
                  F.count("*").alias("n_members")))
 
 
-def vocab_sketch_rollup(docs: DataFrame, tol: float = 0.05) -> DataFrame:
+def vocab_sketch_rollup(docs: DataFrame) -> DataFrame:
     """MERGEABLE vocabulary sketches: one Apache DataSketches HLL per
     language (``hll_sketch_agg``) plus the corpus total obtained by
     UNIONING the stored per-language sketches (``hll_union_agg``) —
@@ -1296,7 +1290,7 @@ def vocab_sketch_rollup(docs: DataFrame, tol: float = 0.05) -> DataFrame:
     memory, where ``approx_count_distinct`` gives one opaque number.
 
     Gate pattern (like distinct_token_sketch / ANN recall): each row
-    pins |approx - exact| <= tol * exact as a boolean the DuckDB twin
+    pins |approx - exact| <= 0.05 * exact as a boolean the DuckDB twin
     recomputes from the exact side only — sketch drift fails the
     hash.  Output: one row per lang plus an ``__all__`` row from the
     sketch UNION."""
@@ -1319,7 +1313,7 @@ def vocab_sketch_rollup(docs: DataFrame, tol: float = 0.05) -> DataFrame:
     return (per.unionByName(union)
             .select("lang", F.col("n_exact").cast("long").alias("n_exact"),
                     (F.abs(F.col("n_approx") - F.col("n_exact"))
-                     <= tol * F.col("n_exact")).alias("within_tol")))
+                     <= 0.05 * F.col("n_exact")).alias("within_tol")))
 
 
 BLOOM_M = 1 << 20          # bits in the filter
@@ -1333,8 +1327,7 @@ def _bloom_pos(gram, j):
         .cast("long") % BLOOM_M)
 
 
-def contamination_bloom(docs: DataFrame, n: int = 8,
-                        bench_max_doc: int = 5) -> DataFrame:
+def contamination_bloom(docs: DataFrame) -> DataFrame:
     """Bloom-filter decontamination pre-screen, expressed RELATIONALLY
     so it is bit-exactly reproducible by the DuckDB twin (false
     positives included — the twin recomputes the same md5 bit math,
@@ -1355,19 +1348,10 @@ def contamination_bloom(docs: DataFrame, n: int = 8,
     Output per corpus doc: exact hit count, contaminated flag, bloom-
     positive count (>= exact by construction — no false negatives —
     which the twin verifies by recomputing both sides)."""
-    grams = (docs
-             .withColumn("toks", F.expr(TOKENS))
-             .filter(F.expr(f"size(toks) >= {n}"))
-             .select("doc_id", F.explode(F.expr(
-                 f"array_distinct(transform(sequence(0, size(toks)-{n}),"
-                 f" i -> concat_ws(' ', slice(toks, i+1, {n}))))"))
-                 .alias("gram")))
-    bench = (grams.filter(F.col("doc_id") < bench_max_doc)
-             .select("gram").distinct())
+    bench, corpus = _bench_split(docs)
     bits = (bench.select(F.explode(F.array(
         *[_bloom_pos(F.col("gram"), j) for j in range(BLOOM_K)]))
         .alias("pos")).distinct())
-    corpus = grams.filter(F.col("doc_id") >= bench_max_doc)
     probe = (corpus.select(
         "doc_id", "gram",
         F.explode(F.array(*[_bloom_pos(F.col("gram"), j)
@@ -1381,7 +1365,7 @@ def contamination_bloom(docs: DataFrame, n: int = 8,
                  .agg(F.count("*").alias("n_bloom")))
     exact = (corpus.join(F.broadcast(bench), "gram", "left_semi")
              .groupBy("doc_id").agg(F.count("*").alias("n_exact")))
-    return (docs.filter(F.col("doc_id") >= bench_max_doc)
+    return (docs.filter(F.col("doc_id") >= BENCH_MAX_DOC)
             .select("doc_id")
             .join(bloom_pos, "doc_id", "left")
             .join(exact, "doc_id", "left")
@@ -1395,7 +1379,11 @@ def contamination_bloom(docs: DataFrame, n: int = 8,
                 .alias("n_bloom_hits")))
 
 
-def bpe_learn_merges(docs: DataFrame, n_merges: int = 6) -> DataFrame:
+# merges bpe_learn_merges learns, and its DuckDB twin replays
+BPE_LEARN_MERGES = 6
+
+
+def bpe_learn_merges(docs: DataFrame) -> DataFrame:
     """LEARN a BPE merge table from the corpus — tokenizer TRAINING,
     the counterpart of :func:`token_count_bpe_merged` (which applies a
     fixed table).  Standard Sennrich loop: count adjacent symbol pairs
@@ -1431,7 +1419,7 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 6) -> DataFrame:
         f"i -> concat(element_at({toks}, i), '{s}', "
         f"element_at({toks}, i + 1))) END")
     learned = []
-    for r in range(n_merges):
+    for r in range(BPE_LEARN_MERGES):
         best = (encs
                 .select(F.explode(F.expr(pairs_expr)).alias("pair"))
                 .groupBy("pair").agg(F.count("*").alias("cnt"))
@@ -1448,7 +1436,7 @@ def bpe_learn_merges(docs: DataFrame, n_merges: int = 6) -> DataFrame:
         learned, "rank long, a string, b string, pair_count long")
 
 
-def bpe_learn_merges_sql(n_merges: int = 6) -> str:
+def bpe_learn_merges_sql() -> str:
     """DuckDB twin of :func:`bpe_learn_merges`: the full learning loop
     as chained CTEs — round r's best pair is an argmax CTE whose
     fields feed round r+1's replace through scalar subqueries."""
@@ -1466,7 +1454,7 @@ def bpe_learn_merges_sql(n_merges: int = 6) -> str:
       SELECT ({sep} || array_to_string(string_split(seg, ''),
                                        {sep} || {sep}) || {sep}) AS enc
       FROM segs)"""]
-    for r in range(n_merges):
+    for r in range(BPE_LEARN_MERGES):
         toks = (f"string_split(substring(enc, 2, length(enc) - 2),"
                 f" {sep} || {sep})")
         parts.append(f"""p{r} AS (
@@ -1488,13 +1476,14 @@ def bpe_learn_merges_sql(n_merges: int = 6) -> str:
     selects = " UNION ALL ".join(
         f"SELECT CAST({r} AS BIGINT) AS rank, a, b, "
         f"CAST(cnt AS BIGINT) AS pair_count FROM b{r}"
-        for r in range(n_merges))
+        for r in range(BPE_LEARN_MERGES))
     return "WITH " + ",\n    ".join(parts) + "\n" + selects
 
 
-def heavy_hitters_gate(docs: DataFrame, k: int = 64) -> DataFrame:
-    """Misra-Gries heavy hitters with the algorithm's own guarantee as
-    the contract: every word with true frequency > N/k MUST appear in
+def heavy_hitters_gate(docs: DataFrame) -> DataFrame:
+    """Misra-Gries heavy hitters (k = 64 counters) with the algorithm's
+    own guarantee as the contract: every word with true frequency > N/k
+    MUST appear in
     the merged candidate summary (no false negatives — the theorem,
     not a tolerance).
 
@@ -1516,6 +1505,7 @@ def heavy_hitters_gate(docs: DataFrame, k: int = 64) -> DataFrame:
 
     import pandas as pd
 
+    k = 64
     words = docs.select(F.explode(F.expr(TOKENS)).alias("word"))
 
     def mg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

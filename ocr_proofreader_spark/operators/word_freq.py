@@ -14,7 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocr_proofreader_spark.functions.rules import ALPHA_CLASS, TOKEN_CLASS
+from ocr_proofreader_spark.functions.rules import (ALPHA_CLASS, FREQ_K,
+                                                   TOKEN_CLASS)
 
 
 def r1_words(df: DataFrame, text: str, *keys: str) -> DataFrame:
@@ -53,7 +54,7 @@ def word_freq(docs: DataFrame) -> DataFrame:
 
 
 def lexicon_table(spark: SparkSession, base: frozenset,
-                  wf: DataFrame, freq_k: int = 5) -> DataFrame:
+                  wf: DataFrame) -> DataFrame:
     """S11: base dictionary UNION book-frequent words -> lexicon(word, source).
 
     Book-frequent = alphabetic and freq >= K within some book.  `distinct`
@@ -65,7 +66,7 @@ def lexicon_table(spark: SparkSession, base: frozenset,
         pd.DataFrame({"word": sorted(base), "source": "base"}),
         "word string, source string")
     frequent = (wf
-                .filter((F.col("freq") >= freq_k)
+                .filter((F.col("freq") >= FREQ_K)
                         # rlike finds, so anchor at both ends
                         & F.col("word").rlike(f"^[{ALPHA_CLASS}]+$"))
                 .select("word").distinct()

@@ -24,10 +24,7 @@ def spread_input(df: DataFrame, *keys: str,
                  partitions: int | None = None) -> DataFrame:
     """Repartition ``df`` by ``keys`` into ``partitions`` (default: the
     session parallelism) iff the plan has fewer than ``min(partitions,
-    parallelism)`` splits; no-op otherwise, and for streaming frames,
-    which cannot be inspected this way."""
-    if df.isStreaming:
-        return df
+    parallelism)`` splits; no-op otherwise."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     target = partitions or parallelism
     if df.rdd.getNumPartitions() >= min(target, parallelism):

@@ -22,12 +22,12 @@ PAGE_WORDS = 40
 WRAP_COLS = 60
 
 
-def _wrap(words: list[str], cols: int = WRAP_COLS) -> str:
+def _wrap(words: list[str]) -> str:
     lines, cur = [], ""
     for w in words:
         if not cur:
             cur = w
-        elif len(cur) + 1 + len(w) <= cols:
+        elif len(cur) + 1 + len(w) <= WRAP_COLS:
             cur += " " + w
         else:
             lines.append(cur)

@@ -15,12 +15,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ocr_proofreader_spark.schemas import DOCUMENTS_IN
 
+SEED = 42   # the generator seed every bench corpus is built from
 
-def generate_corpus(spark: SparkSession, n_docs: int,
-                    seed: int = 42) -> DataFrame:
+
+def generate_corpus(spark: SparkSession, n_docs: int) -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from fixtures.gen import CorpusGenerator
-        gen = CorpusGenerator(seed=seed)
+        gen = CorpusGenerator(seed=SEED)
         for pdf in batches:
             # validate=False: gen_doc's default re-runs the rules on every
             # doc to check it, which would slow generation for bench.py
@@ -36,8 +37,8 @@ def generate_corpus(spark: SparkSession, n_docs: int,
             .mapInPandas(fn, DOCUMENTS_IN))
 
 
-def ensure_corpus_parquet(spark: SparkSession, cache_dir: str, n_docs: int,
-                          seed: int = 42) -> str:
+def ensure_corpus_parquet(spark: SparkSession, cache_dir: str,
+                          n_docs: int) -> str:
     """Generate (once, cached) a bench corpus; returns the parquet path.
 
     The cached table persists an ``n_spans`` statistics column next to
@@ -49,10 +50,10 @@ def ensure_corpus_parquet(spark: SparkSession, cache_dir: str, n_docs: int,
     (tests/test_plans.py::test_n_spans_column_prunes_branch_scans pins
     the pushdown both ways and byte-identical output)."""
     from pyspark.sql import functions as F
-    path = os.path.join(cache_dir, f"synth_{n_docs}_{seed}")
+    path = os.path.join(cache_dir, f"synth_{n_docs}_{SEED}")
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
-        (generate_corpus(spark, n_docs, seed)
+        (generate_corpus(spark, n_docs)
          .withColumn("n_spans", F.size("spans"))
          .write.mode("overwrite").parquet(path))
     return path

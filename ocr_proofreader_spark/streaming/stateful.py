@@ -40,6 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ocr_proofreader_spark.operators.relational import SESSION_GAP_MINUTES
+
 EVENTS_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                  "event_type string, value double, props string")
 
@@ -125,51 +127,48 @@ def run_to_scratch_parquet(stream_df: DataFrame, spark: SparkSession,
     return spark.read.schema(stream_df.schema).parquet(output_dir)
 
 
-def _session_fold(gap_sec: int):
-    def fold(key: Tuple, pdfs: Iterator[pd.DataFrame],
-             state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        # event-time order with the same tie-break as the batch engine
-        batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
-        epochs = (batch["ts"].astype("int64") // 10**9).to_numpy()
-        values = batch["value"].to_numpy()
+def _session_fold(key: Tuple, pdfs: Iterator[pd.DataFrame],
+                  state: GroupState) -> Iterator[pd.DataFrame]:
+    gap_sec = SESSION_GAP_MINUTES * 60
+    (user_id,) = key
+    batch = pd.concat(list(pdfs), ignore_index=True)
+    # event-time order with the same tie-break as the batch engine
+    batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
+    epochs = (batch["ts"].astype("int64") // 10**9).to_numpy()
+    values = batch["value"].to_numpy()
 
-        if state.exists:
-            closed_no, s_start, s_last, s_n, s_tot = state.get
-            segments = [[s_start, s_last, s_n, s_tot]]  # carried open sess
+    if state.exists:
+        closed_no, s_start, s_last, s_n, s_tot = state.get
+        segments = [[s_start, s_last, s_n, s_tot]]  # carried open sess
+    else:
+        closed_no, segments = 0, []
+
+    # within-batch segments: boundary where the gap to the previous
+    # batch event exceeds the session gap (vectorized)
+    prev = np.concatenate(([-(1 << 62)], epochs[:-1]))
+    seg_ids = np.cumsum((epochs - prev) > gap_sec)   # 1, 2, ...
+    for sid in range(1, int(seg_ids[-1]) + 1):
+        m = seg_ids == sid
+        start, end = int(epochs[m][0]), int(epochs[m][-1])
+        n, tot = int(m.sum()), float(values[m].sum())
+        if segments and start - segments[-1][1] <= gap_sec:
+            segments[-1][1] = end        # continues the previous one
+            segments[-1][2] += n
+            segments[-1][3] += tot
         else:
-            closed_no, segments = 0, []
+            segments.append([start, end, n, tot])
 
-        # within-batch segments: boundary where the gap to the previous
-        # batch event exceeds the session gap (vectorized)
-        prev = np.concatenate(([-(1 << 62)], epochs[:-1]))
-        seg_ids = np.cumsum((epochs - prev) > gap_sec)   # 1, 2, ...
-        for sid in range(1, int(seg_ids[-1]) + 1):
-            m = seg_ids == sid
-            start, end = int(epochs[m][0]), int(epochs[m][-1])
-            n, tot = int(m.sum()), float(values[m].sum())
-            if segments and start - segments[-1][1] <= gap_sec:
-                segments[-1][1] = end        # continues the previous one
-                segments[-1][2] += n
-                segments[-1][3] += tot
-            else:
-                segments.append([start, end, n, tot])
-
-        out = []
-        for start, end, n, tot in segments[:-1]:   # all but last = closed
-            closed_no += 1
-            out.append((user_id, closed_no, n, start, end, round(tot, 3)))
-        s_start, s_last, s_n, s_tot = segments[-1]  # last stays open
-        state.update((closed_no, s_start, s_last, s_n, s_tot))
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in SESSION_OUT])
-
-    return fold
+    out = []
+    for start, end, n, tot in segments[:-1]:   # all but last = closed
+        closed_no += 1
+        out.append((user_id, closed_no, n, start, end, round(tot, 3)))
+    s_start, s_last, s_n, s_tot = segments[-1]  # last stays open
+    state.update((closed_no, s_start, s_last, s_n, s_tot))
+    if out:
+        yield pd.DataFrame(out, columns=[f.name for f in SESSION_OUT])
 
 
 def sessionize_stream(spark: SparkSession, input_path: str,
-                      gap_minutes: int = 30,
                       max_files_per_trigger: int | None = None) -> DataFrame:
     """Run the stateful sessionizer over ``input_path`` (parquet file or
     directory) with Trigger.AvailableNow and return the closed sessions.
@@ -192,7 +191,7 @@ def sessionize_stream(spark: SparkSession, input_path: str,
     closed = (stream
               .groupBy("user_id")
               .applyInPandasWithState(
-                  _session_fold(gap_minutes * 60), SESSION_OUT,
+                  _session_fold, SESSION_OUT,
                   SESSION_STATE, "append", GroupStateTimeout.NoTimeout))
     return run_to_scratch_parquet(closed, spark, "sessionize_stream_")
 

@@ -23,18 +23,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_proofreader_spark.operators.relational import SESSION_GAP_MINUTES
 from ocr_proofreader_spark.streaming.stateful import (
     EVENTS_SCHEMA, read_stream, run_to_scratch_parquet)
 
+# allowed lateness of every watermarked operator here
+WATERMARK_DELAY = "30 minutes"
+
 
 def windowed_counts_stream(spark: SparkSession, input_path: str,
-                           window_minutes: int = 60,
-                           watermark_minutes: int = 30,
-                           max_files_per_trigger: int | None = None,
                            output_dir: str | None = None,
                            checkpoint_dir: str | None = None) -> DataFrame:
-    """Per-(window, event_type) counts and value sums for every window
-    the watermark has closed.
+    """Per-(1-hour window, event_type) counts and value sums for every
+    window the watermark has closed.
 
     With ``output_dir``/``checkpoint_dir`` the query appends to a
     parquet sink and the watermark persists across runs — a late file
@@ -42,12 +43,10 @@ def windowed_counts_stream(spark: SparkSession, input_path: str,
     watermark (the production late-data path; within one AvailableNow
     run the late-record filter uses the trigger's starting watermark,
     so cross-run restarts are where the drop is observable)."""
-    stream = read_stream(spark, input_path, EVENTS_SCHEMA,
-                         max_files_per_trigger)
+    stream = read_stream(spark, input_path, EVENTS_SCHEMA)
     agg = (stream
-           .withWatermark("ts", f"{watermark_minutes} minutes")
-           .groupBy(F.window("ts", f"{window_minutes} minutes"),
-                    "event_type")
+           .withWatermark("ts", WATERMARK_DELAY)
+           .groupBy(F.window("ts", "60 minutes"), "event_type")
            .agg(F.count("*").alias("n_events"),
                 F.round(F.sum("value"), 3).alias("total_value"))
            .select(F.unix_timestamp("window.start").alias("window_start"),
@@ -57,8 +56,6 @@ def windowed_counts_stream(spark: SparkSession, input_path: str,
 
 
 def session_window_stream(spark, input_path: str,
-                          gap_minutes: int = 30,
-                          delay: str = "30 minutes",
                           max_files_per_trigger: int | None = None):
     """Gap sessionization via Spark's NATIVE ``session_window``
     aggregation + watermark — the late-data-tolerant production form of
@@ -79,10 +76,10 @@ def session_window_stream(spark, input_path: str,
     (user_id, window); state is O(open sessions)."""
     stream = read_stream(spark, input_path, EVENTS_SCHEMA,
                          max_files_per_trigger)
-    gap = f"{gap_minutes} minutes"
+    gap = f"{SESSION_GAP_MINUTES} minutes"
     agg = (stream
            .withColumn("ts", F.timestamp_seconds(F.unix_timestamp("ts")))
-           .withWatermark("ts", delay)
+           .withWatermark("ts", WATERMARK_DELAY)
            .groupBy("user_id", F.session_window("ts", gap))
            .agg(F.count("*").alias("n_events"),
                 F.round(F.sum("value"), 3).alias("total_value"))
@@ -93,22 +90,18 @@ def session_window_stream(spark, input_path: str,
                    # EVENT epoch so rows line up with the batch
                    # sessionizer's (start, end) convention
                    (F.unix_timestamp("session_window.end")
-                    - gap_minutes * 60).alias("end_epoch"),
+                    - SESSION_GAP_MINUTES * 60).alias("end_epoch"),
                    "n_events", "total_value"))
     return run_to_scratch_parquet(agg, spark, "session_window_")
 
 
 def stream_stream_join(spark: SparkSession, input_path: str,
-                       left_type: str = "click",
-                       right_type: str = "purchase",
-                       horizon_minutes: int = 30,
-                       delay: str = "30 minutes",
                        max_files_per_trigger: int | None = None,
                        how: str = "inner") -> DataFrame:
-    """Watermarked STREAM-STREAM interval join: attribute each
-    ``right_type`` event to ``left_type`` events by the same user within
-    ``horizon_minutes`` after the click (the classic click-to-purchase
-    attribution join).  ``how`` is ``"inner"`` or ``"leftOuter"``.
+    """Watermarked STREAM-STREAM interval join: attribute each purchase
+    event to the click events by the same user within 30 minutes before
+    it (the classic click-to-purchase attribution join).  ``how`` is
+    ``"inner"`` or ``"leftOuter"``.
 
     Both sides carry watermarks and the join condition bounds the
     event-time range, so the engine can evict join state older than
@@ -120,18 +113,21 @@ def stream_stream_join(spark: SparkSession, input_path: str,
 
     Emits raw pairs with integer epochs and lag; volume is bounded by
     the horizon (each purchase matches only clicks in its preceding
-    window), not quadratic in the stream length."""
+    window), not quadratic in the stream length.  Both sides are
+    filters of one file-stream source, so each trigger lists and
+    offsets the input once."""
+    events = read_stream(spark, input_path, EVENTS_SCHEMA,
+                         max_files_per_trigger)
+
     def side(event_type: str, user: str, ts: str) -> DataFrame:
-        return (read_stream(spark, input_path, EVENTS_SCHEMA,
-                            max_files_per_trigger)
+        return (events
                 .filter(F.col("event_type") == event_type)
                 .select(F.col("user_id").alias(user), F.col("ts").alias(ts))
-                .withWatermark(ts, delay))
+                .withWatermark(ts, WATERMARK_DELAY))
 
-    joined = (side(left_type, "u1", "t1").join(
-        side(right_type, "u2", "t2"),
-        F.expr(f"u1 = u2 AND t2 >= t1 AND "
-               f"t2 <= t1 + interval {horizon_minutes} minutes"),
+    joined = (side("click", "u1", "t1").join(
+        side("purchase", "u2", "t2"),
+        F.expr("u1 = u2 AND t2 >= t1 AND t2 <= t1 + interval 30 minutes"),
         how)
         .select(F.col("u1").alias("user_id"),
                 F.unix_timestamp("t1").alias("click_epoch"),

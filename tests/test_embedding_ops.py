@@ -51,14 +51,14 @@ def test_near_dup_lsh_deterministic(spark, emb):
 
 def test_ann_lsh_recall_vs_brute(spark, emb):
     from ocr_proofreader_spark.operators import training_ops as ops
-    brute = [r["vec_id"] for r in ops.ann_topk_brute(emb, k=10).collect()]
-    lsh = ops.ann_topk_lsh(emb, k=10).collect()
+    brute = [r["vec_id"] for r in ops.ann_topk_brute(emb).collect()]
+    lsh = ops.ann_topk_lsh(emb).collect()
     assert len(lsh) == 10
     # multi-table (L=10, m=3) measured recall@10 = 0.9 on this
     # near-isotropic corpus (worst case for angular LSH); floor 0.8
     assert len(set(brute) & {r["vec_id"] for r in lsh}) / 10 >= 0.8
     # results deterministic across input partitionings (resume replay)
-    again = ops.ann_topk_lsh(emb.repartition(7), k=10).collect()
+    again = ops.ann_topk_lsh(emb.repartition(7)).collect()
     assert [tuple(r) for r in lsh] == [tuple(r) for r in again]
 
 
@@ -68,7 +68,7 @@ def test_ann_lsh_probes_fewer_rows(spark, emb):
     from ocr_proofreader_spark.operators import training_ops as ops
     total = emb.count()
     tables, bits = 10, 3
-    qv = ops._query_vec(emb, 0)
+    qv = ops._query_vec(emb)
     planes = ops._lsh_planes(qv.size, tables * bits)
     codes_of = ops._srp_codes(planes, tables, bits)
     qcodes = ops._lsh_query_codes(qv, planes, tables, bits)
@@ -81,8 +81,8 @@ def test_ann_lsh_probes_fewer_rows(spark, emb):
 
 def test_ann_ivf_recall_vs_brute(spark, emb):
     from ocr_proofreader_spark.operators import training_ops as ops
-    brute = [r["vec_id"] for r in ops.ann_topk_brute(emb, k=10).collect()]
-    ivf = ops.ann_topk_ivf(emb, k=10).collect()
+    brute = [r["vec_id"] for r in ops.ann_topk_brute(emb).collect()]
+    ivf = ops.ann_topk_ivf(emb).collect()
     assert len(ivf) == 10
     # probing 4/16 cells measured recall@10 = 1.0 on this data; floor 0.7
     assert len(set(brute) & {r["vec_id"] for r in ivf}) / 10 >= 0.7
@@ -98,15 +98,15 @@ def test_ann_ivf_probes_fewer_rows(spark, emb):
     from pyspark.sql import functions as F
     from ocr_proofreader_spark.operators import training_ops as ops
     total = emb.count()
-    cents = ops._ivf_centroids(emb, n_cells=16)
-    probe = ops.ivf_probe_cells(ops._query_vec(emb, 0), cents, n_probe=4)
+    cents = ops._ivf_centroids(emb)
+    probe = ops.ivf_probe_cells(ops._query_vec(emb), cents)
     assert len(probe) == 4
-    cand = (ops.ivf_assign(emb, n_cells=16, centroids=cents)
+    cand = (ops.ivf_assign(emb, cents)
             .filter(F.col("cell").isin(probe)).count())
     # 4/16 cells; allow 2x slack for uneven cell sizes
     assert 0 < cand <= total // 2
     # every cell id the reranker reports is one of the probed cells
-    cells = {r["cell"] for r in ops.ann_topk_ivf(emb, k=10).collect()}
+    cells = {r["cell"] for r in ops.ann_topk_ivf(emb).collect()}
     assert cells <= set(probe)
 
 
@@ -114,7 +114,7 @@ def test_ivf_lloyd_refinement_deterministic_and_bounded(spark, emb):
     """Lloyd-refined centroids must be (a) bit-identical across input
     partitionings — the fixed-point integer sums make the per-cell
     mean merge-order-independent — and (b) bounded in driver traffic:
-    exactly 1 + sweeps collects, each at most n_cells x dim rows."""
+    exactly 1 + 2 sweeps collects, each at most 16 cells x dim rows."""
     import numpy as np
 
     from ocr_proofreader_spark.operators import training_ops as ops
@@ -130,7 +130,7 @@ def test_ivf_lloyd_refinement_deterministic_and_bounded(spark, emb):
 
     cls.collect = counting
     try:
-        C1 = ops._ivf_centroids(emb, n_cells=16, sweeps=2)
+        C1 = ops._ivf_centroids(emb)
         n_collects = len(calls)
         sizes = list(calls)
     finally:
@@ -140,11 +140,15 @@ def test_ivf_lloyd_refinement_deterministic_and_bounded(spark, emb):
     assert sizes[0] == 16
     assert all(s <= 16 * dim for s in sizes[1:])
 
-    C2 = ops._ivf_centroids(emb.repartition(7), 16, sweeps=2)
+    C2 = ops._ivf_centroids(emb.repartition(7))
     assert (C1 == C2).all()                    # bit-identical, not close
 
-    # refinement moved centroids off the raw sample init
-    C0 = ops._ivf_centroids(emb, 16, sweeps=0)
+    # refinement moved centroids off the raw sample init: the L2-
+    # normalized embeddings of the 16 smallest vec_ids
+    init = emb.orderBy("vec_id").limit(16).select("embedding").collect()
+    C0 = np.stack([np.asarray(r["embedding"], dtype=np.float64)
+                   for r in init])
+    C0 = C0 / np.linalg.norm(C0, axis=1, keepdims=True)
     assert not (C1 == C0).all()
     # and every refined centroid stays unit-norm
     assert np.allclose(np.linalg.norm(C1, axis=1), 1.0)

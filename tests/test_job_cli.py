@@ -27,11 +27,10 @@ def test_job_cli_multilingual(spark, tmp_path, capsys):
     out = str(tmp_path / "out")
     spark.createDataFrame(rows, SCHEMA).write.parquet(inp)
 
-    proofread_job.main([
-        "--input", inp, "--output", out, "--num-buckets", "2",
-        "--lexicon", f"default={ROOT}/fixtures/lexicon_base.txt",
-        "--lexicon", f"fr={ROOT}/fixtures/lexicon_fr.txt",
-    ], spark=spark)
+    argv = ["--input", inp, "--output", out, "--num-buckets", "2",
+            "--lexicon", f"default={ROOT}/fixtures/lexicon_base.txt",
+            "--lexicon", f"fr={ROOT}/fixtures/lexicon_fr.txt"]
+    proofread_job.main(argv, spark=spark)
 
     got = {r["doc_id"]: " ".join(s["text"] for s in r["spans"])
            for r in spark.read.parquet(os.path.join(out, "data")).collect()}
@@ -41,3 +40,9 @@ def test_job_cli_multilingual(spark, tmp_path, capsys):
     assert rep["docs"] == 2 and rep["docs_per_sec"] > 0
     for table in ("word_freq", "lexicon"):
         assert spark.read.parquet(os.path.join(out, table)).count() > 0
+
+    # a rerun on the finished output proofreads nothing: it reports the
+    # output's docs but no rate
+    proofread_job.main(argv, spark=spark)
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["docs"] == 2 and rep["docs_per_sec"] == 0

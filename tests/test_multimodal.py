@@ -72,7 +72,7 @@ def test_codecs_pure_python():
     assert px[0].min() == 255 and px[1].max() == 0
     bx = decode_bmp(_bmp24(3, 2, rows))
     assert (bx == px).all()                              # same image
-    feats = band_features(px, dim=8)
+    feats = band_features(px)
     assert feats.tolist() == [1.0] * 4 + [0.0] * 4
     # PGM (single channel) and magic dispatch
     gray = b"P5\n2 2\n255\n" + bytes([10, 20, 30, 40])
@@ -227,8 +227,6 @@ def test_decode_media_bytes_real_path(spark):
     bad = [out["scan/d2/p0.bin"], out["scan/d2/p1.png"],
            out["scan/d2/p2.ppm"]]
     assert all(r["width"] is None and r["error"] for r in bad)
-    with pytest.raises(Exception):
-        decode_media_bytes(media, on_error="fail").collect()
 
 
 def test_gif_codec_roundtrip_and_poison():
@@ -295,21 +293,17 @@ def test_poison_isolation_advice_cases(spark):
 
 
 def test_simhash_near_dup_band_overflow(spark):
-    """bits=16 / max_hamming=3 used to produce a 5th band shifted past
-    the fingerprint (constant 0 -> one bucket holding every doc).  The
-    banding must stay within the fingerprint, keep >= max_hamming+1
-    bands (pigeonhole losslessness), and agree with the quadratic
-    exact join."""
-    import pytest
-
+    """The 4 bands of 4 bits tile the 16-bit fingerprint (no band
+    shifted past it, which would be constant 0: one bucket holding
+    every doc), so the banded join agrees with the quadratic exact join
+    at radius 2 on a corpus with many near pairs."""
     from ocr_proofreader_spark.operators import training_ops as ops
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{j}{'x' if (i + j) % 7 == 0 else ''}"
                       for j in range(12)))
          for i in range(30)], "doc_id long, text string")
     got = {(r["d1"], r["d2"], r["hamming"])
-           for r in ops.simhash_near_dup(docs, bits=16,
-                                         max_hamming=3).collect()}
+           for r in ops.simhash_near_dup(docs).collect()}
     # quadratic oracle on the same fingerprints
     from pyspark.sql import functions as F
     sh = ops.simhash(docs, 16)
@@ -320,8 +314,5 @@ def test_simhash_near_dup_band_overflow(spark):
               .select("d1", "d2",
                       F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
                       .cast("long").alias("hamming"))
-              .filter(F.col("hamming") <= 3)).collect()}
-    assert got == exact
-    # unsupportable combos must refuse rather than silently go O(n^2)
-    with pytest.raises(ValueError):
-        ops.simhash_near_dup(docs, bits=4, max_hamming=4)
+              .filter(F.col("hamming") <= 2)).collect()}
+    assert exact and got == exact

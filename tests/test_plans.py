@@ -251,14 +251,13 @@ def test_ivf_cell_partition_pruning(spark, tmp_path):
     if not os.path.exists(src):
         pytest.skip("driver testdata missing")
     emb = spark.read.parquet(src)
-    n_cells, n_probe = 16, 4
-    cents = ops._ivf_centroids(emb, n_cells)
-    assigned = ops.ivf_assign(emb, n_cells, centroids=cents)
+    cents = ops._ivf_centroids(emb)
+    assigned = ops.ivf_assign(emb, cents)
     store = str(tmp_path / "emb_by_cell")
     assigned.write.partitionBy("cell").parquet(store)
 
-    qv = ops._query_vec(emb, 0)
-    probe = ops.ivf_probe_cells(qv, cents, n_probe)
+    qv = ops._query_vec(emb)
+    probe = ops.ivf_probe_cells(qv, cents)
     scan = spark.read.parquet(store).filter(F.col("cell").isin(probe))
     plan = P.physical_plan(scan)
     # the cell predicate must land in the scan's PARTITION filters (an

@@ -135,12 +135,12 @@ def test_lineage_format_compat(spark, corpus_small, base_lexicon, tmp_path):
 
     new = ResumableRunner(spark, out_root,
                           RunConfig(run_id="new", num_buckets=4), lex_bc)
-    new.run(docs)
+    committed = new.run(docs)
     assert new.done_buckets() == {0, 1, 2, 3}
     assert os.path.getmtime(
         os.path.join(out_root, "data", "bucket=0")) == mtime0
 
-    raw = new.read_lineage(dedupe=False).collect()
+    raw = spark.read.parquet(new.lineage_dir).collect()
     assert sorted((r["partition_id"], r["attempt"], r["run_id"])
                   for r in raw) == [(0, 1, "old"), (1, 1, "old"),
                                     (1, 2, "new"), (2, 1, "new"),
@@ -148,6 +148,8 @@ def test_lineage_format_compat(spark, corpus_small, base_lexicon, tmp_path):
     latest = {r["partition_id"]: r for r in new.read_lineage().collect()}
     assert (latest[1]["attempt"], latest[1]["run_id"]) == (2, "new")
     assert sum(r["doc_count"] for r in latest.values()) == 40
+    # run() reports the docs of the buckets it committed, not bucket 0's
+    assert committed == sum(latest[b]["doc_count"] for b in (1, 2, 3))
     assert new._prior_attempts() == {0: 1, 1: 2, 2: 1, 3: 1}
 
     resumed = _tuples(new.read_output().collect())

@@ -56,23 +56,24 @@ def test_correct_line_ligatures_and_longs():
 
 
 def test_correct_token_memoized_counts():
+    # the second span hits the per-doc token memo
     pr = _pr()
-    assert pr.correct_token("worde") == "words"
+    assert pr.correct_span("worde") == "words"
     first = pr.corrections
-    assert pr.correct_token("worde") == "words"
+    assert pr.correct_span("worde") == "words"
     assert pr.corrections == first + 1  # memo still counts per occurrence
 
 
 def test_capitalized_unknown_flagged():
     pr = _pr()
-    assert pr.correct_token("Zxqvw") == "Zxqvw"
+    assert pr.correct_span("Zxqvw") == "Zxqvw"
     assert pr.flagged == 1
     assert pr.corrections == 0
 
 
 def test_book_frequent_word_becomes_known():
     pr = _pr(freq={"zzyzx": 7})
-    assert pr.correct_token("zzyzx") == "zzyzx"
+    assert pr.correct_span("zzyzx") == "zzyzx"
     assert pr.flagged == 0
 
 
@@ -80,10 +81,10 @@ def test_distance2_needs_freq3():
     # 'wodrs' -> 'words' is a transposition, i.e. Levenshtein distance 2:
     # corrected only if freq >= 3
     pr = _pr(freq={})
-    assert pr.correct_token("wodrs") == "wodrs"
+    assert pr.correct_span("wodrs") == "wodrs"
     assert pr.flagged == 1
     pr2 = _pr(freq={"words": 3})
-    assert pr2.correct_token("wodrs") == "words"
+    assert pr2.correct_span("wodrs") == "words"
 
 
 def test_heading_regex_and_allcaps():

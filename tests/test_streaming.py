@@ -231,13 +231,15 @@ def test_session_window_stream_boundary_semantics(spark, tmp_path):
     assert got == [(1, base, base, 1)]
 
 
-def test_stream_stream_join_across_batches(spark, tmp_path):
+def test_stream_stream_join_across_batches(spark, tmp_path, monkeypatch):
     """Watermarked stream-stream interval join: a click in micro-batch 0
     must still match a purchase arriving in micro-batch 1 (buffered
     join state carries across triggers), matches outside the horizon or
     in the wrong order must not emit, and the multi-batch result equals
-    the single-batch one."""
+    the single-batch one.  Both join sides read one file-stream source."""
     import datetime as dt
+    import glob
+    import tempfile
 
     from ocr_proofreader_spark.streaming.stateful import EVENTS_SCHEMA
     from ocr_proofreader_spark.streaming.windowed import stream_stream_join
@@ -260,10 +262,15 @@ def test_stream_stream_join_across_batches(spark, tmp_path):
         _land(spark.createDataFrame(subset, EVENTS_SCHEMA), in_dir,
               f"{name}.parquet")
 
+    # the scratch sink and its checkpoint land under tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     got = {(r["user_id"], r["lag_sec"])
            for r in stream_stream_join(
                spark, in_dir, max_files_per_trigger=1).collect()}
     assert got == {(1, 600), (4, 60)}
+    sources = glob.glob(str(tmp_path / "stream_join_*" / "ckpt" /
+                            "sources" / "*"))
+    assert [os.path.basename(s) for s in sources] == ["0"]
     single = {(r["user_id"], r["lag_sec"])
               for r in stream_stream_join(spark, in_dir).collect()}
     assert single == got

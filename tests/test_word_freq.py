@@ -38,7 +38,7 @@ def test_word_freq_matches_oracle(spark, corpus_small):
 def test_lexicon_table(spark, corpus_small, base_lexicon):
     docs = spark.read.parquet(f"{corpus_small}/documents.parquet").limit(40)
     wf = word_freq(docs)
-    lex = lexicon_table(spark, base_lexicon, wf, freq_k=5)
+    lex = lexicon_table(spark, base_lexicon, wf)
     rows = lex.collect()
     words = {r["word"] for r in rows}
     assert base_lexicon <= words
