@@ -1113,7 +1113,7 @@ def _extra_oracles() -> dict[str, str]:
     from ocr_proofreader_spark.operators.training_ops import (
         BPE_PATTERN, PII_EMAIL, PII_PHONE, bpe_seg_count_expr)
     bpe_pat = BPE_PATTERN.replace("'", "''")
-    _BPE_SEG_DUCK = bpe_seg_count_expr("s", "duckdb")
+    _BPE_SEG_DUCK = bpe_seg_count_expr("duckdb")
     sim16_votes = ", ".join(
         f"sum(CASE WHEN (v >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
         for b in range(16))

@@ -55,8 +55,9 @@ def curate(spark: SparkSession, docs: DataFrame) -> tuple[DataFrame, dict]:
     # of the r5 ADVICE finding; guide section 5: cache only reused
     # frames, and these are each consumed twice).  MEMORY_AND_DISK
     # default spills rather than OOMs; a 100 TB deployment would
-    # checkpoint each stage to the output table instead (the resume
-    # marker pattern proofread_job already uses).
+    # checkpoint each stage to the output table instead (the commit
+    # pattern proofread_job already uses: rename the data into place,
+    # then a row that records it).
 
     # 1. quality filter (C4/Gopher integer-threshold verdict)
     accepted = (docs.join(

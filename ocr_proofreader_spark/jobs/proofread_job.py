@@ -9,7 +9,8 @@ Reads an interleaved documents table, proofreads it (fast path + skew
 path), writes proofread docs + word_freq + lexicon derived tables, with
 per-bucket lineage, and prints one JSON result line on stdout (SURVEY.md
 EP1).  Resume is automatic: a re-run on the same ``--output`` proofreads
-only the buckets that have no done marker yet."""
+only the buckets that have no lineage row yet, and must use the same
+``--num-buckets``."""
 
 from __future__ import annotations
 
@@ -114,9 +115,10 @@ def main(argv: list[str] | None = None, spark=None) -> None:
         os.path.join(args.output, "lexicon"))
     phase_a = time.time() - t1
 
-    n_docs = runner.read_output().count()
     wall = time.time() - t0
-    result = {"docs": n_docs, "wall_sec": round(wall, 3),
+    # the whole output's docs, from the lineage rows: no Spark job
+    result = {"docs": sum(runner.committed().values()),
+              "wall_sec": round(wall, 3),
               "proofread_sec": round(phase_b, 3),
               "derived_sec": round(phase_a, 3),
               # this run's docs only: a rerun on a finished root

@@ -277,6 +277,38 @@ def above_avg_balance(customer: DataFrame) -> DataFrame:
                  F.max("cents").alias("max_cents")))
 
 
+# The exact rule's target rank for percentile p of n values,
+# ceil(n * p / 100) in integer arithmetic
+TARGET_RANK = "div(n * p + 99, 100)"
+
+
+def _flag_cents(lineitem: DataFrame) -> DataFrame:
+    """(flag, cents): l_returnflag and l_extendedprice in integer cents."""
+    return lineitem.select(
+        F.col("l_returnflag").alias("flag"),
+        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("cents"))
+
+
+def _exact_quantiles(vals: DataFrame):
+    """The exact rule over ``(flag, cents)`` rows: ``(cum, n, exact)``,
+    the per-flag value histogram with its running count ``cum``, the
+    per-flag count ``n``, and the ``(flag, p, q_cents)`` quantiles
+    (see :func:`group_quantiles_disc`)."""
+    hist = vals.groupBy("flag", "cents").agg(F.count("*").alias("c"))
+    w = (Window.partitionBy("flag").orderBy("cents")
+         .rowsBetween(Window.unboundedPreceding, 0))
+    cum = hist.withColumn("cum", F.sum("c").over(w))
+    n = hist.groupBy("flag").agg(F.sum("c").alias("n"))
+    exact = (cum.join(n, "flag")
+             .select("flag", "cents", "cum", "n",
+                     F.explode(F.array(*[F.lit(p) for p in QUANTILES]))
+                     .alias("p"))
+             .filter(F.col("cum") >= F.expr(TARGET_RANK))
+             .groupBy("flag", "p")
+             .agg(F.min("cents").alias("q_cents")))
+    return cum, n, exact
+
+
 def group_quantiles_disc(lineitem: DataFrame) -> DataFrame:
     """EXACT discrete quantiles per group, at scale: the p-th
     percentile of l_extendedprice (integer cents) per l_returnflag,
@@ -299,24 +331,9 @@ def group_quantiles_disc(lineitem: DataFrame) -> DataFrame:
     contract (quantile_disc's native rank rule floor((n-1)*p) differs
     from this ceil rule on small fractional boundaries, so the spec is
     spelled out rather than borrowed)."""
-    cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
-    hist = (lineitem
-            .select(F.col("l_returnflag").alias("flag"),
-                    cents.alias("cents"))
-            .groupBy("flag", "cents").agg(F.count("*").alias("c")))
-    w = (Window.partitionBy("flag").orderBy("cents")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("cum", F.sum("c").over(w))
-    n = hist.groupBy("flag").agg(F.sum("c").alias("n"))
-    return (cum.join(n, "flag")
-            .select("flag", "cents", "cum", "n",
-                    F.explode(F.array(*[F.lit(p) for p in QUANTILES]))
-                    .alias("p"))
-            .filter(F.col("cum") >= F.expr("div(n * p + 99, 100)"))
-            .groupBy("flag", "p")
-            .agg(F.min("cents").alias("q_cents"))
-            .select("flag", F.col("p").cast("long").alias("p"),
-                    "q_cents"))
+    _, _, exact = _exact_quantiles(_flag_cents(lineitem))
+    return exact.select("flag", F.col("p").cast("long").alias("p"),
+                        "q_cents")
 
 
 def group_quantiles_approx_gate(lineitem: DataFrame) -> DataFrame:
@@ -333,14 +350,10 @@ def group_quantiles_approx_gate(lineitem: DataFrame) -> DataFrame:
     rank error, and the pinned bound boolean.  The DuckDB twin
     recomputes the exact side + booleans only — sketch drift past the
     guarantee fails the hash."""
-    cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
-    vals = lineitem.select(F.col("l_returnflag").alias("flag"),
-                           cents.alias("cents"))
-    hist = vals.groupBy("flag", "cents").agg(F.count("*").alias("c"))
-    w = (Window.partitionBy("flag").orderBy("cents")
-         .rowsBetween(Window.unboundedPreceding, 0))
-    cum = hist.withColumn("cum", F.sum("c").over(w))
-    n = hist.groupBy("flag").agg(F.sum("c").alias("n"))
+    vals = _flag_cents(lineitem)
+    # the exact side from the sketch's own hist/cum/n frames, not a
+    # second scan and aggregation of lineitem (r5 review finding)
+    cum, n, exact = _exact_quantiles(vals)
 
     accuracy = 1000
     fracs = F.array(*[F.lit(p / 100) for p in QUANTILES])
@@ -358,22 +371,11 @@ def group_quantiles_approx_gate(lineitem: DataFrame) -> DataFrame:
             .filter(F.col("cents") <= F.col("v"))
             .groupBy("flag", "p", "v")
             .agg(F.max("cum").alias("rank_v")))
-    # exact side from the SAME hist/cum/n frames (not a second
-    # group_quantiles_disc call, which would re-scan and re-aggregate
-    # lineitem — a full duplicate pass at scale; r5 review finding)
-    exact = (cum.join(n, "flag")
-             .select("flag", "cents", "cum", "n",
-                     F.explode(F.array(*[F.lit(p) for p in QUANTILES]))
-                     .alias("p"))
-             .filter(F.col("cum") >= F.expr("div(n * p + 99, 100)"))
-             .groupBy("flag", "p")
-             .agg(F.min("cents").alias("q_cents")))
     return (rank.join(n, "flag")
             .join(exact, ["flag", "p"])
             .select("flag", F.col("p").cast("long").alias("p"),
                     "q_cents",
-                    (F.abs(F.col("rank_v")
-                           - F.expr("div(n * p + 99, 100)"))
+                    (F.abs(F.col("rank_v") - F.expr(TARGET_RANK))
                      <= F.greatest(F.lit(2),
                                    2 * F.col("n") / accuracy))
                     .alias("rank_within_guarantee")))

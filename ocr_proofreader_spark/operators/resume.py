@@ -11,16 +11,34 @@ the cost model below).  Per wave:
    bucket's doc/span/correction/flag counts, so no metric column reaches
    the output,
 3. then, bucket by bucket: atomic rename of ``bucket=<b>`` to
-   ``<out>/data/bucket=<b>``, a lineage row, the marker
-   ``<out>/_markers/<b>.done``.
+   ``<out>/data/bucket=<b>``, then the bucket's lineage row, renamed into
+   ``<out>/lineage/``.
 
-A killed job leaves unfinished buckets markerless; on restart with the same
-output root, only markerless buckets replay (exactly-once at bucket level —
-the rules are deterministic, so a replay is byte-identical), and the dead
-run's uncommitted wave output under ``_tmp/`` is deleted before the first
-wave.  On Iceberg the same protocol rides on snapshot commits instead of
-directory renames (SURVEY.md section 3.3); the job writes plain parquet, so
-the local-FS rename here is the commit.
+The lineage row is the commit record: a bucket is committed when it has a
+row and its data directory (``committed()``).  The row goes in only after
+the data rename, so a killed job leaves every bucket either committed or
+without a row:
+
+- killed before the data rename: no row;
+- killed between the data rename and the row: no row, and the replay's
+  commit replaces the data directory;
+- killed after the row: committed, and never run again, so every row
+  this engine writes has ``attempt`` 1.
+
+On restart with the same output root only buckets without a row replay
+(exactly-once at bucket level — the rules are deterministic, so a replay
+is byte-identical), and the dead run's uncommitted wave output under
+``_tmp/`` is deleted before the first wave.  On Iceberg the same protocol
+rides on snapshot commits instead of directory renames (SURVEY.md section
+3.3); the job writes plain parquet, so the local-FS rename here is the
+commit.
+
+Roots written while a ``_markers/<b>.done`` file followed each row still
+resume: the markers are ignored.  Such a root can hold a second row for a
+bucket (a replay after a crash between row and marker) with the same
+``doc_count``, and a bucket whose row has no data directory (a replay
+that died between the commit's ``rmtree`` and its rename), which counts
+as pending.
 
 Cost model, B buckets in N waves: a run scans the input N times (the wave
 filter ``_bucket IN (...)`` is md5 of doc_id, so it prunes nothing unless
@@ -43,9 +61,9 @@ file per committed bucket under a hidden name renamed into place — no
 Spark job per row.  Like the data renames this assumes a local (or
 POSIX-mounted) output root.
 
-The resume filter (SURVEY.md S2) is the marker set: ``done_buckets()``
-lists the committed buckets, and each wave's ``_bucket IN (...)`` filter
-keeps only docs of pending buckets."""
+The resume filter (SURVEY.md S2) is the lineage: ``committed()`` maps
+each committed bucket to its doc count, and each wave's ``_bucket IN
+(...)`` filter keeps only docs of the other buckets."""
 
 from __future__ import annotations
 
@@ -54,32 +72,28 @@ import os
 import shutil
 import time
 import uuid
-from collections import Counter
 from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.operators.proofread import proofread
-from ocr_proofreader_spark.schemas import DOCUMENTS_OUT, LINEAGE
+from ocr_proofreader_spark.schemas import LINEAGE
 
 # per-doc metric columns of proofread(): summed per bucket into lineage,
 # never written to the output
 METRICS = ("span_count", "corrections", "flagged")
-# the output table as read back: data files plus the bucket= directory
-OUTPUT = T.StructType(DOCUMENTS_OUT.fields
-                      + [T.StructField("bucket", T.IntegerType())])
 LINEAGE_ARROW = to_arrow_schema(LINEAGE)
 
 
-# Stamped into every output root so a resume NEVER mixes bucket layouts:
-# docs bucketed under a different hash would be silently skipped or
-# duplicated.  Bump when bucket_col's function changes.
+# Stamped, with the bucket count, into every output root so a resume
+# NEVER mixes bucket layouts: docs bucketed under a different hash or
+# bucket count would be silently skipped or duplicated.  Bump when
+# bucket_col's function changes.
 BUCKET_HASH_VERSION = "md5-60bit-v1"
 
 
@@ -115,48 +129,61 @@ class ResumableRunner:
         self.cfg = cfg
         self.lex_bc = lex_bc
         self.data_dir = os.path.join(out_root, "data")
-        self.marker_dir = os.path.join(out_root, "_markers")
         self.lineage_dir = os.path.join(out_root, "lineage")
+        self.stamp = os.path.join(out_root, "_markers", "_HASH_VERSION")
         os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.marker_dir, exist_ok=True)
-        self._check_hash_version()
+        os.makedirs(os.path.dirname(self.stamp), exist_ok=True)
+        self._check_stamp()
 
-    def _check_hash_version(self) -> None:
+    def _check_stamp(self) -> None:
         """Refuse to resume an output root bucketed under a different
-        doc_id hash — markers from the old layout would silently skip
-        unprocessed docs and duplicate processed ones."""
-        vfile = os.path.join(self.marker_dir, "_HASH_VERSION")
-        if os.path.exists(vfile):
-            with open(vfile) as fh:
-                found = fh.read().strip()
+        doc_id hash or bucket count — its committed buckets would
+        silently skip unprocessed docs and duplicate processed ones.  A
+        stamp written before it recorded the bucket count is accepted
+        and gets this run's count, so the count guard starts from that
+        resume."""
+        n = self.cfg.num_buckets
+        if os.path.exists(self.stamp):
+            with open(self.stamp) as fh:
+                found, *count = fh.read().split()
             if found != BUCKET_HASH_VERSION:
                 raise RuntimeError(
                     f"output root {self.out_root} was bucketed with hash "
                     f"{found!r}, engine uses {BUCKET_HASH_VERSION!r}; "
                     f"finish it with the old engine version or start a "
                     f"fresh output root")
-        elif self.done_buckets():
+            if count and int(count[0]) != n:
+                raise RuntimeError(
+                    f"output root {self.out_root} was bucketed into "
+                    f"{count[0]} buckets, this run asks for {n}; finish "
+                    f"it with --num-buckets {count[0]} or start a fresh "
+                    f"output root")
+            if count:
+                return
+        elif self.committed():
             raise RuntimeError(
                 f"output root {self.out_root} has completed buckets but "
                 f"no _HASH_VERSION stamp (pre-{BUCKET_HASH_VERSION} "
                 f"layout); finish it with the engine version that wrote "
                 f"it or start a fresh output root")
-        else:
-            with open(vfile, "w") as fh:
-                fh.write(BUCKET_HASH_VERSION)
+        with open(self.stamp, "w") as fh:
+            fh.write(f"{BUCKET_HASH_VERSION}\n{n}\n")
 
     # -- bookkeeping -------------------------------------------------------
 
-    def done_buckets(self) -> set[int]:
-        return {int(f[:-5]) for f in os.listdir(self.marker_dir)
-                if f.endswith(".done")}
-
-    def _prior_attempts(self) -> dict[int, int]:
-        """partition_id -> prior lineage rows, read once per run()."""
+    def committed(self) -> dict[int, int]:
+        """Committed bucket -> its ``doc_count``, from one read of the
+        lineage rows.  A row counts only with its data directory; a
+        bucket with two rows (an old root's replay) has the same
+        ``doc_count`` in both, so the last one read wins."""
         if not os.path.isdir(self.lineage_dir):
             return {}
-        ids = pq.read_table(self.lineage_dir, columns=["partition_id"])
-        return Counter(ids.column("partition_id").to_pylist())
+        rows = pq.read_table(self.lineage_dir, schema=LINEAGE_ARROW,
+                             columns=["partition_id", "doc_count"])
+        return {b: n for b, n in zip(rows["partition_id"].to_pylist(),
+                                     rows["doc_count"].to_pylist())
+                if os.path.isdir(os.path.join(self.data_dir,
+                                              f"bucket={b}"))}
 
     def _append_lineage(self, row: dict) -> None:
         """One parquet file per row, written under a hidden name (which
@@ -178,17 +205,17 @@ class ResumableRunner:
         (SURVEY.md test 5.2-6), checked before each wave and each
         bucket's commit."""
         cfg = self.cfg
-        pending = sorted(set(range(cfg.num_buckets)) - self.done_buckets())
-        prior = self._prior_attempts()
+        done = self.committed()
+        pending = [b for b in range(cfg.num_buckets) if b not in done]
         bucketed = docs.withColumn("_bucket", bucket_col(cfg.num_buckets))
         size = math.ceil(cfg.num_buckets / self._num_waves(docs))
         # scratch of dead runs: uncommitted wave output nothing will read
         shutil.rmtree(os.path.join(self.out_root, "_tmp"), ignore_errors=True)
         tmp_root = os.path.join(self.out_root, "_tmp", cfg.run_id)
-        committed = docs_committed = 0
+        n_committed = docs_committed = 0
 
         def check(b: int) -> None:
-            if fail_after is not None and committed >= fail_after:
+            if fail_after is not None and n_committed >= fail_after:
                 raise RuntimeError(f"injected failure before bucket {b}")
 
         for k in range(0, len(pending), size):
@@ -207,13 +234,11 @@ class ResumableRunner:
                     "status": "ok",
                     # the wave's start to this bucket's commit
                     "wall_ms": int((time.time() - t0) * 1000),
-                    "attempt": prior.get(b, 0) + 1,
+                    # a bucket with a row never runs again
+                    "attempt": 1,
                     "finished_at": datetime.now(timezone.utc),
                 })
-                with open(os.path.join(self.marker_dir, f"{b}.done"),
-                          "w") as fh:
-                    fh.write(cfg.run_id)
-                committed += 1
+                n_committed += 1
                 docs_committed += counts[b]["doc_count"]
         shutil.rmtree(tmp_root, ignore_errors=True)
         return docs_committed
@@ -255,21 +280,3 @@ class ResumableRunner:
             os.rename(src, final)
         else:
             os.makedirs(final)
-
-    def read_output(self) -> DataFrame:
-        """The output table; the schema is given, not inferred, so a root
-        whose buckets are all empty (no data file) still reads as 0 rows
-        of ``doc_id, spans, bucket``."""
-        return self.spark.read.schema(OUTPUT).parquet(self.data_dir)
-
-    def read_lineage(self) -> DataFrame:
-        """Lineage rows deduped to the latest attempt per bucket: a crash
-        in the window between the data rename and the ``.done`` marker
-        write replays the bucket on restart and appends a second ``ok``
-        row, so raw reads of ``lineage_dir`` (the full audit trail) would
-        double-count rollups."""
-        df = self.spark.read.parquet(self.lineage_dir)
-        w = Window.partitionBy("partition_id").orderBy(
-            F.desc("attempt"), F.desc("finished_at"))
-        return (df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))

@@ -191,9 +191,9 @@ BPE_MERGES: tuple[tuple[str, str], ...] = (
 BPE_SEP = "\x1f"
 
 
-def bpe_seg_count_expr(var: str, dialect: str = "spark") -> str:
+def bpe_seg_count_expr(dialect: str) -> str:
     """SQL expression for the post-merge BPE token count of ONE
-    pre-tokenizer segment ``var``.
+    pre-tokenizer segment, the lambda variable ``s``.
 
     The segment's characters are each wrapped ``sep C sep`` and
     concatenated, so applying merge (a, b) is ONE left-to-right
@@ -209,17 +209,19 @@ def bpe_seg_count_expr(var: str, dialect: str = "spark") -> str:
     Emitted for either engine (``dialect`` 'spark' | 'duckdb') from
     the same merge table, so the two sides run the identical algorithm
     — all JVM-side string built-ins on the Spark side, no Python."""
-    s = BPE_SEP
+    sep = BPE_SEP
     if dialect == "spark":
-        e = f"concat('{s}', array_join(split({var}, ''), '{s}{s}'), '{s}')"
+        e = (f"concat('{sep}', array_join(split(s, ''), '{sep}{sep}'),"
+             f" '{sep}')")
     else:
-        e = (f"('{s}' || array_to_string(string_split({var}, ''),"
-             f" '{s}{s}') || '{s}')")
+        e = (f"('{sep}' || array_to_string(string_split(s, ''),"
+             f" '{sep}{sep}') || '{sep}')")
     for a, b in BPE_MERGES:
-        e = f"replace({e}, '{s}{a}{s}{s}{b}{s}', '{s}{a}{b}{s}')"
+        e = (f"replace({e}, '{sep}{a}{sep}{sep}{b}{sep}',"
+             f" '{sep}{a}{b}{sep}')")
     if dialect == "spark":
-        return f"size(split({e}, '{s}{s}'))"
-    return f"len(string_split({e}, '{s}{s}'))"
+        return f"size(split({e}, '{sep}{sep}'))"
+    return f"len(string_split({e}, '{sep}{sep}'))"
 
 
 def token_count_bpe_merged(docs: DataFrame) -> DataFrame:
@@ -231,7 +233,7 @@ def token_count_bpe_merged(docs: DataFrame) -> DataFrame:
     merge-and-count via higher-order ``transform`` + ``aggregate``, no
     shuffle, no UDF — the plan is a pure map stage at any scale."""
     pat = BPE_PATTERN.replace("\\", "\\\\").replace("'", "\\'")
-    seg = bpe_seg_count_expr("s", "spark")
+    seg = bpe_seg_count_expr("spark")
     return docs.select(
         "doc_id",
         F.expr(f"aggregate(transform(regexp_extract_all(text, '{pat}', 0),"

@@ -18,7 +18,9 @@ is dead.
 A reference is an ``ast.Name`` id, an ``ast.Attribute`` attr, or a string
 constant equal to the name (the entry module imports lazily through
 ``__import__(..., fromlist=[...])``).  Matching is by name only, which
-errs towards "reachable".
+errs towards "reachable".  An attribute of a module the file imports
+(``checks.read_lineage``) reaches top-level definitions only, never a
+method of the same name.
 
 Parameters: every engine parameter with a default must be set by some
 call outside ``tests/``, matched by the callee's name (``__init__`` by its
@@ -83,20 +85,39 @@ def _trees(root: str):
             yield rel, ast.parse(fh.read(), filename=rel)
 
 
-def _references(nodes) -> tuple[set[str], set[str]]:
+def _module_names(tree: ast.Module, modules: set[str]) -> set[str]:
+    """Names the file binds to modules: those of every ``import``, and a
+    ``from`` import's when it names one of ``modules`` (the dotted names
+    of the scanned files)."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.asname or a.name.split(".")[0] for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            out.update(a.asname or a.name for a in node.names
+                       if f"{node.module}.{a.name}" in modules)
+    return out
+
+
+def _references(nodes, module_names=frozenset()) -> tuple[set[str],
+                                                          set[str]]:
     """Every Name id, Attribute attr and str constant under ``nodes``,
-    and the Attribute attrs alone."""
+    and the Attribute attrs that can reach a method: those whose base
+    is not one of ``module_names``."""
     refs, attrs = set(), set()
     for top in nodes:
         for node in ast.walk(top):
             if isinstance(node, ast.Name):
                 refs.add(node.id)
             elif isinstance(node, ast.Attribute):
-                attrs.add(node.attr)
+                refs.add(node.attr)
+                if not (isinstance(node.value, ast.Name)
+                        and node.value.id in module_names):
+                    attrs.add(node.attr)
             elif isinstance(node, ast.Constant) and isinstance(node.value,
                                                                str):
                 refs.add(node.value)
-    return refs | attrs, attrs
+    return refs, attrs
 
 
 def _is_method(node: ast.AST) -> bool:
@@ -113,9 +134,12 @@ def unreachable_defs(root: str, package: str = PACKAGE) -> list[str]:
     methods: dict[str, list[tuple[str, ast.AST]]] = {}
     refs: set[str] = set()
     attrs: set[str] = set()
+    modules = {rel[:-3].replace(os.sep, ".").removesuffix(".__init__")
+               for rel in _python_files(root)}
+    module_names: dict[str, set[str]] = {}
 
-    def visit(nodes) -> None:
-        r, a = _references(nodes)
+    def visit(rel: str, nodes) -> None:
+        r, a = _references(nodes, module_names[rel])
         refs.update(r)
         attrs.update(a)
 
@@ -123,10 +147,11 @@ def unreachable_defs(root: str, package: str = PACKAGE) -> list[str]:
         parts = rel.split(os.sep)
         if parts[0] == "tests":
             continue
+        module_names[rel] = _module_names(tree, modules)
         if parts[0] != package or parts[1] == "jobs":
-            visit([tree])
+            visit(rel, [tree])
             continue
-        visit(n for n in tree.body if not isinstance(n, DEFS))
+        visit(rel, (n for n in tree.body if not isinstance(n, DEFS)))
         for node in tree.body:
             if isinstance(node, DEFS):
                 defs.setdefault(node.name, []).append((rel, node))
@@ -135,21 +160,19 @@ def unreachable_defs(root: str, package: str = PACKAGE) -> list[str]:
                     methods.setdefault(m.name, []).append((rel, m))
 
     while True:
-        ready = ([n for d in (defs.pop(name) for name in refs & defs.keys())
-                  for _, n in d]
-                 + [n for d in (methods.pop(name)
-                                for name in attrs & methods.keys())
-                    for _, n in d])
+        ready = ([p for name in refs & defs.keys() for p in defs.pop(name)]
+                 + [p for name in attrs & methods.keys()
+                    for p in methods.pop(name)])
         if not ready:
             break
-        for node in ready:
+        for rel, node in ready:
             if isinstance(node, ast.ClassDef):
                 # a reached class brings its decorators, bases, class-level
                 # statements and dunders; other methods need their name
-                visit(node.decorator_list + node.bases
+                visit(rel, node.decorator_list + node.bases
                       + [n for n in node.body if not _is_method(n)])
             else:
-                visit([node])
+                visit(rel, [node])
     return [f"{rel}:{line} {name}" for rel, line, name in sorted(
         (rel, node.lineno, name)
         for table in (defs, methods)
@@ -271,6 +294,29 @@ def test_reachability_scan_ignores_tests(tmp_path):
     })
     assert unreachable_defs(root, package="pkg") == [
         "pkg/mod.py:5 dead", "pkg/mod.py:6 TestOnly", "pkg/mod.py:11 spare"]
+
+
+def test_module_attribute_reaches_no_method(tmp_path):
+    """An attribute of an imported module (``import checks``, or a
+    ``from`` import of a scanned module file) reaches that module's
+    functions, not an engine method of the same name; through an object
+    the name still reaches the method."""
+    root = _write_tree(tmp_path, {
+        "run.py": ("import checks\nfrom tools import io as tio\n"
+                   "from pkg.mod import Box\n"
+                   "checks.read()\ntio.load()\nBox().go()\n"),
+        "checks.py": "def read(): pass\n",
+        "tools/__init__.py": "",
+        "tools/io.py": "def load(): pass\n",
+        "pkg/__init__.py": "",
+        "pkg/mod.py": ("class Box:\n"
+                       "    def read(self): pass\n"
+                       "    def load(self): pass\n"
+                       "    def save(self): pass\n"
+                       "    def go(self): return self.save()\n"),
+    })
+    assert unreachable_defs(root, package="pkg") == [
+        "pkg/mod.py:2 read", "pkg/mod.py:3 load"]
 
 
 def test_parameter_scan_ignores_tests(tmp_path):
