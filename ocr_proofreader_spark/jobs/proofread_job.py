@@ -10,7 +10,20 @@ path), writes proofread docs + word_freq + lexicon derived tables, with
 per-bucket lineage, and prints one JSON result line on stdout (SURVEY.md
 EP1).  Resume is automatic: a re-run on the same ``--output`` proofreads
 only the buckets that have no lineage row yet, and must use the same
-``--num-buckets``."""
+``--num-buckets``.
+
+The job runs two lanes at once: the resume run on the calling thread and
+the derived tables (``word_freq``, then ``lexicon``) on one worker
+thread, whose Spark jobs keep the caller's job group.  Both read only the
+input and the lexicon, so the derived jobs fill the cores the run's
+driver planning and small probe jobs leave idle.  The result line is
+printed once both lanes have finished; ``proofread_sec`` and
+``derived_sec`` are each timed within their own lane, so they overlap
+and their sum can exceed ``wall_sec``.  A run that fails raises its own
+error once the derived lane has finished, even if that lane failed too;
+a derived-lane error is raised only when the run succeeded.  A killed
+job may leave this run's derived tables beside a partial output: they
+come from the input alone, and the resume rewrites them."""
 
 from __future__ import annotations
 
@@ -19,11 +32,13 @@ import json
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.dirname(os.path.abspath(__file__)))))
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 from ocr_proofreader_spark.config import RunConfig
 from ocr_proofreader_spark.lexicon import broadcast_lexicons, load_lexicons
@@ -62,7 +77,29 @@ def build_session(app: str, master: str | None = None,
             # bench corpus' ~625-doc splits (3 batch crossings -> 1)
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
             .config("spark.ui.enabled", "false")
+            # PySpark wraps every Column and functions call to record its
+            # DataFrame call site for error messages: a conf read and a
+            # JVM origin set per call (two py4j round trips) and a stack
+            # walk that imports IPython.  Off, the first bucket column
+            # took 0.65 s instead of 1.12 s, each later one 5 ms instead
+            # of 12 ms, and the driver kept 23 MB less RSS; the trade-off
+            # is that an analysis error no longer names the Python line
+            # that built the failing column
+            .config("spark.python.sql.dataFrameDebugging.enabled", "false")
             .getOrCreate())
+
+
+def write_derived(spark: SparkSession, docs: DataFrame, base: frozenset,
+                  out_root: str) -> float:
+    """Write the ``word_freq`` and ``lexicon`` tables under ``out_root``;
+    returns the seconds it took."""
+    t0 = time.time()
+    wf_path = os.path.join(out_root, "word_freq")
+    word_freq(docs).write.mode("overwrite").parquet(wf_path)
+    lexicon_table(spark, base, spark.read.parquet(wf_path)
+                  ).write.mode("overwrite").parquet(
+        os.path.join(out_root, "lexicon"))
+    return time.time() - t0
 
 
 def main(argv: list[str] | None = None, spark=None) -> None:
@@ -104,16 +141,14 @@ def main(argv: list[str] | None = None, spark=None) -> None:
     docs = spark.read.parquet(args.input)
     t0 = time.time()
     runner = ResumableRunner(spark, args.output, cfg, lex_bc)
-    n_proofread = runner.run(docs)
-    phase_b = time.time() - t0
-
-    t1 = time.time()
-    wf_path = os.path.join(args.output, "word_freq")
-    word_freq(docs).write.mode("overwrite").parquet(wf_path)
-    lexicon_table(spark, by_lang["default"], spark.read.parquet(wf_path)
-                  ).write.mode("overwrite").parquet(
-        os.path.join(args.output, "lexicon"))
-    phase_a = time.time() - t1
+    # leaving the block joins the lane, so a failed run raises only after
+    # it; the lane's own error is raised by result() when the run succeeded
+    with ThreadPoolExecutor(max_workers=1) as lane:
+        derived = lane.submit(inheritable_thread_target(spark)(
+            write_derived), spark, docs, by_lang["default"], args.output)
+        n_proofread = runner.run(docs)
+        phase_b = time.time() - t0
+        phase_a = derived.result()
 
     wall = time.time() - t0
     # the whole output's docs, from the lineage rows: no Spark job

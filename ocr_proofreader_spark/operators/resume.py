@@ -67,6 +67,7 @@ each committed bucket to its doc count, and each wave's ``_bucket IN
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import shutil
@@ -172,18 +173,23 @@ class ResumableRunner:
     # -- bookkeeping -------------------------------------------------------
 
     def committed(self) -> dict[int, int]:
-        """Committed bucket -> its ``doc_count``, from one read of the
-        lineage rows.  A row counts only with its data directory; a
-        bucket with two rows (an old root's replay) has the same
-        ``doc_count`` in both, so the last one read wins."""
-        if not os.path.isdir(self.lineage_dir):
-            return {}
-        rows = pq.read_table(self.lineage_dir, schema=LINEAGE_ARROW,
-                             columns=["partition_id", "doc_count"])
-        return {b: n for b, n in zip(rows["partition_id"].to_pylist(),
-                                     rows["doc_count"].to_pylist())
-                if os.path.isdir(os.path.join(self.data_dir,
-                                              f"bucket={b}"))}
+        """Committed bucket -> its ``doc_count``, from the lineage rows.
+        A row counts only with its data directory; a bucket with two rows
+        (an old root's replay) has the same ``doc_count`` in both, so the
+        last one read wins."""
+        done: dict[int, int] = {}
+        # one file per row; the pattern skips a row still being written
+        # under its hidden name.  ParquetFile reads one file without the
+        # dataset module a directory read imports (64 -> 114 MB RSS in a
+        # bare process, 64 -> 68 MB with ParquetFile)
+        for path in sorted(glob.glob(os.path.join(self.lineage_dir,
+                                                  "part-*.parquet"))):
+            rows = pq.ParquetFile(path).read(
+                columns=["partition_id", "doc_count"])
+            done.update(zip(rows["partition_id"].to_pylist(),
+                            rows["doc_count"].to_pylist()))
+        return {b: n for b, n in done.items()
+                if os.path.isdir(os.path.join(self.data_dir, f"bucket={b}"))}
 
     def _append_lineage(self, row: dict) -> None:
         """One parquet file per row, written under a hidden name (which

@@ -5,6 +5,7 @@ tables and the JSON result line on stdout."""
 import json
 import os
 import sys
+import threading
 
 import pytest
 
@@ -46,3 +47,101 @@ def test_job_cli_multilingual(spark, tmp_path, capsys):
     proofread_job.main(argv, spark=spark)
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["docs"] == 2 and rep["docs_per_sec"] == 0
+
+
+# -- the derived lane -----------------------------------------------------------
+
+LANE_ROWS = [("b-1", "en",
+              [("text", "the quikk fox " * 6, None, 0),
+               ("image", None, "img/1.png", 1)]),
+             ("b-2", "en",
+              [("text", "the housa was fine zorbl zorbl zorbl", None, 0)])]
+
+
+def _lane_input(spark, tmp_path) -> str:
+    inp = str(tmp_path / "docs")
+    spark.createDataFrame(LANE_ROWS, SCHEMA).write.parquet(inp)
+    return inp
+
+
+def _lane_argv(inp: str, out: str) -> list[str]:
+    return ["--input", inp, "--output", out, "--num-buckets", "2",
+            "--lexicon", f"default={ROOT}/fixtures/lexicon_base.txt"]
+
+
+def _committed(out: str) -> set[int]:
+    from ocr_proofreader_spark.config import RunConfig
+    from ocr_proofreader_spark.operators.resume import ResumableRunner
+    return set(ResumableRunner(spark=None, out_root=out, lex_bc=None,
+                               cfg=RunConfig(num_buckets=2)).committed())
+
+
+def _broken_run(self, docs):
+    raise RuntimeError("run broke")
+
+
+def test_derived_tables_match_serial(spark, tmp_path, capsys):
+    """The tables the job writes beside the run are the ones the derived
+    operators compute on their own."""
+    from ocr_proofreader_spark.jobs import proofread_job
+    from ocr_proofreader_spark.lexicon import load_base_lexicon
+    from ocr_proofreader_spark.operators.word_freq import (lexicon_table,
+                                                           word_freq)
+
+    inp, out = _lane_input(spark, tmp_path), str(tmp_path / "out")
+    proofread_job.main(_lane_argv(inp, out), spark=spark)
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["docs"] == 2 and rep["derived_sec"] > 0
+
+    docs = spark.read.parquet(inp)
+    wf = word_freq(docs)
+    base = load_base_lexicon(f"{ROOT}/fixtures/lexicon_base.txt")
+    for table, want in (("word_freq", wf),
+                        ("lexicon", lexicon_table(spark, base, wf))):
+        got = spark.read.parquet(os.path.join(out, table))
+        rows = sorted(got.select(*want.columns).collect())
+        assert rows == sorted(want.collect()), table
+    frequent = spark.read.parquet(os.path.join(out, "lexicon")).filter(
+        "source = 'book_frequent'").collect()
+    assert [r["word"] for r in frequent] == ["quikk"]
+
+
+def test_derived_lane_failure(spark, tmp_path, capsys, monkeypatch):
+    """A derived-lane error surfaces from main once the run has committed
+    every bucket; when the run fails too, the run's error wins."""
+    from ocr_proofreader_spark.jobs import proofread_job
+    from ocr_proofreader_spark.operators.resume import ResumableRunner
+
+    def broken_lexicon(*args):
+        raise ValueError("derived lane broke")
+    monkeypatch.setattr(proofread_job, "lexicon_table", broken_lexicon)
+    inp = _lane_input(spark, tmp_path)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="derived lane broke"):
+        proofread_job.main(_lane_argv(inp, out), spark=spark)
+    assert _committed(out) == {0, 1}
+    assert capsys.readouterr().out == ""  # no result line
+
+    monkeypatch.setattr(ResumableRunner, "run", _broken_run)
+    with pytest.raises(RuntimeError, match="run broke"):
+        proofread_job.main(_lane_argv(inp, str(tmp_path / "out2")),
+                           spark=spark)
+
+
+def test_runner_failure_joins_lane(spark, tmp_path, capsys, monkeypatch):
+    """A run that fails at once still raises only after the derived lane
+    has written both tables, and leaves no thread of main's running."""
+    from ocr_proofreader_spark.jobs import proofread_job
+    from ocr_proofreader_spark.operators.resume import ResumableRunner
+
+    monkeypatch.setattr(ResumableRunner, "run", _broken_run)
+    inp = _lane_input(spark, tmp_path)
+    out = str(tmp_path / "out")
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="run broke"):
+        proofread_job.main(_lane_argv(inp, out), spark=spark)
+    assert set(threading.enumerate()) <= before
+    for table in ("word_freq", "lexicon"):
+        assert os.path.exists(os.path.join(out, table, "_SUCCESS"))
+    assert _committed(out) == set()
+    assert capsys.readouterr().out == ""
